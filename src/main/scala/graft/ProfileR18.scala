@@ -181,7 +181,7 @@ object ProfileR18 {
                 Seq("category", "order_date"), "order_date"),
               graft.state.ManifestStore.TableCommit("daily", day,
                 Seq("order_date"), "order_date")),
-            graft.operators.Upsert.upsert)
+            graft.state.ManifestStore.RowMerge(graft.operators.Upsert.upsert))
         }
       }
       tagged.unpersist()

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import scala.util.control.NonFatal
+
 /** Partition-manifest snapshot commits — [[SnapshotStore]]'s reader
   * isolation at the partitioned sink's O(touched-partitions) write cost
   * (the Iceberg-style combination both named as the next step).
@@ -38,6 +40,25 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * O(touched-partitions) write cost — a crash at any point leaves every
   * table of the pair on the same committed epoch.
   *
+  * Each commit folds its batch in by one [[PartitionMerge]] kind, named
+  * by the caller's contract:
+  *
+  *  - [[RowMerge]] reads the prior version's touched partitions (or, when
+  *    compacting, the whole table) and merges the batch into them
+  *    row by row — an upsert;
+  *  - [[ReplacePartitions]] is for a caller whose batch holds EVERY row
+  *    of each partition it touches (a stateful operator that emits a
+  *    key's full state, as [[graft.streaming.JointKpis]] does per day).
+  *    A non-compacting commit writes the batch as the new content of the
+  *    touched partitions and inherits the rest by manifest reference: it
+  *    neither reads the prior version nor joins, and the written
+  *    directories ARE the touched set. A compacting commit rewrites the
+  *    prior version's untouched partitions (a null-safe anti-join on the
+  *    partition value) plus the batch. Precondition: the batch is
+  *    complete for every partition it touches, and keys stay in their
+  *    partition — a partition the batch touches loses any prior row the
+  *    batch does not carry.
+  *
   * Partition directory names carry Spark's own value escaping (the
   * writer lists what `partitionBy` wrote instead of reconstructing names
   * from values — null lands in `__HIVE_DEFAULT_PARTITION__` like any
@@ -47,6 +68,22 @@ object ManifestStore {
 
   private val ManifestName = "_manifest"
   private val SchemaName = "_schema"
+
+  /** How a commit folds its batch into the partitions the batch touches. */
+  sealed trait PartitionMerge
+
+  /** Row-level merge: `f(table, batch, keys)` over the prior version's
+    * touched partitions (the whole table when compacting) — an upsert
+    * such as [[graft.operators.Upsert.upsert]].
+    */
+  final case class RowMerge(f: (DataFrame, DataFrame, Seq[String]) => DataFrame)
+    extends PartitionMerge
+
+  /** Whole-partition replace: the batch holds every row of each partition
+    * it touches, so it becomes their new content without a read of the
+    * prior version (see the object doc for the precondition).
+    */
+  case object ReplacePartitions extends PartitionMerge
 
   /** `sub` is the table's directory inside a version: "" for the
     * single-table layout (manifest at the version root, the original
@@ -68,8 +105,8 @@ object ManifestStore {
     */
   private def writeSchema(fs: FileSystem, dir: Path, schema: StructType): Unit = {
     val out = fs.create(new Path(dir, SchemaName), true)
-    out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   private def readSchemaAt(fs: FileSystem, root: Path, version: Long,
@@ -116,9 +153,9 @@ object ManifestStore {
   private def writeManifest(fs: FileSystem, dir: Path,
                             manifest: Map[String, Long]): Unit = {
     val out = fs.create(new Path(dir, ManifestName), true)
-    out.writeBytes(manifest.toSeq.sortBy(_._1)
+    try out.writeBytes(manifest.toSeq.sortBy(_._1)
       .map { case (d, v) => s"$d\t$v" }.mkString("", "\n", "\n"))
-    out.close()
+    finally out.close()
   }
 
   /** Read the table a manifest describes: group the partition dirs by
@@ -216,20 +253,19 @@ object ManifestStore {
     */
   private def stageTable(spark: SparkSession, root: Path, batchId: Long,
                          sub: String, batch: DataFrame, keys: Seq[String],
-                         partitionCol: String,
-                         merge: (DataFrame, DataFrame, Seq[String]) => DataFrame,
+                         partitionCol: String, merge: PartitionMerge,
                          prevManifest: Map[String, Long],
                          prevSchema: Option[StructType],
                          maxManifestVersions: Int): Map[String, Long] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val compact = prevManifest.values.toSet.size + 1 > maxManifestVersions
     val pc = org.apache.spark.sql.functions.col(partitionCol)
+    def table = readManifested(spark, root, prevManifest, prevSchema, sub)
     val merged =
       if (prevManifest.isEmpty) batch
-      else {
-        val table = readManifested(spark, root, prevManifest, prevSchema, sub)
-        if (compact) merge(table, batch, keys)
-        else {
+      else merge match {
+        case RowMerge(f) if compact => f(table, batch, keys)
+        case RowMerge(f) =>
           // O(touched): only the batch's partitions are read (partition
           // pruning applies inside each per-version read) and rewritten.
           // Same bounded VALUES collect and null arm as the rename-swap
@@ -241,8 +277,16 @@ object ManifestStore {
             if (nullTouched.isEmpty) pc.isin(nonNull.toSeq: _*)
             else if (nonNull.isEmpty) pc.isNull
             else pc.isin(nonNull.toSeq: _*) || pc.isNull
-          merge(table.filter(touchedPred), batch, keys)
-        }
+          f(table.filter(touchedPred), batch, keys)
+        case ReplacePartitions if compact =>
+          // keep the prior version's partitions the batch does not touch;
+          // <=> so a touched null partition is replaced, not duplicated
+          val bp = "__touched_" + partitionCol
+          val touched = batch.select(pc.as(bp)).distinct()
+          table.join(touched, pc <=> touched(bp), "left_anti")
+            .unionByName(batch)
+        // the batch IS the touched partitions' content: no read, no join
+        case ReplacePartitions => batch
       }
     val dir = subDir(root, batchId, sub)
     // Cluster rows by the partition column before the dynamic-partition
@@ -284,21 +328,20 @@ object ManifestStore {
       .filter { v =>
         try now - fs.getFileStatus(SnapshotStore.versionDir(root, v))
           .getModificationTime > retentionMs
-        catch { case _: Throwable => false }
+        catch { case NonFatal(_) => false }
       }
       .foreach(v => fs.delete(SnapshotStore.versionDir(root, v), true))
   }
 
-  /** Merge `batch` into the committed table and commit version `batchId`:
-    * write the touched (or, when compacting, all) partitions under the
-    * new version dir, publish the updated manifest, flip the pointer,
-    * reclaim unreferenced versions. Caller holds the writer lock and has
-    * gated on replayed batch ids.
+  /** Fold `batch` into the committed table by `merge` and commit version
+    * `batchId`: write the touched (or, when compacting, all) partitions
+    * under the new version dir, publish the updated manifest, flip the
+    * pointer, reclaim unreferenced versions. Caller holds the writer lock
+    * and has gated on replayed batch ids.
     */
   def commitPartitioned(spark: SparkSession, root: Path, batchId: Long,
                         batch: DataFrame, keys: Seq[String],
-                        partitionCol: String,
-                        merge: (DataFrame, DataFrame, Seq[String]) => DataFrame,
+                        partitionCol: String, merge: PartitionMerge,
                         maxManifestVersions: Int = 16,
                         retentionMs: Long = 10 * 60 * 1000L): Unit = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -401,8 +444,7 @@ object ManifestStore {
     * Same caller contract: writer lock held, replayed batch ids gated.
     */
   def commitPartitionedTables(spark: SparkSession, root: Path, batchId: Long,
-                              tables: Seq[TableCommit],
-                              merge: (DataFrame, DataFrame, Seq[String]) => DataFrame,
+                              tables: Seq[TableCommit], merge: PartitionMerge,
                               maxManifestVersions: Int = 16,
                               retentionMs: Long = 10 * 60 * 1000L): Unit = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

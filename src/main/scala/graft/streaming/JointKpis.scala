@@ -62,10 +62,12 @@ case class JointKpiRow(table: String, order_date: java.sql.Date,
   * `flatMapGroupsWithState` keyed by order_date carries the state of both
   * aggregations (the category counters are a per-day map — categories are
   * dimension-sized, so the map is bounded; the daily distinct-id sets are
-  * [[DailyKpis]]'s documented trade), emits tagged rows for whatever
-  * changed, and the sink merges and commits BOTH tables under ONE
-  * [[SnapshotStore]] pointer — a crash at any point leaves the pair on
-  * the same committed batch, and readers are snapshot-isolated on top.
+  * [[DailyKpis]]'s documented trade), emits, for every day a batch
+  * touches, that day's daily row and a row for EVERY category in the
+  * day's state — the day's complete content in both tables — and the
+  * sink commits BOTH tables under ONE [[SnapshotStore]] pointer — a crash
+  * at any point leaves the pair on the same committed batch, and readers
+  * are snapshot-isolated on top.
   *
   * Both tables are EXACT (the daily table's countDistincts come from the
   * id sets, not a sketch), so the drained stream answers the batch
@@ -94,21 +96,21 @@ object JointKpis {
   }
 
   /** Fold a micro-batch of one day's events and emit the day's revised
-    * daily row plus a category row per category TOUCHED in this batch
-    * (update semantics — untouched categories' stored rows are already
-    * current).
+    * daily row plus a category row for EVERY category in the day's state,
+    * not only those this batch touched: each emitted day is the full
+    * content of its `order_date` partition in both tables, which is what
+    * lets [[jointSinkManifested]] replace the partition instead of
+    * merging into it.
     */
   def update(date: java.sql.Date, batch: Iterator[JointKpiEvent],
              state: GroupState[JointKpiState]): Iterator[JointKpiRow] = {
     var s = state.getOption.getOrElse(
       JointKpiState(Set.empty, Set.empty, 0L, 0L, 0L, 0L, Map.empty))
-    var touched = Set.empty[String]
     var any = false
     batch.foreach { e =>
       any = true
       val catKey = e.category.getOrElse(NullCat)
       val c = s.cats.getOrElse(catKey, CatAgg(0L, 0L, 0L, 0L))
-      touched += catKey
       s = JointKpiState(
         s.orders ++ e.orderId, s.users ++ e.userId,
         s.revenueCents + e.priceCents.getOrElse(0L),
@@ -130,8 +132,7 @@ object JointKpis {
         Some(s.items),
         if (s.orders.nonEmpty) Some(s.returned.toDouble / s.orders.size) else None,
         Some(s.users.size.toLong))
-      val cats = touched.iterator.map { key =>
-        val c = s.cats(key)
+      val cats = s.cats.iterator.map { case (key, c) =>
         // the batch math verbatim: moneySum → one decimal-exact double;
         // moneyAvg = that double / non-null count (one IEEE division);
         // avg_return_rate = returned / items. All-null-price categories
@@ -206,6 +207,14 @@ object JointKpis {
     * partitions) per table instead of a whole-table rewrite, while a
     * crash at any point still leaves the PAIR on one committed epoch.
     * The right default when the committed tables outgrow aggregate grain.
+    *
+    * [[update]] emits every touched day whole (its daily row and a row
+    * per category in the day's state), so the commit is
+    * [[graft.state.ManifestStore.ReplacePartitions]]: the touched
+    * `order_date` partitions are rewritten from the batch alone, with no
+    * read of the prior version and no merge join. Replay stays
+    * exactly-once — a replayed batch re-emits the same full days from the
+    * same state version.
     */
   private[streaming] def jointSinkManifested(root: String,
                                              staleMs: Option[Long] = None,
@@ -231,7 +240,8 @@ object JointKpis {
               Seq("category", "order_date"), "order_date"),
             graft.state.ManifestStore.TableCommit("daily", day,
               Seq("order_date"), "order_date")),
-          Upsert.upsert, maxManifestVersions, retentionMs)
+          graft.state.ManifestStore.ReplacePartitions,
+          maxManifestVersions, retentionMs)
       }
     } finally batch.unpersist()
   }

@@ -402,8 +402,8 @@ object StreamingPipeline {
         // with that pinned schema — parquet fills the missing column with
         // nulls; versionAsOf reads stay pinned to their own schema file
         graft.state.ManifestStore.commitPartitioned(spark, root, batchId,
-          batch, keys, partitionCol,
-          if (mergeSchema) Upsert.upsertEvolve else Upsert.upsert,
+          batch, keys, partitionCol, graft.state.ManifestStore.RowMerge(
+            if (mergeSchema) Upsert.upsertEvolve else Upsert.upsert),
           maxManifestVersions, retentionMs)
     }
   }

@@ -49,28 +49,51 @@ class ManifestStoreSpec extends SparkSpec {
   }
 
   test("compaction bounds reader fan-in and reclaims superseded versions") {
-    val root = tmp("graft_mfs_compact")
     // maxManifestVersions = 3: batches 0..5 each touch their own partition,
-    // so without compaction the manifest would reference 6 versions.
+    // so without compaction the manifest would reference 6 versions. Then
+    // batch 6 re-touches d1 on a compacting commit, 7-8 land and re-touch
+    // a null partition, and 10 re-touches it on a compacting commit (the
+    // null-safe anti-join). Each batch carries every row of each partition
+    // it touches, so the row merge and the whole-partition replace must
+    // commit the same table.
     // retentionMs = 0 exercises eager reclamation (no concurrent readers
     // here; the reader test runs with the default age horizon)
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day", maxManifestVersions = 3, retentionMs = 0L) _
-    (0L to 5L).foreach { i =>
-      sink(Seq((i, i * 1.0, s"d$i")).toDF("k", "v", "day"), i)
+    val batches = (0L to 5L).map(i => Seq((i, i * 1.0, s"d$i"))) ++ Seq(
+      Seq((1L, 10.0, "d1"), (6L, 6.0, "d1")),
+      Seq((7L, 7.0, null: String)),
+      Seq((7L, 70.0, null: String), (8L, 8.0, null: String)),
+      Seq((2L, 20.0, "d2")),
+      Seq((7L, 71.0, null: String), (8L, 80.0, null: String)))
+    val expected = Seq((0L, 0.0, "d0"), (1L, 10.0, "d1"), (6L, 6.0, "d1"),
+      (2L, 20.0, "d2"), (3L, 3.0, "d3"), (4L, 4.0, "d4"), (5L, 5.0, "d5"),
+      (7L, 71.0, "NULL"), (8L, 80.0, "NULL"))
+    val kinds = Seq[(String, (String, org.apache.spark.sql.DataFrame, Long) => Unit)](
+      "row merge" -> { (root, b, i) =>
+        StreamingPipeline.upsertPartitionedBatchSnapshot(
+          root, Seq("k"), "day", maxManifestVersions = 3, retentionMs = 0L)(b, i) },
+      "partition replace" -> { (root, b, i) =>
+        ManifestStore.commitPartitioned(spark, new Path(root), i, b, Seq("k"),
+          "day", ManifestStore.ReplacePartitions, maxManifestVersions = 3,
+          retentionMs = 0L) })
+    kinds.foreach { case (kind, commit) =>
+      val root = tmp("graft_mfs_compact")
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def manifest = ManifestStore.readManifest(fs, new Path(root),
+        SnapshotStore.currentVersion(fs, new Path(root)).get)
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        commit(root, rows.toDF("k", "v", "day"), i.toLong)
+        assert(manifest.values.toSet.size <= 3,
+          s"$kind: batch $i fans into ${manifest.values.toSet.size} versions: $manifest")
+      }
+      assert(table(root) == expected.toSet, kind)
+      assert(StreamingPipeline.readPartitionedSnapshot(spark, root).count() ==
+        expected.size, s"$kind: duplicated rows")
+      // reclamation: only versions referenced by the live or previous
+      // manifest survive on disk
+      val onDisk = fs.listStatus(new Path(root)).map(_.getPath.getName)
+        .filter(_.startsWith("v_")).toSet
+      assert(onDisk.size <= manifest.values.toSet.size + 3, s"$kind: reclaim left $onDisk")
     }
-    assert(table(root) ==
-      (0L to 5L).map(i => (i, i * 1.0, s"d$i")).toSet)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = SnapshotStore.currentVersion(fs, new Path(root)).get
-    val m = ManifestStore.readManifest(fs, new Path(root), v)
-    assert(m.values.toSet.size <= 3,
-      s"manifest fans into ${m.values.toSet.size} versions: $m")
-    // reclamation: only versions referenced by the live or previous
-    // manifest survive on disk
-    val onDisk = fs.listStatus(new Path(root)).map(_.getPath.getName)
-      .filter(_.startsWith("v_")).toSet
-    assert(onDisk.size <= m.values.toSet.size + 3, s"reclaim left $onDisk")
   }
 
   test("partition-column type stays pinned across version groups") {
@@ -137,7 +160,7 @@ class ManifestStoreSpec extends SparkSpec {
     // FileNotFoundException to readers (code-review r7)
     ManifestStore.commitPartitionedTables(spark, root, 0L,
       Seq(TableCommit("A", dfA(1.0), Seq("k"), "day"),
-        TableCommit("B", emptyB, Seq("k"), "day")), Upsert.upsert)
+        TableCommit("B", emptyB, Seq("k"), "day")), ManifestStore.RowMerge(Upsert.upsert))
     assert(ManifestStore.readTable(spark, root.toString, "A").count() == 1L)
     val e = intercept[IllegalStateException](
       ManifestStore.readTable(spark, root.toString, "B"))
@@ -146,7 +169,7 @@ class ManifestStoreSpec extends SparkSpec {
     // manifest and wedged the sink forever) and B becomes readable
     ManifestStore.commitPartitionedTables(spark, root, 1L,
       Seq(TableCommit("A", dfA(2.0), Seq("k"), "day"),
-        TableCommit("B", dfA(9.0), Seq("k"), "day")), Upsert.upsert)
+        TableCommit("B", dfA(9.0), Seq("k"), "day")), ManifestStore.RowMerge(Upsert.upsert))
     assert(ManifestStore.readTable(spark, root.toString, "B")
       .select("v").as[Double].collect().toSeq == Seq(9.0))
     assert(ManifestStore.readTable(spark, root.toString, "A")

@@ -169,6 +169,89 @@ class JointKpisSpec extends SparkSpec {
     joined.unpersist()
   }
 
+  test("manifested writer replaces whole days: same-day batches keep every category") {
+    implicit val ctx = spark.sqlContext
+    val (d1, d2) = (java.sql.Date.valueOf("2026-03-01"), java.sql.Date.valueOf("2026-03-02"))
+    val cols = Seq("order_id", "user_id", "product_id", "category", "sale_price",
+      "is_returned", "order_date")
+    // two micro-batches on d1 with disjoint categories, then one on d2
+    val batches = Seq(
+      Seq((1L, 10L, 100L, "a", 5.25, false, d1), (1L, 10L, 101L, "a", 2.5, true, d1)),
+      Seq((2L, 11L, 102L, "b", 7.0, false, d1)),
+      Seq((3L, 10L, 100L, "a", 1.75, false, d2)))
+    val (root, cp) = (tmp("graft_jointm_days"), tmp("graft_jointm_days_cp"))
+    val input = MemoryStream[(Long, Long, Long, String, Double, Boolean, java.sql.Date)]
+    val q = JointKpis.writerManifested(input.toDF().toDF(cols: _*), root, cp).start()
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    val all = batches.flatten.toDF(cols: _*)
+    val cat = JointKpis.categoryTableManifested(spark, root)
+    assert(catRows(cat) == catRows(Kpis.categoryKpis(all)))
+    assert(dayRows(JointKpis.dailyTableManifested(spark, root))
+      == dayRows(Kpis.dailyKpis(all)))
+    assert(cat.filter(col("order_date") === lit(d1)).select("category")
+      .as[String].collect().sorted.toSeq == Seq("a", "b"),
+      "d1 lost the category its last batch did not touch")
+  }
+
+  test("a one-category batch over a day with prior state emits every category row") {
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    import org.apache.spark.api.java.Optional
+    val day = java.sql.Date.valueOf("2026-03-01")
+    val prior = JointKpiState(Set("o1", "o2"), Set(1L, 2L), 1500L, 2L, 2L, 0L,
+      Map("a" -> CatAgg(1000L, 1L, 1L, 0L), "b" -> CatAgg(500L, 1L, 1L, 0L)))
+    val st = TestGroupState.create[JointKpiState](Optional.of(prior),
+      GroupStateTimeout.NoTimeout, 0L, Optional.empty[Long], hasTimedOut = false)
+    val out = JointKpis.update(day, Iterator(JointKpiEvent(day, Some("o3"),
+      Some(3L), Some("a"), Some(250L), itemPresent = true, isReturned = false)), st).toSeq
+    assert(out.count(_.table == "daily") == 1)
+    val cats = out.filter(_.table == "category").map(r => r.category.get -> r).toMap
+    assert(cats.keySet == Set("a", "b"), s"emitted ${cats.keySet}")
+    assert(cats("a").daily_revenue.contains(12.5), "a folds the new event")
+    assert(cats("b").daily_revenue.contains(5.0), "b re-emits its stored figures")
+  }
+
+  test("a non-compacting manifested joint commit plans no prior-version scan and no join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InsertIntoHadoopFsRelationCommand, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = tmp("graft_jointm_work")
+    // a local relation: the enrichment's own joins stay out of the plans
+    val batch = JointKpis.stream(enrichedTestdata).collect().toSeq.toDS().toDF()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.analyzed)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.analyzed)
+    }
+    def planned = plans.toArray(Array.empty[LogicalPlan]).toSeq
+    try {
+      JointKpis.jointSinkManifested(root)(batch, 0L)
+      spark.listenerManager.register(listener)
+      JointKpis.jointSinkManifested(root)(batch, 1L)
+      // listener delivery is asynchronous: wait for both table writes of
+      // batch 1 (every earlier query of the commit is delivered before them)
+      val v1 = SnapshotStore.versionDir(new Path(root), 1L).toString
+      def written = planned.flatMap(_.collect {
+        case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString
+      }).filter(_.contains(v1)).toSet
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (written.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(written.size == 2, s"saw writes ${written.mkString(", ")}")
+      val reads = planned.flatMap(_.collect { case l: LogicalRelation => l.relation })
+        .flatMap {
+          case r: HadoopFsRelation => r.location.rootPaths.map(_.toString)
+          case _ => Nil
+        }.filter(_.contains(root))
+      assert(reads.isEmpty, s"the commit scanned committed files: ${reads.mkString(", ")}")
+      val joins = planned.flatMap(_.collect { case j: Join => j })
+      assert(joins.isEmpty, s"the commit planned ${joins.size} join(s)")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("manifested pair: a crash before the pointer leaves BOTH tables on the old epoch") {
     val root = tmp("graft_jointm_crash")
     val batch = JointKpis.stream(enrichedTestdata).toDF().persist()
