@@ -486,9 +486,10 @@ private[graft] object EntryFixtures {
     * job re-executed the whole plant subtree — for the .wet.gz/.wet.zst
     * fixtures that meant re-compressing the entire corpus once per
     * staged file, 9× the plant cost per query (guide §1/§2: the staging
-    * loop was ~2× the one-pass plant cost at sf0.1, measured in
-    * ProfileR17). One pass computes all slices; the 9 writes then read
-    * the (few-row) cached frame.
+    * loop was ~2× the one-pass plant cost at sf0.1, measured by timing
+    * the staging loop against one plant pass in round 17,
+    * OPTIMIZATION_r17.md). One pass computes all slices; the 9 writes
+    * then read the (few-row) cached frame.
     */
   private[graft] def stageByFileId(blobs: DataFrame, stage: String,
                                    ids: Seq[Long]): Unit = {
@@ -512,51 +513,39 @@ private[graft] object EntryFixtures {
     } finally b.unpersist()
   }
 
-  /** One drained JointKpis run per (session, sfDir) — st_joint_category
-    * and st_joint_daily read their table from the SAME committed root
-    * instead of each paying a full stage + AvailableNow drain of the
-    * identical one-query-two-tables pipeline (code-review r6). The memo
-    * is the keyed-cache pattern of Similarity's centroid cache; entries
-    * drop with Dedup.clearCaches.
+  /** One drained JointKpis run per (session, sfDir) — st_joint_* and
+    * st_jointm_* read their table from the SAME committed root instead
+    * of each paying a full stage + AvailableNow drain of the identical
+    * one-query-two-tables pipeline (code-review r6). The memo is the
+    * keyed-cache pattern of Similarity's centroid cache; entries drop
+    * with Caches.clear.
     */
   private[graft] val jointKpiRoots =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   graft.util.Caches.onClear(() => jointKpiRoots.clear())
 
-  /** Stage the enriched projection to parquet, drain `writerFn` over it
-    * with AvailableNow, return the committed root — ONE staging recipe
-    * for both joint-commit legs, so they cannot drift (code-review r7).
+  /** Stage the enriched projection to parquet, drain
+    * [[graft.streaming.JointKpis.writerManifested]] over it with
+    * AvailableNow, return the committed root.
     */
-  private[graft] def drainJointRoot(s: SparkSession, dir: String, prefix: String,
-                             writerFn: (DataFrame, String, String) =>
-                               org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
-      : String = {
+  private[graft] def drainJointRoot(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.streaming.Trigger
-    val stage = tmpDir(s"graft_${prefix}_in")
+    val stage = tmpDir("graft_stjm_in")
     enriched(s, dir).select(col("order_id"), col("user_id"),
         col("product_id"), col("category"), col("sale_price"),
         col("is_returned"), col("order_date"))
       .write.mode("overwrite").parquet(stage)
-    val (root, cp) = (tmpDir(s"graft_${prefix}_root"), tmpDir(s"graft_${prefix}_cp"))
+    val (root, cp) = (tmpDir("graft_stjm_root"), tmpDir("graft_stjm_cp"))
     val stream = s.readStream.schema(s.read.parquet(stage).schema).parquet(stage)
-    val q = writerFn(stream, root, cp).trigger(Trigger.AvailableNow()).start()
+    val q = graft.streaming.JointKpis.writerManifested(stream, root, cp)
+      .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     root
   }
 
   private[graft] def jointKpiRoot(s: SparkSession, dir: String): String =
     jointKpiRoots.computeIfAbsent(s.hashCode() + "|" + dir,
-      _ => drainJointRoot(s, dir, "stj",
-        graft.streaming.JointKpis.writer(_, _, _)))
-
-  /** The manifested twin of [[jointKpiRoot]] (VERDICT r06 missing #3):
-    * the same pipeline drained through the multi-table partition-manifest
-    * commit — O(touched order_date partitions) per table, one pointer.
-    */
-  private[graft] def jointKpiRootManifested(s: SparkSession, dir: String): String =
-    jointKpiRoots.computeIfAbsent("m|" + s.hashCode() + "|" + dir,
-      _ => drainJointRoot(s, dir, "stjm",
-        graft.streaming.JointKpis.writerManifested(_, _, _)))
+      _ => drainJointRoot(s, dir))
 
   /** Shared TF/DF frames behind t_term_stats and t_keywords (ONE
     * definition, mirrored by [[sqlTermStatsCtes]] on the oracle side, so

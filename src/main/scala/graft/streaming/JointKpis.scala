@@ -6,13 +6,24 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.Upsert
 import graft.state.SnapshotStore
 
-/** One enriched order-item row for the joint KPI state machine —
-  * [[KpiItemEvent]]'s fields plus the category the row aggregates under
-  * (the reference's two KPI tables read the same joined frame,
-  * transform.py:348-365).
+/** One enriched order-item row distilled for the joint KPI state machine
+  * (the columns the reference's two KPI tables aggregate from the same
+  * joined frame, transform.py:348-365). Money rides as exact integer
+  * cents — a Long survives the state-store roundtrip bit-exactly and sums
+  * associatively, where accumulating raw doubles in state would drift
+  * from the batch decimal sum.
+  *
+  * Null columns carry the BATCH aggregates' null semantics instead of
+  * crashing the non-nullable deserializer (code-review r5): a null
+  * order/user id is an Option (countDistinct ignores nulls), a null
+  * sale_price is an Option (sum ignores nulls — and a day or category
+  * whose EVERY price is null must emit a null revenue, exactly like sum
+  * over all-null input, not 0.0), a null product_id clears `itemPresent`
+  * (count(col) ignores nulls), a null is_returned counts as not-returned
+  * (countIf's otherwise-0 arm), and a null category is its own group,
+  * like the batch groupBy's null key.
   */
 case class JointKpiEvent(orderDate: java.sql.Date, orderId: Option[String],
                          userId: Option[Long], category: Option[String],
@@ -26,7 +37,8 @@ case class JointKpiEvent(orderDate: java.sql.Date, orderId: Option[String],
 case class CatAgg(cents: Long, priced: Long, rows: Long, returned: Long)
 
 /** Per-day cumulative state for BOTH tables: the daily table's exact
-  * distinct-id sets and counters ([[DailyKpiState]]'s trade), plus the
+  * distinct-id sets and counters (`priced` counts non-null prices so an
+  * all-null day can emit a null revenue like the batch sum), plus the
   * category table's additive counters keyed by category. Null categories
   * ride under a sentinel key (a Map cannot hold null) and emerge as a
   * null category row, matching the batch groupBy's null group.
@@ -40,7 +52,11 @@ case class JointKpiState(orders: Set[String], users: Set[Long],
   * "daily"); the sink splits by tag. Unused columns of the other table
   * are None. All money math mirrors the batch operators bit-for-bit
   * (integer cents + fixed IEEE division chains — see
-  * [[DailyKpis]]/[[graft.transform.Kpis]]).
+  * [[graft.transform.Kpis]]). A daily `total_revenue` is None only when
+  * the day saw no non-null price (batch `sum` null semantics);
+  * `return_rate` is None when the day saw no non-null order id (batch
+  * Divide by a zero distinct count yields NULL, never NaN/Infinity —
+  * ADVICE r5).
   */
 case class JointKpiRow(table: String, order_date: java.sql.Date,
                        category: Option[String],
@@ -56,30 +72,39 @@ case class JointKpiRow(table: String, order_date: java.sql.Date,
 /** Joint commit of BOTH reference KPI tables (VERDICT r05 #4): the
   * reference's transform task writes `order_kpis_category` and
   * `order_kpis_daily` in one process with one retry envelope
-  * (transform.py:329-404, stepfunction.json:92-154); the suite's two
-  * independent streaming writers could crash BETWEEN their commits and
-  * leave the tables at different batch versions. Here one
+  * (transform.py:329-404, stepfunction.json:92-154); two independent
+  * streaming writers could crash BETWEEN their commits and leave the
+  * tables at different batch versions. Here one
   * `flatMapGroupsWithState` keyed by order_date carries the state of both
   * aggregations (the category counters are a per-day map — categories are
-  * dimension-sized, so the map is bounded; the daily distinct-id sets are
-  * [[DailyKpis]]'s documented trade), emits, for every day a batch
-  * touches, that day's daily row and a row for EVERY category in the
-  * day's state — the day's complete content in both tables — and the
-  * sink commits BOTH tables under ONE [[SnapshotStore]] pointer — a crash
-  * at any point leaves the pair on the same committed batch, and readers
-  * are snapshot-isolated on top.
+  * dimension-sized, so the map is bounded; the daily distinct-id sets
+  * grow with the day's true cardinality, the trade for exact counts over
+  * a sketch's fixed KBs), emits, for every day a batch touches, that
+  * day's daily row and a row for EVERY category in the day's state — the
+  * day's complete content in both tables — and [[writerManifested]]'s
+  * sink commits BOTH tables through ONE multi-table partition manifest
+  * under ONE pointer: a crash at any point leaves the pair on the same
+  * committed batch, and readers are snapshot-isolated on top.
   *
   * Both tables are EXACT (the daily table's countDistincts come from the
   * id sets, not a sketch), so the drained stream answers the batch
-  * `categoryKpis`/`dailyKpis` oracles verbatim — st_joint_category and
-  * st_joint_daily share a1/a2's DuckDB SQL.
+  * `categoryKpis`/`dailyKpis` oracles verbatim — st_joint_*,
+  * st_jointm_* and st_daily_kpis_exact share a1/a2's DuckDB SQL.
+  *
+  * No timeout, matching the reference's never-finalized KPI tables: a
+  * late event for any historic day still revises that day. A deployment
+  * that wants bounded total state snapshots old days out and restarts
+  * from the remaining horizon (expiring state here would silently RESET a
+  * day on late re-delivery — wrong, so it is not offered).
   */
 object JointKpis {
 
   private val NullCat = "\u0000__null_category__"
 
-  /** Project the enriched frame into the typed event (the [[DailyKpis]]
-    * projection plus category).
+  /** Project the enriched frame (graft.transform.Kpis.enrich columns)
+    * into the typed event the state machine consumes. sale_price goes
+    * through the same DECIMAL(18,2) exactness gate as Kpis.moneySum, then
+    * to cents.
     */
   def events(enriched: DataFrame): Dataset[JointKpiEvent] = {
     import enriched.sparkSession.implicits._
@@ -159,54 +184,16 @@ object JointKpis {
         GroupStateTimeout.NoTimeout)(update)
   }
 
-  /** Per-batch joint commit: split the tagged rows, merge each table with
-    * its committed snapshot, write both under `v_<batchId>` and flip ONE
-    * pointer. A replayed batch id is skipped against the committed
-    * version — the whole pair is exactly-once as a unit.
-    */
-  private[streaming] def jointSink(root: String, staleMs: Option[Long] = None,
-                                   retainVersions: Int = 2)
-                                  (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // persist once (ADVICE r06): the sink runs two writes (plus upsert
-    // reads) over this frame, and an un-persisted foreachBatch plan would
-    // re-execute the flatMapGroupsWithState micro-batch per action —
-    // reloading and re-committing the same state-store version each time
-    // (fragile under RocksDB re-execution; verifyAndAppend's recipe)
-    batch.persist()
-    try StreamingPipeline.withWriterLock(fs, rootPath,
-      StreamingPipeline.resolveStaleMs(spark, staleMs)) {
-      val cur = SnapshotStore.currentVersion(fs, rootPath)
-      if (!cur.exists(_ >= batchId)) {
-        val cat = batch.filter(col("table") === "category")
-          .select("category", "order_date", "daily_revenue", "avg_order_value",
-            "avg_return_rate")
-        val day = batch.filter(col("table") === "daily")
-          .select("order_date", "total_orders", "total_revenue",
-            "total_items_sold", "return_rate", "unique_customers")
-        def merged(name: String, upd: DataFrame, keys: Seq[String]) = cur match {
-          case Some(v) => Upsert.upsert(
-            spark.read.parquet(new Path(
-              SnapshotStore.versionDir(rootPath, v), name).toString), upd, keys)
-          case None => upd
-        }
-        SnapshotStore.commit(fs, rootPath, batchId, Map(
-          "category" -> merged("category", cat, Seq("category", "order_date")),
-          "daily" -> merged("daily", day, Seq("order_date"))),
-          retainVersions)
-      }
-    } finally batch.unpersist()
-  }
-
-  /** [[jointSink]] at fact-grain cost (VERDICT r06 missing #3): both
-    * tables commit through ONE multi-table partition manifest
-    * ([[graft.state.ManifestStore.commitPartitionedTables]]) under the
-    * same single pointer — per-batch write cost is O(touched order_date
-    * partitions) per table instead of a whole-table rewrite, while a
-    * crash at any point still leaves the PAIR on one committed epoch.
-    * The right default when the committed tables outgrow aggregate grain.
+  /** Per-batch joint commit (VERDICT r06 missing #3): split the tagged
+    * rows and commit both tables through ONE multi-table partition
+    * manifest ([[graft.state.ManifestStore.commitPartitionedTables]])
+    * under a single pointer — per-batch write cost is O(touched
+    * order_date partitions) per table, and a crash at any point leaves
+    * the PAIR on one committed epoch. A replayed batch id is skipped
+    * against the committed version, so the pair is exactly-once as a
+    * unit. Compaction depth and version retention are
+    * [[graft.state.ManifestStore]]'s defaults; lock staleness comes from
+    * `spark.graft.writerLock.staleMs`.
     *
     * [[update]] emits every touched day whole (its daily row and a row
     * per category in the day's state), so the commit is
@@ -216,17 +203,18 @@ object JointKpis {
     * exactly-once — a replayed batch re-emits the same full days from the
     * same state version.
     */
-  private[streaming] def jointSinkManifested(root: String,
-                                             staleMs: Option[Long] = None,
-                                             maxManifestVersions: Int = 16,
-                                             retentionMs: Long = 10 * 60 * 1000L)
+  private[streaming] def jointSinkManifested(root: String)
                                             (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // persist once (ADVICE r06): the sink runs two writes over this frame,
+    // and an un-persisted foreachBatch plan would re-execute the
+    // flatMapGroupsWithState micro-batch per action — reloading and
+    // re-committing the same state-store version each time
     batch.persist()
     try StreamingPipeline.withWriterLock(fs, rootPath,
-      StreamingPipeline.resolveStaleMs(spark, staleMs)) {
+      StreamingPipeline.resolveStaleMs(spark, None)) {
       if (!SnapshotStore.currentVersion(fs, rootPath).exists(_ >= batchId)) {
         val cat = batch.filter(col("table") === "category")
           .select("category", "order_date", "daily_revenue", "avg_order_value",
@@ -240,30 +228,28 @@ object JointKpis {
               Seq("category", "order_date"), "order_date"),
             graft.state.ManifestStore.TableCommit("daily", day,
               Seq("order_date"), "order_date")),
-          graft.state.ManifestStore.ReplacePartitions,
-          maxManifestVersions, retentionMs)
+          graft.state.ManifestStore.ReplacePartitions)
       }
     } finally batch.unpersist()
   }
 
-  /** The manifested joint writer: one streaming query, both tables, one
-    * pointer per micro-batch, O(touched-partitions) writes.
-    * `retentionMs` is the time-travel/read-stability age horizon;
-    * `maxManifestVersions` bounds reader fan-in via compaction.
+  /** The streaming KPI writer: one streaming query, both tables, one
+    * pointer per micro-batch, O(touched-partitions) writes. Caller picks
+    * the trigger and starts it.
     */
   def writerManifested(enrichedStream: DataFrame, root: String,
-                       checkpointDir: String,
-                       maxManifestVersions: Int = 16,
-                       retentionMs: Long = 10 * 60 * 1000L): DataStreamWriter[Row] =
+                       checkpointDir: String): DataStreamWriter[Row] =
     stream(enrichedStream).toDF()
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(jointSinkManifested(root,
-        maxManifestVersions = maxManifestVersions,
-        retentionMs = retentionMs) _)
+      .foreachBatch(jointSinkManifested(root) _)
 
-  /** Snapshot-isolated reads of the manifested pair. */
+  /** Snapshot-isolated reads of the committed pair — current epoch by
+    * default, or any still-resolvable batch id via `versionAsOf`. Both
+    * tables of one epoch resolve through ONE manifest, so a pinned reader
+    * sees the pair as of that batch, never a mixed pair.
+    */
   def categoryTableManifested(spark: org.apache.spark.sql.SparkSession,
                               root: String,
                               versionAsOf: Option[Long] = None): DataFrame =
@@ -273,30 +259,4 @@ object JointKpis {
                            root: String,
                            versionAsOf: Option[Long] = None): DataFrame =
     graft.state.ManifestStore.readTable(spark, root, "daily", versionAsOf)
-
-  /** The joint writer: one streaming query, both tables, one commit point
-    * per micro-batch. Caller picks the trigger and starts it.
-    * `retainVersions` keeps that many committed epochs for
-    * [[categoryTable]]/[[dailyTable]]'s `versionAsOf` time travel.
-    */
-  def writer(enrichedStream: DataFrame, root: String,
-             checkpointDir: String, retainVersions: Int = 2): DataStreamWriter[Row] =
-    stream(enrichedStream).toDF()
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(jointSink(root, retainVersions = retainVersions) _)
-
-  /** Snapshot-isolated reads of the committed pair — current epoch by
-    * default, or any retained batch id via `versionAsOf`. Both tables of
-    * one epoch always come from ONE version dir, so a pinned reader sees
-    * the pair as of that batch, never a mixed pair.
-    */
-  def categoryTable(spark: org.apache.spark.sql.SparkSession, root: String,
-                    versionAsOf: Option[Long] = None): DataFrame =
-    SnapshotStore.read(spark, root, "category", versionAsOf)
-
-  def dailyTable(spark: org.apache.spark.sql.SparkSession, root: String,
-                 versionAsOf: Option[Long] = None): DataFrame =
-    SnapshotStore.read(spark, root, "daily", versionAsOf)
 }

@@ -54,14 +54,6 @@ object StreamingPipeline {
     stream.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** ST5/ST7 per-batch sink: keyed upsert of the micro-batch into a parquet
-    * table at `targetDir/data`, with a staging-write + rename swap so readers
-    * never see a half-written table. Idempotent: re-running a batch after a
-    * failure rewrites the same cumulative values for the same keys — the
-    * exactly-once recipe (replayable source + idempotent keyed sink, ST7;
-    * the reference relies on DynamoDB put idempotency the same way,
-    * transform.py:379-387).
-    */
   /** Crash recovery for the rename swaps below: if a previous run died
     * between "rename current away" and "rename staged in", the table only
     * survives in a `_bak_*` directory — restore the newest one before
@@ -171,13 +163,22 @@ object StreamingPipeline {
     val token = tokenNow()
     def owned(content: Option[String]): Boolean =
       content.exists(_.contains(s"nonce=$nonce"))
+    // create(overwrite=false) failing means the lock exists: contention.
+    // Once THIS call created the file, a write or close failure is an IO
+    // fault instead: the file is deleted (an empty or partial lock would
+    // fence every writer for staleMs) and the fault propagates.
     def tryAcquire(): Boolean =
-      try {
-        val out = fs.create(lock, false)
-        out.writeBytes(token + "\n")
-        out.close()
-        true
-      } catch { case _: java.io.IOException => false }
+      (try Some(fs.create(lock, false))
+       catch { case _: java.io.IOException => None }) match {
+        case None => false
+        case Some(out) =>
+          try { try out.writeBytes(token + "\n") finally out.close() }
+          catch { case e: java.io.IOException =>
+            try fs.delete(lock, false) catch { case _: java.io.IOException => () }
+            throw e
+          }
+          true
+      }
     def readLock(p: Path): Option[String] =
       try {
         val in = fs.open(p)
@@ -264,8 +265,7 @@ object StreamingPipeline {
           Thread.sleep(hbPeriod)
           if (!released && owned(readLock(lock))) {
             val out = fs.create(lock, true)
-            out.writeBytes(tokenNow() + "\n")
-            out.close()
+            try out.writeBytes(tokenNow() + "\n") finally out.close()
             if (released && owned(readLock(lock))) fs.delete(lock, false)
           }
         }
@@ -305,6 +305,14 @@ object StreamingPipeline {
         .flatMap(v => scala.util.Try(v.toLong).toOption))
       .getOrElse(LockStaleMs)
 
+  /** ST5/ST7 per-batch sink: keyed upsert of the micro-batch into a parquet
+    * table at `targetDir/data`, with a staging-write + rename swap so readers
+    * never see a half-written table. Idempotent: re-running a batch after a
+    * failure rewrites the same cumulative values for the same keys — the
+    * exactly-once recipe (replayable source + idempotent keyed sink, ST7;
+    * the reference relies on DynamoDB put idempotency the same way,
+    * transform.py:379-387).
+    */
   def upsertBatch(targetDir: String, keys: Seq[String],
                   staleMs: Option[Long] = None)
                  (batch: DataFrame, batchId: Long): Unit = {
@@ -484,76 +492,19 @@ object StreamingPipeline {
     }
   }
 
-  /** Streaming category KPIs (ST5): the same aggregation as the batch
-    * flagship (Kpis.categoryKpis — sum/avg/ratio are streaming-safe; the
-    * exact countDistinct of dailyKpis is not, and stays batch-only), run as
-    * a cumulative streaming aggregation. Update output mode emits only the
-    * keys whose aggregates changed in the micro-batch; foreachBatch upserts
-    * them into the target table.
+  /** Streaming daily KPIs in bounded state (ST5, the reference's second
+    * table, transform.py:359-365): a cumulative update-mode aggregation of
+    * [[graft.transform.Kpis.dailyKpisStreaming]] — mergeable HLL++
+    * sketches stand in for the streaming-unsafe exact countDistinct, so
+    * each day's state is a fixed-size sketch however many orders it sees,
+    * and the distinct counts are approximate. Each micro-batch merges and
+    * swaps only the `order_date` partitions it touched
+    * ([[upsertPartitionedBatch]]; the partition is the key itself, so the
+    * partition-stability precondition holds by construction).
     *
-    * Caller picks the trigger (Trigger.AvailableNow for drain-and-stop,
-    * ProcessingTime for continuous micro-batches — ST4) and calls .start().
-    */
-  def categoryKpiWriter(enrichedStream: DataFrame, targetDir: String,
-                        checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.categoryKpis(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatch(targetDir, Seq("category", "order_date")) _)
-
-  /** The 100 TB form of [[categoryKpiWriter]]: KPI table partitioned by
-    * order_date, so each micro-batch merges and swaps ONLY the dates it
-    * touched (a day's late events rewrite one partition, not the whole
-    * history). order_date is derived from the key, so the
-    * partition-stability precondition of [[upsertPartitionedBatch]] holds
-    * by construction.
-    */
-  def categoryKpiWriterPartitioned(enrichedStream: DataFrame, targetDir: String,
-                                   checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.categoryKpis(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertPartitionedBatch(targetDir,
-        Seq("category", "order_date"), "order_date") _)
-
-  /** [[categoryKpiWriter]] with reader snapshot isolation — the same
-    * cumulative aggregation committed through [[upsertBatchSnapshot]]'s
-    * versioned dirs + atomic pointer (read back via [[readSnapshot]]).
-    * Pick this over the rename-swap writer when the table has live
-    * readers during the stream.
-    */
-  def categoryKpiWriterSnapshot(enrichedStream: DataFrame, targetDir: String,
-                                checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.categoryKpis(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatchSnapshot(targetDir, Seq("category", "order_date")) _)
-
-  /** Streaming daily KPIs (VERDICT r04 #1 — the reference upserts BOTH KPI
-    * tables per trigger batch, transform.py:348-352 AND 359-365; the
-    * category writer alone left `order_kpis_daily` batch-only). Cumulative
-    * update-mode aggregation of [[graft.transform.Kpis.dailyKpisStreaming]]
-    * — the A2 family with mergeable HLL++ sketches standing in for the
-    * streaming-unsafe exact countDistinct — upserted per micro-batch
-    * through the same idempotent swap sink as the category table.
-    */
-  def dailyKpiWriter(enrichedStream: DataFrame, targetDir: String,
-                     checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.dailyKpisStreaming(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatch(targetDir, Seq("order_date")) _)
-
-  /** The 100 TB form of [[dailyKpiWriter]]: table partitioned by
-    * order_date (the key itself), so a micro-batch merges and swaps only
-    * the days it touched — per-batch sink I/O is O(days in the batch),
-    * not O(days of history). One row per partition is the degenerate-small
-    * end of partitioning; it is still the right trade here because the
-    * whole-table rewrite is what grows with history.
+    * The EXACT streaming writer of both reference tables is
+    * [[JointKpis.writerManifested]], which carries per-day distinct-id
+    * sets in keyed state instead. Caller picks the trigger and starts it.
     */
   def dailyKpiWriterPartitioned(enrichedStream: DataFrame, targetDir: String,
                                 checkpointDir: String): DataStreamWriter[Row] =
@@ -563,55 +514,4 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(upsertPartitionedBatch(targetDir,
         Seq("order_date"), "order_date") _)
-
-  /** [[dailyKpiWriterPartitioned]] with reader snapshot isolation — the
-    * partition-manifest sink ([[upsertPartitionedBatchSnapshot]]): still
-    * O(touched days) per micro-batch, now with MVCC readers via
-    * [[readPartitionedSnapshot]].
-    */
-  def dailyKpiWriterPartitionedSnapshot(enrichedStream: DataFrame,
-                                        targetDir: String,
-                                        checkpointDir: String): DataStreamWriter[Row] =
-    Kpis.dailyKpisStreaming(enrichedStream)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertPartitionedBatchSnapshot(targetDir,
-        Seq("order_date"), "order_date") _)
-
-  /** EXACT streaming daily KPIs ([[graft.streaming.DailyKpis]]): the
-    * reference's exact integers (transform.py:395-399) kept under
-    * streaming by carrying per-day distinct-id sets in keyed state —
-    * choose this over [[dailyKpiWriter]] when per-day cardinality is
-    * state-store-affordable and the KV consumer needs exact counts.
-    */
-  def dailyKpiWriterExact(enrichedStream: DataFrame, targetDir: String,
-                          checkpointDir: String): DataStreamWriter[Row] =
-    DailyKpis.stream(enrichedStream).toDF()
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertBatch(targetDir, Seq("order_date")) _)
-
-  /** The full streaming KPI leg in one call — BOTH reference tables per
-    * trigger, the streaming mirror of [[graft.pipeline.Pipeline.sink]]
-    * (transform.py:348-352 AND 359-365 → two KV tables,
-    * transform.py:376-404). Starts two streaming queries over the same
-    * enriched stream (each with its own checkpoint under
-    * `checkpointRoot`); `exactDaily` picks [[dailyKpiWriterExact]]'s
-    * id-set state over [[dailyKpiWriter]]'s bounded HLL++ sketches.
-    * Caller configures the trigger on the returned writers before
-    * `.start()`, matching the single-writer pattern.
-    */
-  def kpiWriters(enrichedStream: DataFrame, categoryDir: String,
-                 dailyDir: String, checkpointRoot: String,
-                 exactDaily: Boolean = false): (DataStreamWriter[Row], DataStreamWriter[Row]) = {
-    val cat = categoryKpiWriter(enrichedStream, categoryDir,
-      s"$checkpointRoot/category")
-    val day =
-      if (exactDaily)
-        dailyKpiWriterExact(enrichedStream, dailyDir, s"$checkpointRoot/daily")
-      else dailyKpiWriter(enrichedStream, dailyDir, s"$checkpointRoot/daily")
-    (cat, day)
-  }
 }

@@ -22,6 +22,21 @@ class PlanAuditSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0L)
   }
 
+  test("st_joint_* and st_jointm_* read one drained root, equal to the batch KPIs") {
+    EntryFixtures.jointKpiRoots.clear()
+    def rows(name: String) = SparkEntry.queries(name)(spark, dir).collect().toSet
+    val (cat, day) = (rows("st_joint_category"), rows("st_joint_daily"))
+    assert(cat.nonEmpty && day.nonEmpty)
+    assert(rows("st_jointm_category") == cat)
+    assert(rows("st_jointm_daily") == day)
+    val joined = EntryFixtures.enriched(spark, dir)
+    assert(cat == graft.transform.Kpis.categoryKpis(joined).collect().toSet)
+    assert(day == graft.transform.Kpis.dailyKpis(joined).collect().toSet)
+    // all four names were served by ONE drain of the joint writer
+    assert(EntryFixtures.jointKpiRoots.size == 1,
+      s"memo holds ${EntryFixtures.jointKpiRoots}")
+  }
+
   test("w_global_topk: TakeOrderedAndProject, never a global range sort") {
     val p = plan("w_global_topk")
     assert(p.contains("TakeOrderedAndProject"))

@@ -49,18 +49,20 @@ class JointKpisSpec extends SparkSpec {
       JointKpiRow("daily", day0, None, None, None, None,
         Some(1L), Some(rev), Some(1L), Some(0.0), Some(1L)))
       .toDS().toDF()
-    JointKpis.jointSink(root, retainVersions = 3)(batchRows(10.0), 0L)
-    JointKpis.jointSink(root, retainVersions = 3)(batchRows(99.0), 1L)
-    // current pair sees the upserted epoch; the pinned pair sees epoch 0
+    JointKpis.jointSinkManifested(root)(batchRows(10.0), 0L)
+    JointKpis.jointSinkManifested(root)(batchRows(99.0), 1L)
+    // current pair sees the replaced epoch; the pinned pair sees epoch 0
     // on BOTH tables — never a mix
-    assert(JointKpis.dailyTable(spark, root)
-      .select("total_revenue").as[Double].collect().head == 99.0)
-    assert(JointKpis.dailyTable(spark, root, Some(0L))
-      .select("total_revenue").as[Double].collect().head == 10.0)
-    assert(JointKpis.categoryTable(spark, root, Some(0L))
-      .select("daily_revenue").as[Double].collect().head == 10.0)
+    assert(JointKpis.dailyTableManifested(spark, root)
+      .select("total_revenue").as[Double].collect().toSeq == Seq(99.0))
+    assert(JointKpis.categoryTableManifested(spark, root)
+      .select("daily_revenue").as[Double].collect().toSeq == Seq(99.0))
+    assert(JointKpis.dailyTableManifested(spark, root, Some(0L))
+      .select("total_revenue").as[Double].collect().toSeq == Seq(10.0))
+    assert(JointKpis.categoryTableManifested(spark, root, Some(0L))
+      .select("daily_revenue").as[Double].collect().toSeq == Seq(10.0))
     val e = intercept[IllegalStateException](
-      JointKpis.dailyTable(spark, root, Some(42L)).collect())
+      JointKpis.dailyTableManifested(spark, root, Some(42L)).collect())
     assert(e.getMessage.contains("available"), e.getMessage)
   }
 
@@ -71,37 +73,6 @@ class JointKpisSpec extends SparkSpec {
       == catRows(Kpis.categoryKpis(joined)))
     assert(dayRows(tagged.filter(col("table") === "daily"))
       == dayRows(Kpis.dailyKpis(joined)))
-  }
-
-  test("drained joint writer commits BOTH tables, equal to batch, under one pointer") {
-    implicit val ctx = spark.sqlContext
-    val joined = enrichedTestdata
-      .select("order_id", "user_id", "product_id", "category", "sale_price",
-        "is_returned", "order_date").persist()
-    val rows = joined.collect()
-    val (root, cp) = (tmp("graft_joint"), tmp("graft_joint_cp"))
-    val input = MemoryStream[(Long, Long, Long, String, Double, Boolean, java.sql.Date)]
-    val stream = input.toDF().toDF("order_id", "user_id", "product_id",
-      "category", "sale_price", "is_returned", "order_date")
-    val q = JointKpis.writer(stream, root, cp).start()
-    try {
-      rows.grouped(math.max(rows.length / 3, 1)).foreach { chunk =>
-        input.addData(chunk.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getString(3), r.getDouble(4), r.getBoolean(5), r.getDate(6))): _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(catRows(JointKpis.categoryTable(spark, root))
-      == catRows(Kpis.categoryKpis(joined)))
-    assert(dayRows(JointKpis.dailyTable(spark, root))
-      == dayRows(Kpis.dailyKpis(joined)))
-    // one pointer governs both tables: exactly one committed version dir
-    // pair, plus at most its predecessor (reclaim depth 2)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(new Path(root))
-      .map(_.getPath.getName).filter(_.startsWith("v_"))
-    assert(versions.length <= 2, s"reclaim left ${versions.mkString(",")}")
-    joined.unpersist()
   }
 
   test("a crash between version write and pointer flip leaves readers on the old PAIR") {
@@ -134,12 +105,20 @@ class JointKpisSpec extends SparkSpec {
   test("a replayed batch id is skipped: the committed pair is never re-merged") {
     val root = tmp("graft_joint_replay")
     val batch = JointKpis.stream(enrichedTestdata).toDF().limit(50).persist()
-    JointKpis.jointSink(root)(batch, 3L)
-    val before = dayRows(JointKpis.dailyTable(spark, root))
-    JointKpis.jointSink(root)(batch, 3L) // replay of a committed batch
-    JointKpis.jointSink(root)(batch, 2L) // late replay of an older batch
-    assert(dayRows(JointKpis.dailyTable(spark, root)) == before)
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every file the committed version holds; a re-commit would rewrite
+    // them under fresh part-file names
+    def files(): Set[String] = {
+      val it = fs.listFiles(SnapshotStore.versionDir(new Path(root), 3L), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    JointKpis.jointSinkManifested(root)(batch, 3L)
+    val before = (catRows(JointKpis.categoryTableManifested(spark, root)),
+      dayRows(JointKpis.dailyTableManifested(spark, root)), files())
+    JointKpis.jointSinkManifested(root)(batch, 3L) // replay of a committed batch
+    JointKpis.jointSinkManifested(root)(batch, 2L) // late replay of an older batch
+    assert((catRows(JointKpis.categoryTableManifested(spark, root)),
+      dayRows(JointKpis.dailyTableManifested(spark, root)), files()) == before)
     assert(SnapshotStore.currentVersion(fs, new Path(root)).contains(3L))
     batch.unpersist()
   }

@@ -28,83 +28,99 @@ class StreamingPipelineSpec extends SparkSpec {
     Files.move(part, Paths.get(dir, name + ".parquet"))
   }
 
-  private def enrichedRows(rows: Seq[(String, java.sql.Date, Double, Boolean)]): DataFrame =
-    rows.toDF("category", "order_date", "sale_price", "is_returned")
+  /** Enriched item rows (category, day, price, returned), one order per
+    * row; order ids carry `file` so later files add new orders.
+    */
+  private def enrichedRows(file: String,
+                           rows: Seq[(String, java.sql.Date, Double, Boolean)]): DataFrame =
+    rows.zipWithIndex.map { case ((c, d, p, r), i) =>
+      (s"$file-$i", i.toLong, i.toLong, c, d, p, r)
+    }.toDF("order_id", "user_id", "product_id", "category", "order_date",
+      "sale_price", "is_returned")
 
-  private def drain(inputDir: String, targetDir: String, checkpoint: String): Unit = {
+  private def landItems(rows: Seq[(String, java.sql.Date, Double, Boolean)],
+                        dir: String, name: String): Unit =
+    landFile(enrichedRows(name, rows), dir, name)
+
+  /** Drain the joint KPI writer over the file-arrival stream of `inputDir`. */
+  private def drain(inputDir: String, root: String, checkpoint: String): Unit = {
     val stream = spark.readStream
-      .schema(enrichedRows(Seq.empty).schema)
+      .schema(enrichedRows("", Seq.empty).schema)
       .parquet(inputDir)
-    val q = StreamingPipeline.categoryKpiWriter(stream, targetDir, checkpoint)
+    val q = JointKpis.writerManifested(stream, root, checkpoint)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }
 
   // (category, day) → (daily_revenue, avg_order_value, avg_return_rate)
   private def kpiMap(df: DataFrame): Map[(String, String), (Double, Double, Double)] =
-    df.collect().map(r => (r.getString(0), r.getDate(1).toString) ->
-      (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
+    df.select("category", "order_date", "daily_revenue", "avg_order_value",
+        "avg_return_rate")
+      .collect().map(r => (r.getString(0), r.getDate(1).toString) ->
+        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
 
-  private def readTarget(targetDir: String) =
-    kpiMap(spark.read.parquet(targetDir + "/data"))
+  private def readTarget(root: String) =
+    kpiMap(JointKpis.categoryTableManifested(spark, root))
+
+  private def readDaily(root: String) =
+    dailyMap(JointKpis.dailyTableManifested(spark, root))
 
   test("streaming KPIs equal the batch computation and re-draining is a no-op") {
     val (in, out, cp) = (tmp("graft_in"), tmp("graft_out"), tmp("graft_cp"))
     val d1 = java.sql.Date.valueOf("2024-01-01")
 
-    landFile(enrichedRows(Seq(
+    landItems(Seq(
       ("toys", d1, 10.0, false), ("toys", d1, 30.0, true),
-      ("books", d1, 5.0, false))), in, "f1")
+      ("books", d1, 5.0, false)), in, "f1")
     drain(in, out, cp)
 
     val after1 = readTarget(out)
     assert(after1(("toys", "2024-01-01")) == (40.0, 20.0, 0.5))
     assert(after1(("books", "2024-01-01")) == (5.0, 5.0, 0.0))
 
-    // ST2: nothing new → second drain must not change the table
+    // ST2: nothing new → second drain must not change either table
+    val daily1 = readDaily(out)
     drain(in, out, cp)
     assert(readTarget(out) == after1)
+    assert(readDaily(out) == daily1)
 
     // ST5: a late file updates the cumulative aggregate for existing keys
-    landFile(enrichedRows(Seq(
-      ("toys", d1, 60.0, false))), in, "f2")
+    landItems(Seq(("toys", d1, 60.0, false)), in, "f2")
     drain(in, out, cp)
     val after2 = readTarget(out)
     assert(after2(("toys", "2024-01-01")) == (100.0, 100.0 / 3, 1.0 / 3))
     assert(after2(("books", "2024-01-01")) == (5.0, 5.0, 0.0)) // untouched key kept
 
-    // batch parity: the streamed table equals the batch KPI over all files
-    assert(after2 == kpiMap(Kpis.categoryKpis(spark.read.parquet(in))))
+    // batch parity: both streamed tables equal the batch KPIs over all files
+    val all = spark.read.parquet(in)
+    assert(after2 == kpiMap(Kpis.categoryKpis(all)))
+    assert(readDaily(out) == dailyMap(Kpis.dailyKpis(all)))
   }
 
   test("partitioned KPI writer equals the whole-table writer and the batch result") {
-    import org.apache.spark.sql.functions.col
     val (in, out, cp) = (tmp("graft_pin"), tmp("graft_pout2"), tmp("graft_pcp"))
     val d1 = java.sql.Date.valueOf("2024-01-01")
     val d2 = java.sql.Date.valueOf("2024-01-02")
-    landFile(enrichedRows(Seq(
+    landItems(Seq(
       ("toys", d1, 10.0, false), ("toys", d2, 30.0, true),
-      ("books", d1, 5.0, false))), in, "f1")
-    def drainP(): Unit = {
-      val stream = spark.readStream
-        .schema(enrichedRows(Seq.empty).schema).parquet(in)
-      val q = StreamingPipeline.categoryKpiWriterPartitioned(stream, out, cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    drainP()
+      ("books", d1, 5.0, false)), in, "f1")
+    drain(in, out, cp)
     // second file touches ONLY d2 — the d1 partitions must survive the
-    // partial merge untouched
-    landFile(enrichedRows(Seq(("toys", d2, 60.0, false))), in, "f2")
-    drainP()
-    // order_date partition dirs come back typed — normalize via the shared map
-    val got = spark.read.parquet(out + "/data")
-      .select("category", "order_date", "daily_revenue", "avg_order_value", "avg_return_rate")
-      .collect().map(r => (r.getString(0), r.get(1).toString) ->
-        (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
-    assert(got == kpiMap(Kpis.categoryKpis(spark.read.parquet(in))))
-    // the table really is laid out by date partition
-    assert(new java.io.File(out + "/data/order_date=2024-01-01").isDirectory)
+    // partition replace untouched
+    landItems(Seq(("toys", d2, 60.0, false)), in, "f2")
+    drain(in, out, cp)
+    val all = spark.read.parquet(in)
+    assert(readTarget(out) == kpiMap(Kpis.categoryKpis(all)))
+    assert(readDaily(out) == dailyMap(Kpis.dailyKpis(all)))
+    // the table really is laid out by date partition, and the second
+    // commit wrote only the day it touched (d1 is inherited by reference)
+    val root = new org.apache.hadoop.fs.Path(out)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = graft.state.SnapshotStore.currentVersion(fs, root).get
+    val written = fs.listStatus(new org.apache.hadoop.fs.Path(
+        graft.state.SnapshotStore.versionDir(root, v), "category"))
+      .map(_.getPath.getName).filter(_.startsWith("order_date=")).toSeq
+    assert(written == Seq("order_date=2024-01-02"), written.mkString(","))
   }
 
   test("upsertBatch recovers the table from a backup left by a crashed swap") {
@@ -217,8 +233,9 @@ class StreamingPipelineSpec extends SparkSpec {
 
   private def enrichedOrderRows(
       rows: Seq[(String, Long, Long, Double, Boolean, java.sql.Date)]): DataFrame =
-    rows.toDF("order_id", "user_id", "product_id", "sale_price",
-      "is_returned", "order_date")
+    rows.map { case (o, u, p, price, r, d) => (o, u, p, s"cat$p", price, r, d) }
+      .toDF("order_id", "user_id", "product_id", "category", "sale_price",
+        "is_returned", "order_date")
 
   private def dailyMap(df: DataFrame): Map[String, (Long, Double, Long, Double, Long)] =
     df.select("order_date", "total_orders", "total_revenue",
@@ -234,7 +251,7 @@ class StreamingPipelineSpec extends SparkSpec {
     def drainD(): Unit = {
       val stream = spark.readStream
         .schema(enrichedOrderRows(Seq.empty).schema).parquet(in)
-      val q = StreamingPipeline.dailyKpiWriter(stream, out, cp)
+      val q = StreamingPipeline.dailyKpiWriterPartitioned(stream, out, cp)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -249,8 +266,8 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(dailyMap(spark.read.parquet(out + "/data")) ==
       dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
 
-    // ST5: a late file revises d1 (new order, NEW user) — cumulative
-    // aggregates restate, untouched d2 row survives the upsert
+    // ST5: a late file revises d1 (new order, NEW user) — the cumulative
+    // sketches restate, the untouched d2 partition survives the upsert
     landFile(enrichedOrderRows(Seq(
       ("o4", 3L, 10L, 20.0, false, d1))), in, "f2")
     drainD()
@@ -284,7 +301,7 @@ class StreamingPipelineSpec extends SparkSpec {
     def drainE(): Unit = {
       val stream = spark.readStream
         .schema(enrichedOrderRows(Seq.empty).schema).parquet(in)
-      val q = StreamingPipeline.dailyKpiWriterExact(stream, out, cp)
+      val q = JointKpis.writerManifested(stream, out, cp)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -294,40 +311,16 @@ class StreamingPipelineSpec extends SparkSpec {
       ("o2", 2L, 10L, 5.0, false, d1),
       ("o3", 1L, 12L, 7.0, false, d2))), in, "f1")
     drainE()
-    assert(dailyMap(spark.read.parquet(out + "/data")) ==
-      dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
-    // late revision: o1 re-keyed user? no — new order+user on d1, and a
-    // duplicate ORDER id on d2 (distinct must not double count it)
+    assert(readDaily(out) == dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
+    // late revision: a new order+user on d1, and a duplicate ORDER id on
+    // d2 (distinct must not double count it)
     landFile(enrichedOrderRows(Seq(
       ("o4", 3L, 10L, 20.0, false, d1),
       ("o3", 1L, 13L, 2.0, true, d2))), in, "f2")
     drainE()
-    val after = dailyMap(spark.read.parquet(out + "/data"))
+    val after = readDaily(out)
     assert(after == dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
     assert(after("2024-01-02") == (1L, 9.0, 2L, 1.0, 1L))
-  }
-
-  test("kpiWriters drains BOTH reference KPI tables from one enriched stream") {
-    val (in, outC, outD, cp) =
-      (tmp("graft_kin"), tmp("graft_kcat"), tmp("graft_kday"), tmp("graft_kcp"))
-    val d1 = java.sql.Date.valueOf("2024-01-01")
-    landFile(Seq(
-      ("o1", 1L, 10L, "toys", 10.0, false, d1),
-      ("o2", 2L, 11L, "books", 5.0, true, d1))
-      .toDF("order_id", "user_id", "product_id", "category",
-        "sale_price", "is_returned", "order_date"), in, "f1")
-    val schema = spark.read.parquet(in).schema
-    val stream = spark.readStream.schema(schema).parquet(in)
-    val (cat, day) = StreamingPipeline.kpiWriters(stream, outC, outD, cp,
-      exactDaily = true)
-    val qc = cat.trigger(Trigger.AvailableNow()).start()
-    val qd = day.trigger(Trigger.AvailableNow()).start()
-    qc.awaitTermination(); qd.awaitTermination()
-    val batch = spark.read.parquet(in)
-    assert(kpiMap(spark.read.parquet(outC + "/data")) ==
-      kpiMap(Kpis.categoryKpis(batch)))
-    assert(dailyMap(spark.read.parquet(outD + "/data")) ==
-      dailyMap(Kpis.dailyKpis(batch)))
   }
 
   test("st_daily_kpis registered query: every comparison flag true on testdata") {
@@ -350,7 +343,6 @@ class StreamingPipelineSpec extends SparkSpec {
   }
 
   test("snapshot streaming writers drain to the same tables as the rename-swap ones") {
-    import org.apache.spark.sql.streaming.Trigger
     val dir = "/root/testdata/sf0.001"
     val enr = Kpis.enrich(
       graft.sources.TestdataAdapter.orders(spark, dir),
@@ -360,26 +352,32 @@ class StreamingPipelineSpec extends SparkSpec {
         "is_returned", "order_date")
     val stage = tmp("graft_snapw_in")
     enr.write.mode("overwrite").parquet(stage)
-    def drain(mk: (org.apache.spark.sql.DataFrame, String, String) =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-              out: String): Unit = {
+    // a cumulative update-mode aggregation drained into a snapshot upsert
+    def drain(kpis: DataFrame => DataFrame,
+              sink: (DataFrame, Long) => Unit): Unit = {
       val stream = spark.readStream
         .schema(spark.read.parquet(stage).schema).parquet(stage)
-      val q = mk(stream, out, tmp("graft_snapw_cp"))
+      val q = kpis(stream).writeStream
+        .outputMode("update")
+        .option("checkpointLocation", tmp("graft_snapw_cp"))
+        .foreachBatch(sink)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     val catOut = tmp("graft_snapw_cat")
-    drain(StreamingPipeline.categoryKpiWriterSnapshot, catOut)
-    def catRows(df: org.apache.spark.sql.DataFrame) =
+    drain(Kpis.categoryKpis,
+      StreamingPipeline.upsertBatchSnapshot(catOut, Seq("category", "order_date")))
+    def catRows(df: DataFrame) =
       df.select("category", "order_date", "daily_revenue").collect()
         .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2))).toSet
     assert(catRows(StreamingPipeline.readSnapshot(spark, catOut))
       == catRows(Kpis.categoryKpis(enr)))
     val dayOut = tmp("graft_snapw_day")
-    drain(StreamingPipeline.dailyKpiWriterPartitionedSnapshot, dayOut)
+    drain(Kpis.dailyKpisStreaming(_),
+      StreamingPipeline.upsertPartitionedBatchSnapshot(dayOut, Seq("order_date"),
+        "order_date"))
     // sketch-based daily stream: compare the exact columns
-    def dayRows(df: org.apache.spark.sql.DataFrame) =
+    def dayRows(df: DataFrame) =
       df.select("order_date", "total_revenue", "total_items_sold").collect()
         .map(r => (r.getDate(0).toString, r.getDouble(1), r.getLong(2))).toSet
     assert(dayRows(StreamingPipeline.readPartitionedSnapshot(spark, dayOut))
@@ -493,6 +491,47 @@ class StreamingPipelineSpec extends SparkSpec {
     }
     assert(lock.exists(), "successor's lock was deleted by the broken holder")
     assert(java.nio.file.Files.readString(lock.toPath).contains("successor"))
+  }
+
+  test("a lock whose write fails is removed, not left to fence later writers") {
+    import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem,
+      Path => HPath}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.hadoop.util.Progressable
+    val root = new HPath(tmp("graft_lockio"))
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .getRawFileSystem
+    // the lock file gets created, then its stream fails on close() without
+    // flushing — the token never reaches the disk
+    val opened = new java.util.concurrent.ConcurrentLinkedQueue[FSDataOutputStream]()
+    val failing = new FilterFileSystem(local) {
+      override def create(f: HPath, permission: FsPermission, overwrite: Boolean,
+                          bufferSize: Int, replication: Short, blockSize: Long,
+                          progress: Progressable): FSDataOutputStream = {
+        val out = super.create(f, permission, overwrite, bufferSize,
+          replication, blockSize, progress)
+        opened.add(out)
+        new FSDataOutputStream(new java.io.BufferedOutputStream(out), null) {
+          override def close(): Unit =
+            throw new java.io.IOException("injected close failure")
+        }
+      }
+    }
+    val lock = new java.io.File(root.toString, "_writer_lock")
+    try {
+      val e = intercept[java.io.IOException] {
+        StreamingPipeline.withWriterLock(failing, root,
+          StreamingPipeline.LockStaleMs)(fail("the body ran without a lock"))
+      }
+      assert(e.getMessage.contains("injected"))
+      assert(!lock.exists(), "the failed acquisition left its lock behind")
+      // the next writer acquires at once instead of waiting out staleMs
+      var ran = false
+      StreamingPipeline.withWriterLock(local, root,
+        StreamingPipeline.LockStaleMs) { ran = true }
+      assert(ran)
+      assert(!lock.exists())
+    } finally opened.forEach(o => try o.close() catch { case _: Throwable => () })
   }
 
   test("the holder heartbeat refreshes the token so age measures liveness (ADVICE r5)") {
