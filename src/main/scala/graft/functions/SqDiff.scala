@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 /** Native squared-L2 distance of two `array<double>` columns — the
   * [[DotProduct]] pattern applied to the ANN distance kernel proper (r18):
   * the HOF form (`aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0.0,
-  * _+_)`, graft.operators.Similarity.sqDist) allocates an intermediate
+  * _+_)`) allocates an intermediate
   * array and interprets two lambdas per element OUTSIDE whole-stage
   * codegen — measured as the dominant per-row cost once the r18
   * literal-centroid argmin made distance evaluation the hot loop. This

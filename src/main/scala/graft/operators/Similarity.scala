@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Baseline: brute-force cosine top-k with a two-stage
@@ -11,9 +13,9 @@ import org.apache.spark.sql.functions._
   * random-hyperplane LSH — both turn the scan into an equi-join on a bucket
   * key.
   *
-  * All vector math is `zip_with`/`aggregate` higher-order expressions — no
-  * UDFs, no driver collect of vectors (the only collected thing is the tiny
-  * centroid table, which is by construction `nlist` rows).
+  * No UDFs and no driver collect of vectors: the only collected things are
+  * bounded centroid tables and codebooks. The Lloyd's and PQ routines are
+  * written once over an [[Arith]] (float or fixed-point).
   */
 object Similarity {
 
@@ -50,11 +52,6 @@ object Similarity {
         org.apache.spark.sql.GraftBridge.expression(a),
         org.apache.spark.sql.GraftBridge.expression(b)))
 
-  /** The composable built-in formulation of [[dot]] (kept as the reference
-    * implementation the native expression is tested against).
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
 
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -84,19 +81,21 @@ object Similarity {
 
   /** The shared two-stage top-k tail: rank within each scan partition
     * first (cheap, no shuffle), keep ≤ k per partition, THEN shuffle only
-    * ~k·numPartitions survivors per query for the global rank. Expects
-    * `(qId, cId, sim, __part)`.
+    * ~k·numPartitions survivors per query for the global rank. Ranks
+    * `(qId, cId, <score>, __part)` rows by (`order`, cId) and emits
+    * `(qId, cId, out, rank)` — by default the cosine `sim`, descending.
     */
   private def twoStageTopK(scored: DataFrame, k: Int,
-                           qId: String, cId: String): DataFrame = {
+                           qId: String, cId: String,
+                           order: Column = col("sim").desc,
+                           out: Column = round(col("sim"), 6).as("sim")): DataFrame = {
     val localW = Window.partitionBy(col(qId), col("__part"))
-      .orderBy(col("sim").desc, col(cId))
-    val globalW = Window.partitionBy(col(qId))
-      .orderBy(col("sim").desc, col(cId))
+      .orderBy(order, col(cId))
+    val globalW = Window.partitionBy(col(qId)).orderBy(order, col(cId))
     scored
       .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
       .withColumn("rank", row_number().over(globalW)).filter(col("rank") <= k)
-      .select(col(qId), col(cId), round(col("sim"), 6).as("sim"), col("rank"))
+      .select(col(qId), col(cId), out, col("rank"))
   }
 
   /** Hard-negative mining for embedding-model training data: per query,
@@ -300,124 +299,249 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("cell"), transform(col("pm"), p => p.getField("m")).as("centroid"))
 
-  /** IVF coarse quantizer training: Lloyd's k-means over the corpus,
-    * DataFrame-only (VERDICT r02 noted ivfTopK needed a pre-existing cell
-    * column — this builds one). Deterministic: seeds are the k lowest-id
-    * vectors; assignment ties break toward the lower cell id via the
-    * struct-max trick. Each iteration is one broadcast join (centroids are
-    * k rows) + one `max_by` hash aggregation + one re-averaging pass —
-    * no windows over the corpus, no driver-side vectors; centroids are
-    * persisted per iteration to keep the plan depth constant.
+  /** One of the two arithmetics the Lloyd's and PQ routines run in. The
+    * trainers, encoders and scorers below are written ONCE over this
+    * value and only call its members; both break ties toward the lower
+    * cell or code.
+    *
+    *  - [[FloatArith]]: raw double coordinates, `avg` means, cosine argmax
+    *    for coarse cells, [[sqDist]] for PQ sub-vectors, `adc_dist`
+    *    rounded to 6 places. A float mean's partial-sum order (so the low
+    *    ulps of each centroid) depends on the partitioning: this family's
+    *    queries are checked by structural invariants (ann_ivf_valid,
+    *    ann_pq_recall).
+    *  - [[FixedArith]]: `floor(x · scale)` longs with a power-of-two
+    *    scale (an exact IEEE multiply; floor is unambiguous across
+    *    engines), `sum div count` means (truncation toward zero, DuckDB's
+    *    `//`), integer squared-L2 argmin for cells and codes, an exact
+    *    long `adc_dist`. No float accumulates, so results are
+    *    bit-identical across engines, partitionings and run orders — the
+    *    ann_ivf_kmeans, knn_graph, ann_pq_topk and ann_ivfpq_topk oracles
+    *    replay them verbatim. Overflow headroom (ANSI throws, never
+    *    wraps): |x| ≤ 64 at scale 2^20 keeps 512-dim sums < 2^63.
     */
-  def kmeansCells(corpus: DataFrame, k: Int, iters: Int,
-                  cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    require(iters > 0, s"kmeansCells needs at least one iteration, got $iters")
-    kmeansFloatTrain(corpus, k, iters, cId, cVec) match {
-      case None => kmeansCellsJoinLoop(corpus, k, iters, cId, cVec)
-      case Some(cents) if cents.isEmpty =>
-        corpus.select(col(cId), lit(0).as("cell")).limit(0)
-      case Some(cents) =>
-        corpus.select(col(cId),
-          argmaxCellCosine(col(cVec), cents).as("cell"))
-    }
+  private[operators] sealed abstract class Arith[T](
+      implicit val tag: scala.reflect.runtime.universe.TypeTag[T]) {
+    def key: Any // keeps the two families' memoized codebooks apart
+    def elemType: DataType
+    def coords(vec: Column): Column
+    def mean(v: String): Column // aggregate over the column named `v`
+    def cellScore(vec: Column, cent: Column): Column
+    def best(scores: Column): Column // the best of an array of cellScores
+    def bestCell(cell: Column, score: Column): Column // aggregate form
+    def d2(a: Column, b: Column): Column // PQ sub-vector distance
+    def zero: Column
+    def outDist(d: Column): Column
   }
 
-  /** `corpus` with its trained float-kmeans cell ATTACHED as one
-    * projection — for callers that previously joined [[kmeansCells]]'
-    * output back onto the corpus by id (a corpus⋈corpus self-join the
-    * projection form makes redundant). Falls back to that join past the
-    * literal cap. Same training, same assignment values as
-    * [[kmeansCells]].
+  private[operators] object FloatArith extends Arith[Double] {
+    def key: Any = "float"
+    def elemType: DataType = DoubleType
+    def coords(vec: Column): Column = vec
+    def mean(v: String): Column = avg(col(v))
+    def cellScore(vec: Column, cent: Column): Column = cosine(vec, cent)
+    def best(scores: Column): Column = array_max(scores)
+    def bestCell(cell: Column, score: Column): Column =
+      max_by(cell, struct(score, -cell))
+    def d2(a: Column, b: Column): Column = sqDist(a, b)
+    def zero: Column = lit(0.0d)
+    def outDist(d: Column): Column = round(d, 6)
+  }
+
+  private[operators] final case class FixedArith(scale: Long) extends Arith[Long] {
+    require(scale > 0 && (scale & (scale - 1)) == 0,
+      s"scale must be a positive power of two (exact IEEE multiply), got $scale")
+    def key: Any = ("fixed", scale)
+    def elemType: DataType = LongType
+    def coords(vec: Column): Column =
+      transform(vec, x => floor(x * scale).cast("long"))
+    def mean(v: String): Column = expr(s"sum($v) div count($v)")
+    def cellScore(vec: Column, cent: Column): Column = d2Fixed(vec, cent)
+    def best(scores: Column): Column = array_min(scores)
+    def bestCell(cell: Column, score: Column): Column =
+      min_by(cell, struct(score, cell))
+    def d2(a: Column, b: Column): Column = d2Fixed(a, b)
+    def zero: Column = lit(0L)
+    def outDist(d: Column): Column = d
+  }
+
+  /** IVF coarse quantizer training: float Lloyd's k-means ([[kmeans]])
+    * over the corpus, returning `(cId, cell)`.
+    */
+  def kmeansCells(corpus: DataFrame, k: Int, iters: Int,
+                  cId: String = "vec_id", cVec: String = "embedding"): DataFrame =
+    kmeans(FloatArith, corpus, k, iters, cId, cVec, attach = false)
+
+  /** `corpus` with its [[kmeansCells]] cell ATTACHED as one projection
+    * instead of a corpus⋈assignment self-join (the join past the cap).
     */
   def kmeansCellsAttach(corpus: DataFrame, k: Int, iters: Int,
                         cId: String = "vec_id",
-                        cVec: String = "embedding"): DataFrame = {
-    require(iters > 0, s"kmeansCellsAttach needs at least one iteration, got $iters")
-    kmeansFloatTrain(corpus, k, iters, cId, cVec) match {
-      case None =>
-        corpus.join(kmeansCellsJoinLoop(corpus, k, iters, cId, cVec), Seq(cId))
-      case Some(cents) if cents.isEmpty =>
-        corpus.withColumn("cell", lit(0)).limit(0)
-      case Some(cents) =>
-        corpus.withColumn("cell", argmaxCellCosine(col(cVec), cents))
-    }
-  }
+                        cVec: String = "embedding"): DataFrame =
+    kmeans(FloatArith, corpus, k, iters, cId, cVec, attach = true)
 
-  /** [[kmeansCellsAttach]]'s fixed-point twin. */
-  def kmeansCellsFixedAttach(corpus: DataFrame, k: Int, iters: Int,
-                             scale: Long = 1L << 20,
-                             cId: String = "vec_id",
-                             cVec: String = "embedding"): DataFrame = {
-    require(iters > 0, s"kmeansCellsFixedAttach needs at least one iteration, got $iters")
-    require(scale > 0 && (scale & (scale - 1)) == 0,
-      s"scale must be a positive power of two (exact IEEE multiply), got $scale")
-    val scaled = corpus.select(col(cId),
-      transform(col(cVec), x => floor(x * scale).cast("long")).as("__sv"))
-    kmeansFixedTrain(scaled, k, iters, cId) match {
-      case None =>
-        corpus.join(kmeansCellsFixedJoinLoop(scaled, k, iters, cId), Seq(cId))
-      case Some(cents) if cents.isEmpty =>
-        corpus.withColumn("cell", lit(0)).limit(0)
-      case Some(cents) =>
-        corpus.withColumn("cell", argminCellFixed(
-          transform(col(cVec), x => floor(x * scale).cast("long")), cents))
-    }
-  }
-
-  /** The float Lloyd's loop with the assignment inlined as
-    * [[argmaxCellCosine]] over driver-resident centroids — the
-    * [[kmeansFixedTrain]] rework on the cosine/avg family. One job per
-    * refinement instead of a broadcast-join explosion + per-vector
-    * re-aggregation + persist/count barrier. The float means are avg()
-    * like before; their partial-sum order (and therefore the low ulps of
-    * the trained centroids) has ALWAYS been partitioning-dependent — this
-    * family's queries are the structural-invariant ones for exactly that
-    * reason (the ann_ivf_valid stance), and the fixed-point twin carries
-    * every verbatim-replay oracle.
+  /** FIXED-POINT Lloyd's k-means — [[kmeansCells]] in [[FixedArith]]
+    * (VERDICT r13 #3): the ann_ivf_kmeans / knn_graph oracles replay the
+    * full training. The float family stays the raw-throughput default
+    * where replayability is not needed (AnnStream's cadenced refit).
     */
-  private def kmeansFloatTrain(corpus: DataFrame, k: Int, iters: Int,
-                               cId: String,
-                               cVec: String): Option[Seq[(Int, Seq[Double])]] = {
-    var cents: Seq[(Int, Seq[Double])] = corpus.orderBy(col(cId)).limit(k)
-      .select(col(cVec)).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](0).toIndexedSeq) }
-      .toIndexedSeq
-    if (cents.headOption.exists(c => k.toLong * c._2.length > ArgminLiteralCap))
-      return None
-    for (_ <- 1 until iters) {
-      if (cents.nonEmpty)
-        cents = corpus
-          .select(argmaxCellCosine(col(cVec), cents).as("cell"),
-            posexplode(col(cVec)).as(Seq("pos", "v")))
-          .groupBy("cell", "pos").agg(avg("v").as("m"))
-          .collect()
-          .groupBy(_.getInt(0)).toSeq
-          .map { case (cell, rows) =>
-            (cell, rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toIndexedSeq)
-          }
-          .sortBy(_._1)
+  def kmeansCellsFixed(corpus: DataFrame, k: Int, iters: Int,
+                       scale: Long = 1L << 20,
+                       cId: String = "vec_id",
+                       cVec: String = "embedding"): DataFrame =
+    kmeans(FixedArith(scale), corpus, k, iters, cId, cVec, attach = false)
+
+  /** Lloyd's k-means in arithmetic `a`: `(cId, cell)`, or with `attach`
+    * the corpus with its `cell` attached. Deterministic: seeds are the k
+    * lowest-id vectors, cell = the seed's id rank, assignment ties break
+    * toward the lower cell. While the centroid table (k × dim entries)
+    * fits under `cap` it stays driver-resident ([[lloydsTrain]]) and the
+    * final assignment is a pure projection — no shuffle, and each
+    * consumer reference re-executes a scan+project instead of a
+    * join+aggregate. Past it the broadcast-join loop
+    * ([[lloydsJoinLoop]]) runs.
+    */
+  private[operators] def kmeans[T](a: Arith[T], corpus: DataFrame, k: Int,
+                                   iters: Int, cId: String, cVec: String,
+                                   attach: Boolean,
+                                   cap: Int = ArgminLiteralCap): DataFrame = {
+    require(k >= 1, s"k-means needs at least one cell, got k=$k")
+    require(iters > 0, s"k-means needs at least one iteration, got $iters")
+    val scaled = corpus.select(col(cId), a.coords(col(cVec)).as("__sv"))
+    lloydsTrain(a, scaled, k, iters, cId, cap) match {
+      case None =>
+        val cells = lloydsJoinLoop(a, scaled, k, iters, cId)
+        if (attach) corpus.join(cells, Seq(cId)) else cells
+      case Some(cents) =>
+        if (attach)
+          corpus.withColumn("cell", argBestCell(a, a.coords(col(cVec)), cents))
+        else scaled.select(col(cId), argBestCell(a, col("__sv"), cents).as("cell"))
     }
+  }
+
+  /** Max centroid-table entries (cells × dim) the driver-resident forms
+    * embed as literals; past it the broadcast-join forms run. Suite
+    * callers stay ≤ 1024 entries; the cap is for a production nlist, where
+    * a megabyte-scale literal table in every task binary would itself
+    * become the cost (the exactGroups InSet lesson).
+    */
+  private val ArgminLiteralCap = 1 << 16
+
+  /** The best id over a DRIVER-RESIDENT (id-ascending) centroid table, as
+    * one codegen-friendly expression: the scores evaluate into an array,
+    * `array_position(ss, best(ss))` finds the FIRST index achieving the
+    * best score, and the id literal maps it back — exactly the join
+    * forms' `max_by`/`min_by` aggregate, ties to the lower id.
+    */
+  private def argBest[T: scala.reflect.runtime.universe.TypeTag](
+      vec: Column, cents: Seq[(Int, Seq[T])],
+      score: (Column, Column) => Column, best: Column => Column): Column = {
+    val ss = array(cents.map { case (_, cent) => score(vec, typedLit(cent)) }: _*)
+    element_at(typedLit(cents.map(_._1)), array_position(ss, best(ss)).cast("int"))
+  }
+
+  /** The coarse cell of `vec` ([[Arith.bestCell]] as a projection). */
+  private def argBestCell[T](a: Arith[T], vec: Column,
+                             cents: Seq[(Int, Seq[T])]): Column =
+    argBest(vec, cents, a.cellScore, a.best)(a.tag)
+
+  /** [[argBestCell]] in the float arithmetic (cosine argmax). */
+  private[graft] def argmaxCellCosine(vec: Column,
+                                      cents: Seq[(Int, Seq[Double])]): Column =
+    argBestCell(FloatArith, vec, cents)
+
+  /** The Lloyd's loop over a `(cId, __sv)` frame with the centroids
+    * DRIVER-RESIDENT (r18, guide §2.3/§2.4 — the "kmeans-centroid class"
+    * of bounded metadata): each refinement is ONE job — the per-(cell,
+    * pos) means with the assignment computed inline by [[argBestCell]] —
+    * instead of the join form's corpus×k broadcast-join explosion,
+    * per-vector re-aggregation shuffle and persist+count barrier. Returns
+    * the final centroid table, cell ascending, or `None` when k × dim
+    * exceeds `cap` or the frame is empty. Integer sums are
+    * order-independent, so in the fixed arithmetic the centroids (and
+    * every assignment) are bit-identical to [[lloydsJoinLoop]]'s.
+    */
+  private[operators] def lloydsTrain[T](a: Arith[T], scaled: DataFrame, k: Int,
+                                        iters: Int, cId: String,
+                                        cap: Int = ArgminLiteralCap)
+      : Option[Seq[(Int, Seq[T])]] = {
+    var cents: Seq[(Int, Seq[T])] = scaled.orderBy(col(cId)).limit(k)
+      .select(col("__sv")).collect()
+      .zipWithIndex.map { case (r, i) => (i, r.getSeq[T](0).toIndexedSeq) }
+      .toIndexedSeq
+    // the seed rows reveal the vector width: past the literal-table cap
+    // (or with no rows at all), signal the caller to run the join loop
+    if (cents.headOption.forall(c => k.toLong * c._2.length > cap)) return None
+    for (_ <- 1 until iters)
+      cents = cellMeans(a, scaled, argBestCell(a, col("__sv"), cents))
     Some(cents)
   }
 
-  /** The pre-r18 broadcast-join float loop, kept as the past-cap
-    * fallback.
+  /** Per-cell means of `__sv` under the assignment `cell`, in one job,
+    * collected cell-ascending; a cell that lost every member vanishes.
     */
-  private def kmeansCellsJoinLoop(corpus: DataFrame, k: Int, iters: Int,
-                                  cId: String, cVec: String): DataFrame = {
-    var cents = corpus.orderBy(col(cId)).limit(k)
-      .select(col(cId), col(cVec))
+  private def cellMeans[T](a: Arith[T], scaled: DataFrame,
+                           cell: Column): Seq[(Int, Seq[T])] =
+    collectMeans(a, scaled.select(cell.as("cell"),
+        posexplode(col("__sv")).as(Seq("pos", "v"))))
+      .map { case (Seq(c), cent) => (c, cent) }.sortBy(_._1)
+
+  /** The driver forms' re-averaging pass: `(int keys…, pos, v)` rows
+    * averaged per (keys, pos) in ONE job and collected as keys →
+    * pos-ordered centroid.
+    */
+  private def collectMeans[T](a: Arith[T],
+                              exploded: DataFrame): Seq[(Seq[Int], Seq[T])] = {
+    val nKeys = exploded.columns.length - 2
+    exploded.groupBy(exploded.columns.init.map(col).toIndexedSeq: _*)
+      .agg(a.mean("v")).collect()
+      .groupBy(r => (0 until nKeys).map(r.getInt)).toSeq
+      .map { case (key, rows) =>
+        (key, rows.sortBy(_.getInt(nKeys)).toIndexedSeq.map(_.getAs[T](nKeys + 1)))
+      }
+  }
+
+  /** Per-key means of the array column `vec` as a `(keys…, out)` frame of
+    * pos-ordered centroid arrays — the join forms' re-averaging pass.
+    */
+  private def meansFrame[T](a: Arith[T], frame: DataFrame, keys: Seq[String],
+                            vec: String, out: String): DataFrame = {
+    val ks = keys.map(col)
+    frame.select(ks :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+      .groupBy(ks :+ col("pos"): _*).agg(a.mean("v").as("m"))
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(ks :+ transform(col("pm"), p => p.getField("m")).as(out): _*)
+  }
+
+  /** `df` persisted, registered for release via Dedup.clearCaches, and
+    * materialized by one count.
+    */
+  private def materialized(df: DataFrame): DataFrame = {
+    val p = graft.util.Caches.retain(df.persist(StorageLevel.MEMORY_AND_DISK))
+    p.count()
+    p
+  }
+
+  /** The broadcast-join Lloyd's loop, the past-cap form of
+    * [[lloydsTrain]] (a production nlist too large for a literal table).
+    * Each iteration is one broadcast join against the k-row centroid
+    * frame, one [[Arith.bestCell]] aggregation per vector, and one
+    * re-averaging pass persisted so the next iteration's plan stays flat.
+    * Returns `(cId, cell)`.
+    */
+  private def lloydsJoinLoop[T](a: Arith[T], scaled: DataFrame, k: Int,
+                                iters: Int, cId: String): DataFrame = {
+    var cents = scaled.orderBy(col(cId)).limit(k)
       .withColumn("cell", row_number().over(Window.orderBy(col(cId))) - 1)
-      .select(col("cell"), col(cVec).as("centroid"))
+      .select(col("cell"), col("__sv").as("__cent"))
     var assigned: DataFrame = null
     var backingAssigned: DataFrame = null // cents the current `assigned` reads
     for (i <- 1 to iters) {
-      assigned = corpus.join(broadcast(cents))
-        .select(col(cId), col(cVec),
-          col("cell"), cosine(col(cVec), col("centroid")).as("csim"))
+      assigned = scaled.join(broadcast(cents))
         .groupBy(col(cId)).agg(
-          max_by(col("cell"), struct(col("csim"), -col("cell"))).as("cell"),
-          first(col(cVec)).as(cVec))
+          a.bestCell(col("cell"), a.cellScore(col("__sv"), col("__cent"))).as("cell"),
+          first(col("__sv")).as("__sv"))
       // the centroids from two rounds back are referenced by nothing now
       if (backingAssigned != null && (backingAssigned ne cents))
         backingAssigned.unpersist()
@@ -425,171 +549,13 @@ object Similarity {
       // the final iteration's assignment is the result — re-averaging its
       // centroids would be a full wasted pass over the corpus
       if (i < iters) {
-        cents = assigned
-          .select(col("cell"), posexplode(col(cVec)).as(Seq("pos", "v")))
-          .groupBy("cell", "pos").agg(avg("v").as("m"))
-          .groupBy("cell")
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("cell"), transform(col("pm"), p => p.getField("m")).as("centroid"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        cents = meansFrame(a, assigned, Seq("cell"), "__sv", "__cent")
+          .persist(StorageLevel.MEMORY_AND_DISK)
         cents.count() // materialize so the next iteration's plan stays flat
       }
     }
     // exactly one cached frame (the centroids the returned assignment
     // reads) survives; registered for release via Dedup.clearCaches
-    if (backingAssigned != null) graft.util.Caches.retain(backingAssigned)
-    assigned.select(col(cId), col("cell"))
-  }
-
-  /** FIXED-POINT Lloyd's k-means — [[kmeansCells]]'s engine-replayable
-    * twin (VERDICT r13 #3, the g_pagerank scaled-long stance): every
-    * coordinate scales to a long by `floor(x · scale)` with a
-    * power-of-two scale (an IEEE multiply by 2^20 only shifts the
-    * exponent — exact, no rounding-mode dependence — and floor is
-    * unambiguous across engines), assignment is the integer argmin of
-    * squared L2 distance (ties to the lower cell), and centroid updates
-    * are integral `div` means (truncation toward zero, matching DuckDB's
-    * `//`). No float accumulates anywhere, so the trained assignment is
-    * bit-identical across engines, partitionings, and run orders — the
-    * ann_ivf_kmeans / knn_graph oracles replay the full training.
-    * Same per-iteration plan shape as [[kmeansCells]]: one broadcast
-    * join + one min_by hash aggregation + one re-averaging pass; the
-    * float twin stays the raw-throughput default for callers that don't
-    * need replayability (AnnStream's cadenced refit).
-    *
-    * Overflow headroom (ANSI mode throws on breach, never wraps):
-    * |x| ≤ 64 at scale 2^20 keeps per-dimension diffs < 2^28, squares
-    * < 2^55, and 512-dim sums < 2^63 — unit-norm embeddings sit orders
-    * of magnitude inside the envelope.
-    */
-  /** Max centroid-table entries (cells × dim) the expression-argmin form
-    * embeds as literals; past it the broadcast-join Lloyd's loop runs
-    * unchanged. Every suite caller sits orders of magnitude under it
-    * (k ≤ 16, dim ≤ 64 → ≤ 1024 entries ≈ 8 KB of plan); the cap exists
-    * for a production nlist (tens of thousands of cells), where a
-    * megabyte-scale literal table in every task binary would itself
-    * become the cost (the exactGroups InSet lesson).
-    */
-  private val ArgminLiteralCap = 1 << 16
-
-  /** Integer argmin cell over a DRIVER-RESIDENT centroid table, as one
-    * codegen-friendly expression: the distances evaluate into an array,
-    * `array_position(ds, array_min(ds))` finds the FIRST index achieving
-    * the minimum, and the (ascending-sorted) cell-id literal maps it back
-    * — exactly `min_by(cell, struct(d2, cell))`: min distance, ties to
-    * the lower cell. Integer math end to end, so the value is
-    * bit-identical to the join form's.
-    */
-  private def argminCellFixed(sv: Column,
-                              cents: Seq[(Int, Seq[Long])]): Column = {
-    val ds = array(cents.map { case (_, cent) => d2Fixed(sv, typedLit(cent)) }: _*)
-    element_at(typedLit(cents.map(_._1)),
-      array_position(ds, array_min(ds)).cast("int"))
-  }
-
-  /** Cosine argmax cell over a driver-resident (ascending-sorted)
-    * centroid table — first index achieving the maximum similarity =
-    * `max_by(cell, struct(csim, -cell))`: max similarity, ties to the
-    * LOWER cell.
-    */
-  private[graft] def argmaxCellCosine(vec: Column,
-                                      cents: Seq[(Int, Seq[Double])]): Column = {
-    val ss = array(cents.map { case (_, cent) => cosine(vec, typedLit(cent)) }: _*)
-    element_at(typedLit(cents.map(_._1)),
-      array_position(ss, array_max(ss)).cast("int"))
-  }
-
-  /** The integer Lloyd's loop over a pre-scaled `(cId, __sv)` frame,
-    * returning the FINAL centroid table as driver rows (r18, guide
-    * §2.3/§2.4 — the "kmeans-centroid class" of bounded metadata): each
-    * refinement is ONE job — the per-(cell, pos) integral-div means with
-    * the assignment computed INLINE by [[argminCellFixed]] — instead of
-    * the join form's corpus×k broadcast-join explosion, per-vector
-    * re-aggregation shuffle, and persist+count barrier. Integer sums are
-    * order-independent, so centroids (and therefore every assignment) are
-    * bit-identical to the join loop's — the ann_ivf_kmeans / knn_graph /
-    * ann_ivfpq_topk oracles replay either form.
-    */
-  private[operators] def kmeansFixedTrain(scaled: DataFrame, k: Int,
-                                          iters: Int,
-                                          cId: String): Option[Seq[(Int, Seq[Long])]] = {
-    var cents: Seq[(Int, Seq[Long])] = scaled.orderBy(col(cId)).limit(k)
-      .select(col("__sv")).collect()
-      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Long](0).toIndexedSeq) }
-      .toIndexedSeq
-    // the seed rows reveal the vector width: past the literal-table cap,
-    // signal the caller to run the broadcast-join loop instead
-    if (cents.headOption.exists(c => k.toLong * c._2.length > ArgminLiteralCap))
-      return None
-    for (_ <- 1 until iters) {
-      if (cents.nonEmpty)
-        cents = scaled
-          .select(argminCellFixed(col("__sv"), cents).as("cell"),
-            posexplode(col("__sv")).as(Seq("pos", "v")))
-          .groupBy("cell", "pos").agg(expr("sum(v) div count(v)").as("m"))
-          .collect()
-          .groupBy(_.getInt(0)).toSeq
-          .map { case (cell, rows) =>
-            (cell, rows.sortBy(_.getInt(1)).map(_.getLong(2)).toIndexedSeq)
-          }
-          .sortBy(_._1)
-    }
-    Some(cents)
-  }
-
-  def kmeansCellsFixed(corpus: DataFrame, k: Int, iters: Int,
-                       scale: Long = 1L << 20,
-                       cId: String = "vec_id",
-                       cVec: String = "embedding"): DataFrame = {
-    require(iters > 0, s"kmeansCellsFixed needs at least one iteration, got $iters")
-    require(scale > 0 && (scale & (scale - 1)) == 0,
-      s"scale must be a positive power of two (exact IEEE multiply), got $scale")
-    val scaled = corpus.select(col(cId),
-      transform(col(cVec), x => floor(x * scale).cast("long")).as("__sv"))
-    kmeansFixedTrain(scaled, k, iters, cId) match {
-      case None => kmeansCellsFixedJoinLoop(scaled, k, iters, cId)
-      case Some(cents) if cents.isEmpty =>
-        scaled.select(col(cId), lit(0).as("cell")).limit(0)
-      case Some(cents) =>
-        // the final assignment is a pure projection — no shuffle, and each
-        // consumer reference re-executes a scan+project instead of the
-        // join form's join+aggregate
-        scaled.select(col(cId), argminCellFixed(col("__sv"), cents).as("cell"))
-    }
-  }
-
-  /** The pre-r18 broadcast-join Lloyd's loop, kept verbatim as the
-    * past-cap fallback (production nlist too large for a literal table).
-    */
-  private def kmeansCellsFixedJoinLoop(scaled: DataFrame, k: Int, iters: Int,
-                                       cId: String): DataFrame = {
-    val d2 = d2Fixed(col("__sv"), col("__cent"))
-    var cents = scaled.orderBy(col(cId)).limit(k)
-      .withColumn("cell", row_number().over(Window.orderBy(col(cId))) - 1)
-      .select(col("cell"), col("__sv").as("__cent"))
-    var assigned: DataFrame = null
-    var backingAssigned: DataFrame = null
-    for (i <- 1 to iters) {
-      assigned = scaled.join(broadcast(cents))
-        .select(col(cId), col("__sv"), col("cell"), d2.as("__d2"))
-        .groupBy(col(cId)).agg(
-          min_by(col("cell"), struct(col("__d2"), col("cell"))).as("cell"),
-          first(col("__sv")).as("__sv"))
-      if (backingAssigned != null && (backingAssigned ne cents))
-        backingAssigned.unpersist()
-      backingAssigned = cents
-      if (i < iters) {
-        cents = assigned
-          .select(col("cell"), posexplode(col("__sv")).as(Seq("pos", "v")))
-          .groupBy("cell", "pos").agg(expr("sum(v) div count(v)").as("m"))
-          .groupBy("cell")
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("cell"),
-            transform(col("pm"), p => p.getField("m")).as("__cent"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cents.count() // materialize so the next iteration's plan stays flat
-      }
-    }
     if (backingAssigned != null) graft.util.Caches.retain(backingAssigned)
     assigned.select(col(cId), col("cell"))
   }
@@ -621,11 +587,11 @@ object Similarity {
       (corpus.queryExecution.analyzed.canonicalized, cellCol, cVec),
       (_, prev) =>
         if (prev != null && prev.storageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE) prev
+          StorageLevel.NONE) prev
         else {
           val c = graft.util.Caches.retain(
             centroids(corpus, cellCol, cVec)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+              .persist(StorageLevel.MEMORY_AND_DISK))
           c.count()
           c
         })
@@ -642,9 +608,15 @@ object Similarity {
       .select(col(qId), col(cId), round(col("sim"), 6).as("sim"), col("rank"))
   }
 
-  /** Squared L2 distance — fixed left-to-right HOF fold, so every call
-    * site (codebook training, encoding, ADC tables) computes bit-identical
-    * doubles for the same operands; the PQ recall invariant depends on it.
+  /** Squared L2 distance of two `array<double>` columns (other element
+    * types fail analysis) — the native codegen'd kernel
+    * (graft.functions.SqDiffDouble): a fused left-to-right IEEE
+    * accumulate, so every call site computes bit-identical doubles for
+    * the same operands (the PQ recall invariant depends on it). A null
+    * element yields NULL. On a length mismatch it returns the
+    * common-prefix distance where the HOF form nulls out (zip_with pads
+    * with null) — the [[dot]] contract; PQ never sees one ([[subvecs]]
+    * fails the job first).
     */
   def sqDist(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftBridge.column(
@@ -652,12 +624,15 @@ object Similarity {
         org.apache.spark.sql.GraftBridge.expression(a),
         org.apache.spark.sql.GraftBridge.expression(b)))
 
-  /** The composable built-in formulation of [[sqDist]] (reference
-    * implementation the native kernel is tested against).
+  /** Integer squared L2 distance over two `array<long>` columns — the
+    * native fused-loop kernel (graft.functions.SqDiffLong); integer sums
+    * are order-independent, so bit-identical to the HOF fold.
     */
-  def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0d), (acc, v) => acc + v)
+  private def d2Fixed(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      graft.functions.SqDiffLong(
+        org.apache.spark.sql.GraftBridge.expression(a),
+        org.apache.spark.sql.GraftBridge.expression(b)))
 
   /** The m fixed-width subvectors of `vec` as (subspace, sub) structs.
     * The length guard rides inside the expression (assert_true is null on
@@ -676,24 +651,32 @@ object Similarity {
       slice(checked, j * dsub + 1, dsub).as("sub"))): _*)
   }
 
-  /** Product-quantization codebook: `m` independent `ksub`-centroid
-    * k-means runs — one per subspace — trained TOGETHER in a single
-    * Lloyd's loop by keying every step on (subspace, cell), so each
-    * iteration is one corpus scan (explode to m subvector rows), one
-    * broadcast join against the m×ksub codebook, one min_by hash
-    * aggregation, and one re-averaging pass — never m separate jobs.
-    * Deterministic: seeds are the subvectors of the ksub lowest-id corpus
-    * rows (a TakeOrdered, not a per-subspace window over the corpus);
-    * assignment ties break toward the lower cell. Cells are re-indexed
-    * contiguously per subspace at the end so ADC tables can use positional
-    * lookup; empty cells simply vanish. Returns (subspace, cell, centroid),
-    * m×ksub rows — broadcast-sized by construction.
+  /** Product-quantization codebook in the float arithmetic: `m`
+    * independent `ksub`-centroid k-means runs — one per subspace — trained
+    * TOGETHER in one Lloyd's loop keyed on (subspace, code), so each
+    * iteration is one corpus scan, never m separate jobs. Cells are
+    * re-indexed contiguously per subspace so ADC tables can use
+    * positional lookup; empty cells vanish. Returns (subspace, cell,
+    * centroid), m×ksub rows. See [[pqCodebookWith]].
     */
   def pqCodebook(corpus: DataFrame, dim: Int, m: Int, ksub: Int = 16,
                  iters: Int = 2, cId: String = "vec_id",
-                 cVec: String = "embedding"): DataFrame = {
+                 cVec: String = "embedding"): DataFrame =
+    pqCodebookWith(FloatArith, corpus, dim, m, ksub, iters, cId, cVec)
+
+  /** The PQ codebook in arithmetic `a`, memoized per (family, corpus
+    * plan, cap, dim, m, ksub, iters, cId, cVec): a top-k and a recall
+    * query over the same corpus share one training. Below `cap` (ksub ×
+    * dim entries) the trainer is [[pqTrain]] with a driver-resident
+    * codebook; past it [[pqTrainJoinLoop]].
+    */
+  private[operators] def pqCodebookWith[T](a: Arith[T], corpus: DataFrame,
+                                           dim: Int, m: Int, ksub: Int,
+                                           iters: Int, cId: String, cVec: String,
+                                           cap: Int = ArgminLiteralCap): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
     require(ksub > 0 && iters > 0, s"need positive ksub/iters: $ksub/$iters")
+    import a.tag
     pqCache.compute(
       // cId/cVec are part of the key (like centroidCache): the same corpus
       // plan trained over a different vector or seed-id column is a
@@ -701,184 +684,269 @@ object Similarity {
       // memoized codebook is the WORST case of the stale-memo bug: its
       // plan chains every Lloyd's iteration, so re-referencing it uncached
       // re-executes the whole training loop as one deep nested join.
-      (corpus.queryExecution.analyzed.canonicalized, dim, m, ksub, iters,
-        cId, cVec),
+      ((a.key, corpus.queryExecution.analyzed.canonicalized, cap),
+        dim, m, ksub, iters, cId, cVec),
       (_, prev) =>
         if (prev != null && prev.storageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE) prev
-        else trainPqCodebook(corpus, dim, m, ksub, iters, cId, cVec))
+          StorageLevel.NONE) prev
+        else {
+          val svArr = subvecs(a.coords(col(cVec)), dim, m)
+          if (ksub.toLong * dim > cap)
+            pqTrainJoinLoop(a, corpus, svArr, m, ksub, iters, cId, "cell")
+          else {
+            val spark = corpus.sparkSession
+            import spark.implicits._
+            // LocalRelation result; materialized so the liveness check
+            // (storageLevel != NONE) keeps recognizing a live entry
+            materialized(spark.createDataset(bookRows(
+              pqTrain(a, corpus, svArr, m, ksub, iters, cId)))
+              .toDF("subspace", "cell", "centroid"))
+          }
+        })
   }
 
-  /** [[pqRefitFixed]]'s float twin: avg() means, sqDist assignment. */
-  private def pqRefitFloat(frame: DataFrame, svArr: Column, m: Int,
-                           book: DriverBook[Double]): DriverBook[Double] = {
-    val codes = pqCodesExpr[Double](svArr, m, book, sqDist)
-    frame
-      .select(codes.as("__codes"),
-        posexplode(svArr).as(Seq("__j", "__sv")))
-      .select(col("__sv").getField("subspace").as("subspace"),
-        element_at(col("__codes"), col("__j") + 1).as("code"),
-        posexplode(col("__sv").getField("sub")).as(Seq("pos", "v")))
-      .groupBy("subspace", "code", "pos")
-      .agg(avg("v").as("mv"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1))).toSeq
-      .map { case ((j, code), rows) =>
-        (j, code, rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toIndexedSeq)
-      }
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap
-  }
+  /** Driver rows of a codebook: subspace → (code, centroid), code-ascending. */
+  private type DriverBook[T] = Map[Int, Seq[(Int, Seq[T])]]
 
-  private def trainPqCodebook(corpus: DataFrame, dim: Int, m: Int, ksub: Int,
-                              iters: Int, cId: String, cVec: String): DataFrame = {
-    val spark = corpus.sparkSession
-    if (ksub.toLong * dim > ArgminLiteralCap)
-      return trainPqCodebookJoinLoop(corpus, dim, m, ksub, iters, cId, cVec)
-    val svArr = subvecs(col(cVec), dim, m)
-    val seedRows = corpus.orderBy(col(cId)).limit(ksub)
+  /** The PQ trainer with a DRIVER-RESIDENT codebook (r18, guide
+    * §2.3/§2.4 + VERDICT r17 #4) over the `svArr` subvectors of `frame`:
+    * seeds are the ksub lowest-id rows (TakeOrdered returns them sorted),
+    * one seed subvector per subspace, code = the seed's id rank; each of
+    * the `iters` refinements is ONE job ([[pqRefit]]); the result is
+    * reindexed contiguously per subspace.
+    */
+  private def pqTrain[T](a: Arith[T], frame: DataFrame, svArr: Column, m: Int,
+                         ksub: Int, iters: Int, cId: String): DriverBook[T] = {
+    val seedRows = frame.orderBy(col(cId)).limit(ksub)
       .select(svArr.as("svs")).collect()
-    var book: DriverBook[Double] = (0 until m).map { j =>
+    var book: DriverBook[T] = (0 until m).map { j =>
       j -> seedRows.toSeq.zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[org.apache.spark.sql.Row](0)(j).getSeq[Double](1).toIndexedSeq)
+        (i, r.getSeq[org.apache.spark.sql.Row](0)(j).getSeq[T](1).toIndexedSeq)
       }
     }.toMap
     for (_ <- 1 to iters)
-      book = pqRefitFloat(corpus, svArr, m, book)
-    import spark.implicits._
-    val df = graft.util.Caches.retain(
-      spark.createDataset(bookRows(reindexBook(book)))
-        .toDF("subspace", "cell", "centroid")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    df.count()
-    df
+      book = pqRefit(a, frame, svArr, m, book)
+    // contiguous codes per subspace: the join form's row_number reindex
+    book.view.mapValues(_.zipWithIndex.map { case ((_, cent), i) => (i, cent) }).toMap
   }
 
-  /** The pre-r18 broadcast-join float PQ trainer — past-cap fallback. */
-  private def trainPqCodebookJoinLoop(corpus: DataFrame, dim: Int, m: Int, ksub: Int,
-                                      iters: Int, cId: String, cVec: String): DataFrame = {
-    val subs = corpus.select(col(cId).as("__id"),
-      explode(subvecs(col(cVec), dim, m)).as("sv"))
-      .select(col("__id"), col("sv.subspace").as("subspace"),
-        col("sv.sub").as("sub"))
-    // seeds: ksub lowest GLOBAL ids (TakeOrderedAndProject — no window
-    // shuffling the corpus into m reducers), each contributing one seed
-    // subvector per subspace
-    var cb = corpus.orderBy(col(cId)).limit(ksub)
-      .select(col(cId).as("__id"), explode(subvecs(col(cVec), dim, m)).as("sv"))
-      .select(col("__id"), col("sv.subspace").as("subspace"),
-        col("sv.sub").as("sub"))
-      .withColumn("cell", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("__id"))) - 1)
-      .select(col("subspace"), col("cell"), col("sub").as("centroid"))
+  /** One Lloyd's refinement pass with the assignment inlined: (subspace,
+    * code, pos) means in a single job, collected back to a [[DriverBook]];
+    * a code that lost every member vanishes, like in the join form.
+    */
+  private def pqRefit[T](a: Arith[T], frame: DataFrame, svArr: Column, m: Int,
+                         book: DriverBook[T]): DriverBook[T] =
+    collectMeans(a, frame
+      .select(pqCodesExpr(a, svArr, m, book).as("__codes"),
+        posexplode(svArr).as(Seq("__j", "__sv")))
+      .select(col("__sv").getField("subspace").as("subspace"),
+        element_at(col("__codes"), col("__j") + 1).as("code"),
+        posexplode(col("__sv").getField("sub")).as(Seq("pos", "v"))))
+      .groupBy(_._1.head).view
+      .mapValues(_.map { case (Seq(_, code), cent) => (code, cent) }.sortBy(_._1)).toMap
+
+  /** Per-row PQ code array over a driver-resident codebook, as ONE
+    * expression: for each subvector (subspace-ordered, the [[subvecs]]
+    * contract), the [[argBest]] code by [[Arith.d2]] — the join form's
+    * `min_by(code, struct(d2, code))` verbatim. The encode pass and each
+    * trainer iteration become pure projections: no corpus×ksub
+    * broadcast-join explosion, no per-(row, subspace) re-aggregation.
+    */
+  private def pqCodesExpr[T](a: Arith[T], svArr: Column, m: Int,
+                             book: DriverBook[T]): Column =
+    transform(svArr, sv => (0 until m).foldLeft(lit(null).cast("int")) { (acc, j) =>
+      val entries = book.getOrElse(j, Seq.empty)
+      if (entries.isEmpty) acc
+      else when(sv.getField("subspace") === j,
+        argBest(sv.getField("sub"), entries, a.d2, array_min)(a.tag)).otherwise(acc)
+    })
+
+  private def bookRows[T](book: DriverBook[T]): Seq[(Int, Int, Seq[T])] =
+    book.toSeq.sortBy(_._1).flatMap { case (j, es) =>
+      es.map { case (c, cent) => (j, c, cent) }
+    }
+
+  /** The broadcast-join PQ trainer, the past-cap form of [[pqTrain]]: the
+    * same seeds, then per iteration one broadcast join against the m×ksub
+    * codebook ([[nearestCodes]]) and one re-averaging pass, persisted so
+    * the next iteration's plan stays flat. Returns the reindexed
+    * (subspace, `codeCol`, centroid) frame, persisted and retained.
+    */
+  private def pqTrainJoinLoop[T](a: Arith[T], frame: DataFrame, svArr: Column,
+                                 m: Int, ksub: Int, iters: Int, cId: String,
+                                 codeCol: String): DataFrame = {
+    val subs = subRows(frame, svArr, cId)
+    // seeds: the ksub lowest GLOBAL ids (a TakeOrdered, not a window
+    // shuffling the corpus), one seed subvector per subspace each
+    var cb = subRows(frame.orderBy(col(cId)).limit(ksub), svArr, cId)
+      .select(col("subspace"),
+        (row_number().over(Window.partitionBy(col("subspace")).orderBy(col(cId))) - 1)
+          .as("code"),
+        col("sub").as("centroid"))
     for (_ <- 1 to iters) {
-      val assigned = subs.join(broadcast(cb), Seq("subspace"))
-        .select(col("__id"), col("subspace"), col("sub"), col("cell"),
-          sqDist(col("sub"), col("centroid")).as("d2"))
-        .groupBy(col("__id"), col("subspace"))
-        .agg(min_by(col("cell"), struct(col("d2"), col("cell"))).as("cell"),
-          first(col("sub")).as("sub"))
-      val next = assigned
-        .select(col("subspace"), col("cell"),
-          posexplode(col("sub")).as(Seq("pos", "v")))
-        .groupBy("subspace", "cell", "pos").agg(avg("v").as("mv"))
-        .groupBy("subspace", "cell")
-        .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-        .select(col("subspace"), col("cell"),
-          transform(col("pm"), p => p.getField("mv")).as("centroid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val next = meansFrame(a, nearestCodes(a, subs, cb, cId, withSub = true),
+        Seq("subspace", "code"), "sub", "centroid")
+        .persist(StorageLevel.MEMORY_AND_DISK)
       next.count() // materialize so the next iteration's plan stays flat
-      // next is materialized, so the codebook it was derived from (the
-      // seed frame on iteration 1 is simply un-persisted) can release now
+      // the codebook next was derived from can release now
       if (cb.storageLevel.useMemory) cb.unpersist()
       cb = next
     }
-    // contiguous cell ids per subspace (positional-lookup contract); the
+    // contiguous codes per subspace (positional-lookup contract); the
     // window runs over the m×ksub codebook rows, not the corpus
-    val reindexed = graft.util.Caches.retain(cb
-      .withColumn("cell", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("cell"))) - 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    reindexed.count()
+    val reindexed = materialized(cb.select(col("subspace"),
+      (row_number().over(Window.partitionBy(col("subspace")).orderBy(col("code"))) - 1)
+        .as(codeCol),
+      col("centroid")))
     cb.unpersist()
     reindexed
   }
 
-  /** PQ encoding: each corpus vector compressed to `m` small codes —
-    * nearest codebook cell per subspace, assembled subspace-ordered into
-    * one `codes` array per row. One corpus scan, one broadcast join, one
-    * hash aggregation; the result is the 100 TB-resident form (m bytes of
-    * information per vector instead of dim floats).
+  /** `frame`'s subvectors as (cId, subspace, sub) rows. */
+  private def subRows(frame: DataFrame, svArr: Column, cId: String): DataFrame =
+    frame.select(col(cId), explode(svArr).as("sv"))
+      .select(col(cId), col("sv.subspace").as("subspace"), col("sv.sub").as("sub"))
+
+  /** The join form's argmin: each (cId, subspace) subvector's nearest
+    * code in a (subspace, code, centroid) codebook — one broadcast join,
+    * one `min_by(code, struct(d2, code))` aggregation (ties to the lower
+    * code) — carrying the subvector along when the caller re-averages.
+    */
+  private def nearestCodes[T](a: Arith[T], subs: DataFrame, book: DataFrame,
+                              cId: String, withSub: Boolean): DataFrame =
+    subs.join(broadcast(book), Seq("subspace"))
+      .groupBy(col(cId), col("subspace"))
+      .agg(min_by(col("code"), struct(a.d2(col("sub"), col("centroid")), col("code")))
+        .as("code"), (if (withSub) Seq(first(col("sub")).as("sub")) else Nil): _*)
+
+  /** PQ encoding in the float arithmetic: each corpus vector compressed
+    * to `m` small codes — nearest codebook cell per subspace, assembled
+    * subspace-ordered into one `codes` array per row; the result is the
+    * 100 TB-resident form (m bytes of information per vector instead of
+    * dim floats). See [[pqCodesWith]].
     */
   def pqCodes(corpus: DataFrame, codebook: DataFrame, dim: Int, m: Int,
               cId: String = "vec_id", cVec: String = "embedding"): DataFrame =
-    collectBookDouble(codebook) match {
-      case Some(book) =>
-        // one projection against the driver-resident codebook (r18) —
-        // same double argmins, no explode/join/re-aggregation
-        corpus.select(col(cId),
-          pqCodesExpr(subvecs(col(cVec), dim, m), m, book, sqDist).as("codes"))
-      case None =>
-        corpus.select(col(cId), explode(subvecs(col(cVec), dim, m)).as("sv"))
-          .select(col(cId), col("sv.subspace").as("subspace"), col("sv.sub").as("sub"))
-          .join(broadcast(codebook), Seq("subspace"))
-          .select(col(cId), col("subspace"), col("cell"),
-            sqDist(col("sub"), col("centroid")).as("d2"))
-          .groupBy(col(cId), col("subspace"))
-          .agg(min_by(col("cell"), struct(col("d2"), col("cell"))).as("code"))
-          .groupBy(col(cId))
-          .agg(array_sort(collect_list(struct(col("subspace"), col("code")))).as("sc"))
-          .select(col(cId), transform(col("sc"), s => s.getField("code")).as("codes"))
-    }
+    pqCodesWith(FloatArith, corpus, codebook, dim, m, cId, cVec)
 
-  /** [[collectBookLong]]'s float twin. */
-  private def collectBookDouble(codebook: DataFrame): Option[DriverBook[Double]] = {
-    val rows = codebook.select(col("subspace"),
-      codebook.columns.find(c => c == "cell" || c == "code")
-        .fold(col("cell"))(col).as("code"), col("centroid")).collect()
-    val entries = rows.map(_.getSeq[Double](2).length.toLong).sum
-    if (entries > ArgminLiteralCap) None
+  /** The PQ encoder in arithmetic `a`: while the codebook's centroid
+    * entries fit under `cap` it is collected ([[collectBook]]) and the
+    * encode is ONE projection (no explode, no broadcast join, no
+    * per-(row, subspace) re-aggregation shuffle); past it, the join form
+    * [[pqEncodeJoin]]. Same argmins either way.
+    */
+  private[operators] def pqCodesWith[T](a: Arith[T], corpus: DataFrame,
+                                        codebook: DataFrame, dim: Int, m: Int,
+                                        cId: String, cVec: String,
+                                        cap: Int = ArgminLiteralCap): DataFrame = {
+    val svArr = subvecs(a.coords(col(cVec)), dim, m)
+    collectBook(a, codebook, cap) match {
+      case Some(book) =>
+        corpus.select(col(cId), pqCodesExpr(a, svArr, m, book).as("codes"))
+      case None => pqEncodeJoin(a, corpus, svArr, codebook, cId)
+    }
+  }
+
+  /** The encoder's join form: one broadcast join, one argmin
+    * aggregation, one subspace-ordered code assembly per row.
+    */
+  private def pqEncodeJoin[T](a: Arith[T], frame: DataFrame, svArr: Column,
+                              codebook: DataFrame, cId: String): DataFrame =
+    nearestCodes(a, subRows(frame, svArr, cId), bookView(a, codebook), cId,
+        withSub = false)
+      .groupBy(col(cId))
+      .agg(array_sort(collect_list(struct(col("subspace"), col("code")))).as("sc"))
+      .select(col(cId), transform(col("sc"), s => s.getField("code")).as("codes"))
+
+  /** A (subspace, cell|code, centroid) codebook as (subspace, code,
+    * centroid) in arithmetic `a`'s types: `cell` wins when both columns
+    * exist, subspace and code cast to int, and the centroid elements to
+    * the family's element type — so a user codebook with a bigint code or
+    * float centroids reads like a trained one.
+    */
+  private def bookView[T](a: Arith[T], codebook: DataFrame): DataFrame = {
+    val code = if (codebook.columns.contains("cell")) "cell" else "code"
+    codebook.select(col("subspace").cast("int").as("subspace"),
+      col(code).cast("int").as("code"),
+      col("centroid").cast(ArrayType(a.elemType)).as("centroid"))
+  }
+
+  /** [[bookView]] collected to a [[DriverBook]] — bounded (m×ksub rows) by
+    * construction; `None` when its centroid entries exceed `cap` (the
+    * caller then runs the join form).
+    */
+  private def collectBook[T](a: Arith[T], codebook: DataFrame,
+                             cap: Int): Option[DriverBook[T]] = {
+    val rows = bookView(a, codebook).collect()
+    val entries = rows.map(_.getSeq[T](2).length.toLong).sum
+    if (entries > cap) None
     else Some(rows.toSeq
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toIndexedSeq))
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[T](2).toIndexedSeq))
       .groupBy(_._1).view
       .mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap)
   }
 
-  /** Asymmetric-distance PQ scores: every (query, corpus vector) pair's
-    * approximate squared L2 distance = Σ_j table[j][code_j], where the
-    * per-query table holds the exact distances from the query's j-th
-    * subvector to every cell centroid. The table (nq × m × ksub doubles)
-    * broadcasts; scoring is ONE narrow pass over the code rows with a
-    * fixed-order fold — no shuffle at all after encoding. Structural
-    * invariant (the recall oracle pins it): a query that exists in the
-    * corpus scores Σ_j min_c d2(q_j, c) — termwise minimal, and IEEE
-    * rounding is monotone under same-order summation — so its own row
-    * ALWAYS achieves the minimum ADC distance.
+  /** Asymmetric-distance PQ scores in the float arithmetic: every (query,
+    * corpus vector) pair's approximate squared L2 distance
+    * = Σ_j table[j][code_j], where the per-query table holds the exact
+    * distances from the query's j-th subvector to every cell centroid.
+    * The table (nq × m × ksub doubles) broadcasts; scoring is ONE narrow
+    * pass over the code rows with a fixed-order fold — no shuffle at all
+    * after encoding. Structural invariant (the recall oracle pins it): a
+    * query that exists in the corpus scores Σ_j min_c d2(q_j, c) —
+    * termwise minimal, and IEEE rounding is monotone under same-order
+    * summation — so its own row ALWAYS achieves the minimum ADC distance.
     */
   def pqScores(queries: DataFrame, codes: DataFrame, codebook: DataFrame,
                dim: Int, m: Int, qId: String = "q_id",
-               qVec: String = "q_vec", cId: String = "vec_id"): DataFrame = {
-    // per-query lookup table, rows ordered (subspace, cell) to match the
-    // positional contract from pqCodebook's re-indexing
-    val qtab = queries
-      .select(col(qId), explode(subvecs(col(qVec), dim, m)).as("sv"))
-      .select(col(qId), col("sv.subspace").as("subspace"), col("sv.sub").as("qsub"))
-      .join(broadcast(codebook), Seq("subspace"))
-      .select(col(qId), col("subspace"), col("cell"),
-        sqDist(col("qsub"), col("centroid")).as("pd2"))
-      .groupBy(col(qId), col("subspace"))
-      .agg(array_sort(collect_list(struct(col("cell"), col("pd2")))).as("cp"))
-      .select(col(qId), col("subspace"),
-        transform(col("cp"), c => c.getField("pd2")).as("row"))
-      .groupBy(col(qId))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("row")))).as("sr"))
-      .select(col(qId), transform(col("sr"), s => s.getField("row")).as("tbl"))
-    codes.join(broadcast(qtab))
-      .select(col(qId), col(cId),
-        aggregate(
-          zip_with(col("codes"), col("tbl"),
-            (c, row) => element_at(row, c.cast("int") + 1)),
-          lit(0.0d), (acc, v) => acc + v).as("adc_dist"))
+               qVec: String = "q_vec", cId: String = "vec_id"): DataFrame =
+    pqScoresWith(FloatArith, queries, codes, codebook, dim, m, qId, qVec, cId)
+
+  private[operators] def pqScoresWith[T](a: Arith[T], queries: DataFrame,
+                                         codes: DataFrame, codebook: DataFrame,
+                                         dim: Int, m: Int, qId: String,
+                                         qVec: String, cId: String): DataFrame = {
+    val tbl = adcTables(a, queries, subvecs(a.coords(col(qVec)), dim, m),
+      codebook, Seq(qId))
+    codes.join(broadcast(tbl))
+      .select(col(qId), col(cId), adcSum(a).as("adc_dist"))
   }
+
+  /** Per-key ADC lookup tables `(keys…, tbl)`: for each subspace
+    * (ascending), the distance from the key's `svArr` subvector to every
+    * code centroid, code-ascending — the positional contract of the
+    * reindexed codebook. keys × m × ksub entries, broadcast-sized.
+    */
+  private def adcTables[T](a: Arith[T], frame: DataFrame, svArr: Column,
+                           codebook: DataFrame, keys: Seq[String]): DataFrame = {
+    val ks = keys.map(col)
+    frame.select(ks :+ explode(svArr).as("sv"): _*)
+      .select(ks ++ Seq(col("sv.subspace").as("subspace"),
+        col("sv.sub").as("qsub")): _*)
+      .join(broadcast(bookView(a, codebook)), Seq("subspace"))
+      .select(ks ++ Seq(col("subspace"), col("code"),
+        a.d2(col("qsub"), col("centroid")).as("pd2")): _*)
+      .groupBy(ks :+ col("subspace"): _*)
+      .agg(array_sort(collect_list(struct(col("code"), col("pd2")))).as("cp"))
+      .select(ks ++ Seq(col("subspace"),
+        transform(col("cp"), c => c.getField("pd2")).as("row")): _*)
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("subspace"), col("row")))).as("sr"))
+      .select(ks :+ transform(col("sr"), s => s.getField("row")).as("tbl"): _*)
+  }
+
+  /** Σ_j tbl[j][codes_j] as a fixed-order fold from the family's zero. */
+  private def adcSum[T](a: Arith[T]): Column =
+    aggregate(
+      zip_with(col("codes"), col("tbl"),
+        (c, row) => element_at(row, c.cast("int") + 1)),
+      a.zero, (acc, v) => acc + v)
+
+  /** The PQ top-k tail: two-stage ascending rank by (adc_dist, cId). */
+  private def adcTopK[T](a: Arith[T], scored: DataFrame, k: Int,
+                         qId: String, cId: String): DataFrame =
+    twoStageTopK(scored.withColumn("__part", spark_partition_id()), k, qId, cId,
+      col("adc_dist"), a.outDist(col("adc_dist")).as("adc_dist"))
 
   /** PQ ANN top-k: train → encode → ADC-score → two-stage ascending
     * top-k (partition-local rank before the global one, same shape as
@@ -887,20 +955,36 @@ object Similarity {
   def pqTopK(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
              m: Int = 4, ksub: Int = 16, iters: Int = 2,
              qId: String = "q_id", qVec: String = "q_vec",
-             cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val cb = pqCodebook(corpus, dim, m, ksub, iters, cId, cVec)
-    val scored = pqScores(queries, pqCodes(corpus, cb, dim, m, cId, cVec),
-      cb, dim, m, qId, qVec, cId)
-      .withColumn("__part", spark_partition_id())
-    val localW = Window.partitionBy(col(qId), col("__part"))
-      .orderBy(col("adc_dist"), col(cId))
-    val globalW = Window.partitionBy(col(qId))
-      .orderBy(col("adc_dist"), col(cId))
-    scored
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
-      .withColumn("rank", row_number().over(globalW)).filter(col("rank") <= k)
-      .select(col(qId), col(cId), round(col("adc_dist"), 6).as("adc_dist"),
-        col("rank"))
+             cId: String = "vec_id", cVec: String = "embedding"): DataFrame =
+    pqTopKWith(FloatArith, queries, corpus, dim, k, m, ksub, iters,
+      qId, qVec, cId, cVec)
+
+  /** FIXED-POINT product quantization — [[pqTopK]] in the [[FixedArith]]
+    * arithmetic (VERDICT r13 #3): training, encoding and the per-query
+    * ADC tables are all integer, so they replay bit-for-bit in SQL (the
+    * ann_pq_topk oracle). `adc_dist` is the exact
+    * Σ_j d2(q_j, centroid[code_j]) in scaled² units; the ranking is the
+    * float form's up to input quantization. The codebook memo keys the
+    * two families apart.
+    */
+  def pqTopKFixed(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
+                  m: Int = 4, ksub: Int = 16, iters: Int = 2,
+                  scale: Long = 1L << 20,
+                  qId: String = "q_id", qVec: String = "q_vec",
+                  cId: String = "vec_id", cVec: String = "embedding"): DataFrame =
+    pqTopKWith(FixedArith(scale), queries, corpus, dim, k, m, ksub, iters,
+      qId, qVec, cId, cVec)
+
+  private[operators] def pqTopKWith[T](a: Arith[T], queries: DataFrame,
+                                       corpus: DataFrame, dim: Int, k: Int,
+                                       m: Int, ksub: Int, iters: Int,
+                                       qId: String, qVec: String,
+                                       cId: String, cVec: String,
+                                       cap: Int = ArgminLiteralCap): DataFrame = {
+    val cb = pqCodebookWith(a, corpus, dim, m, ksub, iters, cId, cVec, cap)
+    val codes = pqCodesWith(a, corpus, cb, dim, m, cId, cVec, cap)
+    adcTopK(a, pqScoresWith(a, queries, codes, cb, dim, m, qId, qVec, cId),
+      k, qId, cId)
   }
 
   /** Per-dimension scalar-quantization bounds — SQ8's entire "codebook":
@@ -1190,32 +1274,6 @@ object Similarity {
     Array.fill(outDim)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** k-NN graph over the whole corpus: each vector's `k` nearest
-    * neighbors by cosine among vectors sharing its k-means cell — the
-    * cluster-then-neighbor blocking of the SemDeDup family
-    * ([[graft.operators.Dedup.semanticNearDuplicates]]), here producing
-    * the neighbor LISTS that downstream curation consumes (graph-based
-    * dedup clustering, label propagation, kNN-classifier quality
-    * scoring à la DataComp). Identical vectors land in the same cell by
-    * construction (the assignment is a deterministic argmax over the
-    * same centroids), so an exact copy is ALWAYS its twin's rank-1
-    * neighbor at cos 1.0 — the structural invariant knn_graph_recall
-    * pins under the oracle; cross-cell near neighbors are subject to
-    * the usual blocking recall trade-off (raise `nCells` resolution, or
-    * probe neighbor cells the ivfTopK way, for higher recall). The
-    * clustering is [[kmeansCellsFixed]] (VERDICT r13 #3): with
-    * integer-trained cells the whole graph — cells, per-cell cosine,
-    * ranks — replays verbatim in the knn_graph oracle, and the cell
-    * quality is the float trainer's up to 2^-20 input quantization.
-    *
-    * Scale shape: ONE cell equi-join (the shuffle keys on the cell id —
-    * never all-pairs, never a cartesian), cells larger than `maxCell`
-    * dropped WHOLE by a count-first pass (the capBuckets stance: a
-    * degenerate clustering degrades to a capped drop, not a quadratic
-    * join), and the per-source top-k window is bounded by the cell size
-    * — at most `maxCell` rows per partition, never the corpus.
-    * Output: `(src, dst, sim, rank)` with rank 1..k per surviving src.
-    */
   /** Semantic eval-set decontamination — the embedding-space sibling of
     * [[Dedup.contaminationReport]] (which flags verbatim n-gram overlap;
     * this flags paraphrased/near-duplicate leakage the token grams miss).
@@ -1246,296 +1304,6 @@ object Similarity {
         (col("__top.sim") >= tau).as("contaminated"))
   }
 
-  /** FIXED-POINT product quantization — [[pqTopK]] on the
-    * [[kmeansCellsFixed]] arithmetic (VERDICT r13 #3): subvectors scale
-    * to longs (`floor(x · 2^20)`, exact), codebook training uses integer
-    * argmin + integral-div means, encoding is integer argmin, and the
-    * per-query ADC tables hold exact integer squared distances — so
-    * training, encoding, and scoring replay bit-for-bit in SQL (the
-    * ann_pq_topk oracle). `adc_dist` is the integer
-    * Σ_j d2(q_j, centroid[code_j]) in scaled² units; the ranking is the
-    * float form's up to input quantization. Same plan shapes and the
-    * same codebook memo protocol as the float family.
-    */
-  def pqTopKFixed(queries: DataFrame, corpus: DataFrame, dim: Int, k: Int,
-                  m: Int = 4, ksub: Int = 16, iters: Int = 2,
-                  scale: Long = 1L << 20,
-                  qId: String = "q_id", qVec: String = "q_vec",
-                  cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
-    val cb = pqCodebookFixed(corpus, dim, m, ksub, iters, scale, cId, cVec)
-    val scored = pqScoresFixed(queries,
-      pqCodesFixed(corpus, cb, dim, m, scale, cId, cVec),
-      cb, dim, m, scale, qId, qVec, cId)
-      .withColumn("__part", spark_partition_id())
-    val localW = Window.partitionBy(col(qId), col("__part"))
-      .orderBy(col("adc_dist"), col(cId))
-    val globalW = Window.partitionBy(col(qId))
-      .orderBy(col("adc_dist"), col(cId))
-    scored
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
-      .withColumn("rank", row_number().over(globalW)).filter(col("rank") <= k)
-      .select(col(qId), col(cId), col("adc_dist"), col("rank"))
-  }
-
-  /** Scaled-long subvector structs — [[subvecs]] over the fixed-point
-    * coordinate map (power-of-two multiply + floor, both exact).
-    */
-  private def subvecsFixed(vec: Column, dim: Int, m: Int, scale: Long): Column =
-    subvecs(transform(vec, x => floor(x * scale).cast("long")), dim, m)
-
-  /** Integer squared L2 distance over two `array<long>` columns — the
-    * native fused-loop kernel (graft.functions.SqDiffLong); integer sums
-    * are order-independent, so bit-identical to the HOF fold.
-    */
-  private def d2Fixed(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      graft.functions.SqDiffLong(
-        org.apache.spark.sql.GraftBridge.expression(a),
-        org.apache.spark.sql.GraftBridge.expression(b)))
-
-  /** [[d2Fixed]]'s composable reference form (tested against the kernel). */
-  private[operators] def d2FixedHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, v) => acc + v)
-
-  /** [[pqCodebook]]'s fixed-point twin: (subspace, cell, centroid) with
-    * `array<long>` centroids. Same single-Lloyd's-loop plan, same memo
-    * (keyed apart from the float family by a "fixed" sentinel + scale).
-    */
-  def pqCodebookFixed(corpus: DataFrame, dim: Int, m: Int, ksub: Int = 16,
-                      iters: Int = 2, scale: Long = 1L << 20,
-                      cId: String = "vec_id",
-                      cVec: String = "embedding"): DataFrame = {
-    require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
-    require(ksub > 0 && iters > 0, s"need positive ksub/iters: $ksub/$iters")
-    require(scale > 0 && (scale & (scale - 1)) == 0,
-      s"scale must be a positive power of two, got $scale")
-    pqCache.compute(
-      (("fixed", corpus.queryExecution.analyzed.canonicalized, scale),
-        dim, m, ksub, iters, cId, cVec),
-      (_, prev) =>
-        if (prev != null && prev.storageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE) prev
-        else trainPqCodebookFixed(corpus, dim, m, ksub, iters, scale, cId, cVec))
-  }
-
-  /** A per-subspace codebook as driver rows: subspace → (code, centroid)
-    * entries, codes ascending. The PQ twin of the kmeans centroid tables —
-    * m×ksub rows of bounded metadata.
-    */
-  private type DriverBook[T] = Map[Int, Seq[(Int, Seq[T])]]
-
-  /** Per-row PQ code array over a driver-resident codebook, as ONE
-    * expression: for each subvector (subspace-ordered, the [[subvecs]]
-    * contract), the code minimizing the supplied distance — ties to the
-    * lower code, `min_by(code, struct(d2, code))` verbatim. The encode
-    * pass and each trainer iteration become pure projections: no
-    * corpus×ksub broadcast-join explosion, no per-(row, subspace)
-    * re-aggregation shuffle (r18, guide §2.3/§2.4 + VERDICT r17 #4).
-    */
-  private def pqCodesExpr[T: scala.reflect.runtime.universe.TypeTag](
-      svArr: Column, m: Int, book: DriverBook[T],
-      d2Of: (Column, Column) => Column): Column =
-    transform(svArr, sv => {
-      val sub = sv.getField("sub")
-      (0 until m).foldLeft(lit(null).cast("int")) { (acc, j) =>
-        val entries = book.getOrElse(j, Seq.empty)
-        if (entries.isEmpty) acc
-        else {
-          val ds = array(entries.map { case (_, cent) =>
-            d2Of(sub, typedLit(cent)) }: _*)
-          when(sv.getField("subspace") === j,
-            element_at(typedLit(entries.map(_._1)),
-              array_position(ds, array_min(ds)).cast("int"))).otherwise(acc)
-        }
-      }
-    })
-
-  /** One Lloyd's refinement pass over subvector rows with the assignment
-    * inlined: (subspace, code, pos) means in a single job, collected back
-    * to a [[DriverBook]]. Codes that lost every member vanish, exactly
-    * like the aggregate form.
-    */
-  private def pqRefitFixed(frame: DataFrame, svArr: Column, m: Int,
-                           book: DriverBook[Long]): DriverBook[Long] = {
-    val codes = pqCodesExpr[Long](svArr, m, book, d2Fixed)
-    frame
-      .select(codes.as("__codes"),
-        posexplode(svArr).as(Seq("__j", "__sv")))
-      .select(col("__sv").getField("subspace").as("subspace"),
-        element_at(col("__codes"), col("__j") + 1).as("code"),
-        posexplode(col("__sv").getField("sub")).as(Seq("pos", "v")))
-      .groupBy("subspace", "code", "pos")
-      .agg(expr("sum(v) div count(v)").as("mv"))
-      .collect()
-      .groupBy(r => (r.getInt(0), r.getInt(1))).toSeq
-      .map { case ((j, code), rows) =>
-        (j, code, rows.sortBy(_.getInt(2)).map(_.getLong(3)).toIndexedSeq)
-      }
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap
-  }
-
-  /** Contiguous per-subspace code reindex (positional-lookup contract) —
-    * the aggregate form's `row_number over (subspace order by cell)`,
-    * done on the driver rows.
-    */
-  private def reindexBook[T](book: DriverBook[T]): DriverBook[T] =
-    book.view.mapValues(_.sortBy(_._1).zipWithIndex
-      .map { case ((_, cent), i) => (i, cent) }).toMap
-
-  private def bookRows[T](book: DriverBook[T]): Seq[(Int, Int, Seq[T])] =
-    book.toSeq.sortBy(_._1).flatMap { case (j, es) =>
-      es.map { case (c, cent) => (j, c, cent) }
-    }
-
-  private def trainPqCodebookFixed(corpus: DataFrame, dim: Int, m: Int,
-                                   ksub: Int, iters: Int, scale: Long,
-                                   cId: String, cVec: String): DataFrame = {
-    val spark = corpus.sparkSession
-    if (ksub.toLong * dim > ArgminLiteralCap)
-      return trainPqCodebookFixedJoinLoop(corpus, dim, m, ksub, iters, scale,
-        cId, cVec)
-    val svArr = subvecsFixed(col(cVec), dim, m, scale)
-    // seeds: the ksub lowest-id rows (TakeOrdered returns them sorted), one
-    // seed subvector per subspace, code = the seed's id rank
-    val seedRows = corpus.orderBy(col(cId)).limit(ksub)
-      .select(svArr.as("svs")).collect()
-    var book: DriverBook[Long] = (0 until m).map { j =>
-      j -> seedRows.toSeq.zipWithIndex.map { case (r, i) =>
-        (i, r.getSeq[org.apache.spark.sql.Row](0)(j).getSeq[Long](1).toIndexedSeq)
-      }
-    }.toMap
-    for (_ <- 1 to iters)
-      book = pqRefitFixed(corpus, svArr, m, book)
-    val reindexed = reindexBook(book)
-    import spark.implicits._
-    // LocalRelation result; persisted + retained so the pqCache liveness
-    // check (storageLevel != NONE) keeps recognizing a live memo entry
-    val df = graft.util.Caches.retain(
-      spark.createDataset(bookRows(reindexed))
-        .toDF("subspace", "cell", "centroid")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    df.count()
-    df
-  }
-
-  /** The pre-r18 broadcast-join PQ trainer, kept as the past-cap
-    * fallback.
-    */
-  private def trainPqCodebookFixedJoinLoop(corpus: DataFrame, dim: Int, m: Int,
-                                           ksub: Int, iters: Int, scale: Long,
-                                           cId: String, cVec: String): DataFrame = {
-    val subs = corpus.select(col(cId).as("__id"),
-      explode(subvecsFixed(col(cVec), dim, m, scale)).as("sv"))
-      .select(col("__id"), col("sv.subspace").as("subspace"),
-        col("sv.sub").as("sub"))
-    var cb = corpus.orderBy(col(cId)).limit(ksub)
-      .select(col(cId).as("__id"),
-        explode(subvecsFixed(col(cVec), dim, m, scale)).as("sv"))
-      .select(col("__id"), col("sv.subspace").as("subspace"),
-        col("sv.sub").as("sub"))
-      .withColumn("cell", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("__id"))) - 1)
-      .select(col("subspace"), col("cell"), col("sub").as("centroid"))
-    for (_ <- 1 to iters) {
-      val assigned = subs.join(broadcast(cb), Seq("subspace"))
-        .select(col("__id"), col("subspace"), col("sub"), col("cell"),
-          d2Fixed(col("sub"), col("centroid")).as("d2"))
-        .groupBy(col("__id"), col("subspace"))
-        .agg(min_by(col("cell"), struct(col("d2"), col("cell"))).as("cell"),
-          first(col("sub")).as("sub"))
-      val next = assigned
-        .select(col("subspace"), col("cell"),
-          posexplode(col("sub")).as(Seq("pos", "v")))
-        .groupBy("subspace", "cell", "pos")
-        .agg(expr("sum(v) div count(v)").as("mv"))
-        .groupBy("subspace", "cell")
-        .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-        .select(col("subspace"), col("cell"),
-          transform(col("pm"), p => p.getField("mv")).as("centroid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      if (cb.storageLevel.useMemory) cb.unpersist()
-      cb = next
-    }
-    val reindexed = graft.util.Caches.retain(cb
-      .withColumn("cell", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("cell"))) - 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    reindexed.count()
-    cb.unpersist()
-    reindexed
-  }
-
-  /** Collect a (subspace, cell|code, centroid) codebook frame to a
-    * [[DriverBook]] — bounded (m×ksub rows) by construction; `None` past
-    * the literal cap routes callers to the join form.
-    */
-  private def collectBookLong(codebook: DataFrame): Option[DriverBook[Long]] = {
-    val rows = codebook.select(col("subspace"),
-      codebook.columns.find(c => c == "cell" || c == "code")
-        .fold(col("cell"))(col).as("code"), col("centroid")).collect()
-    val entries = rows.map(_.getSeq[Long](2).length.toLong).sum
-    if (entries > ArgminLiteralCap) None
-    else Some(rows.toSeq
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toIndexedSeq))
-      .groupBy(_._1).view
-      .mapValues(_.map(t => (t._2, t._3)).sortBy(_._1)).toMap)
-  }
-
-  /** [[pqCodes]]'s fixed-point twin: integer argmin encoding — ONE
-    * projection against the driver-resident codebook (no explode, no
-    * broadcast join, no per-(row, subspace) re-aggregation shuffle; the
-    * values are the same integer argmins). Past the literal cap the
-    * original join form runs.
-    */
-  def pqCodesFixed(corpus: DataFrame, codebook: DataFrame, dim: Int, m: Int,
-                   scale: Long = 1L << 20, cId: String = "vec_id",
-                   cVec: String = "embedding"): DataFrame =
-    collectBookLong(codebook) match {
-      case Some(book) =>
-        corpus.select(col(cId),
-          pqCodesExpr(subvecsFixed(col(cVec), dim, m, scale), m, book,
-            d2Fixed).as("codes"))
-      case None =>
-        corpus.select(col(cId), explode(subvecsFixed(col(cVec), dim, m, scale)).as("sv"))
-          .select(col(cId), col("sv.subspace").as("subspace"), col("sv.sub").as("sub"))
-          .join(broadcast(codebook), Seq("subspace"))
-          .select(col(cId), col("subspace"), col("cell"),
-            d2Fixed(col("sub"), col("centroid")).as("d2"))
-          .groupBy(col(cId), col("subspace"))
-          .agg(min_by(col("cell"), struct(col("d2"), col("cell"))).as("code"))
-          .groupBy(col(cId))
-          .agg(array_sort(collect_list(struct(col("subspace"), col("code")))).as("sc"))
-          .select(col(cId), transform(col("sc"), s => s.getField("code")).as("codes"))
-    }
-
-  /** [[pqScores]]'s fixed-point twin: integer ADC tables, long sums. */
-  def pqScoresFixed(queries: DataFrame, codes: DataFrame, codebook: DataFrame,
-                    dim: Int, m: Int, scale: Long = 1L << 20,
-                    qId: String = "q_id", qVec: String = "q_vec",
-                    cId: String = "vec_id"): DataFrame = {
-    val qtab = queries
-      .select(col(qId), explode(subvecsFixed(col(qVec), dim, m, scale)).as("sv"))
-      .select(col(qId), col("sv.subspace").as("subspace"), col("sv.sub").as("qsub"))
-      .join(broadcast(codebook), Seq("subspace"))
-      .select(col(qId), col("subspace"), col("cell"),
-        d2Fixed(col("qsub"), col("centroid")).as("pd2"))
-      .groupBy(col(qId), col("subspace"))
-      .agg(array_sort(collect_list(struct(col("cell"), col("pd2")))).as("cp"))
-      .select(col(qId), col("subspace"),
-        transform(col("cp"), c => c.getField("pd2")).as("row"))
-      .groupBy(col(qId))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("row")))).as("sr"))
-      .select(col(qId), transform(col("sr"), s => s.getField("row")).as("tbl"))
-    codes.join(broadcast(qtab))
-      .select(col(qId), col(cId),
-        aggregate(
-          zip_with(col("codes"), col("tbl"),
-            (c, row) => element_at(row, c.cast("int") + 1)),
-          lit(0L), (acc, v) => acc + v).as("adc_dist"))
-  }
-
   /** IVF-PQ composite index, fixed-point (the FAISS `IVFx,PQy` structure
     * — THE production layout for billion-vector search: the coarse
     * quantizer prunes the scan to nprobe/nlist of the corpus, and PQ
@@ -1544,12 +1312,12 @@ object Similarity {
     * budget quantizes them far better than raw vectors — the reason the
     * composite beats flat PQ at equal bytes):
     *
-    *  1. coarse cells: [[kmeansCellsFixed]] (integer Lloyd's);
+    *  1. coarse cells: the [[kmeans]] trainer in [[FixedArith]];
     *  2. coarse centroids: integral-div means over the FINAL assignment
     *     — still scaled longs, so residual subtraction is exact;
-    *  3. PQ codebook trained per subspace on the residuals (the same
-    *     integer trainer as [[pqCodebookFixed]], seeds = the ksub
-    *     lowest-id vectors' residuals);
+    *  3. PQ codebook trained per subspace on the residuals (the
+    *     [[pqTrain]] trainer, seeds = the ksub lowest-id vectors'
+    *     residuals);
     *  4. query: probe the `nprobe` nearest coarse cells by integer d²,
     *     build ONE ADC table per (query, probed cell) from the
     *     PER-CELL query residual — the asymmetric-distance detail that
@@ -1577,141 +1345,60 @@ object Similarity {
 
   /** The train/encode half of [[ivfPqTopKFixed]]: coarse cells, final
     * coarse centroids, residual PQ codebook, and the encoded corpus —
-    * the four artifacts a serving tier stores.
+    * the four artifacts a serving tier stores. Each leg runs its
+    * driver-resident form under its cap — the coarse assignment and
+    * residual as ONE projection (no corpus self-join to attach cells),
+    * the residual encode as a final projection — and its join form past
+    * it. All-integer, so either form gives bit-identical artifacts.
     */
-  private def ivfPqIndex(corpus: DataFrame, dim: Int, nCells: Int, m: Int,
-                         ksub: Int, itersIvf: Int, itersPq: Int, scale: Long,
-                         cId: String, cVec: String)
+  private[operators] def ivfPqIndex(corpus: DataFrame, dim: Int, nCells: Int,
+                                    m: Int, ksub: Int, itersIvf: Int,
+                                    itersPq: Int, scale: Long,
+                                    cId: String, cVec: String,
+                                    coarseCap: Int = ArgminLiteralCap,
+                                    pqCap: Int = ArgminLiteralCap)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
+    val a = FixedArith(scale)
     val spark = corpus.sparkSession
-    val scaled0 = corpus.select(col(cId),
-      transform(col(cVec), x => floor(x * scale).cast("long")).as("__sv"))
-    // r18 (guide §2.3/§2.4, VERDICT r17 #4): coarse training via
-    // kmeansFixedTrain (driver-resident centroids), the coarse assignment
-    // + residual as ONE projection (no corpus self-join to attach cells),
-    // the residual-PQ trainer as one means job per iteration, and the
-    // encode as a final projection. All-integer → bit-identical to the
-    // join forms; past the literal caps the pre-r18 join pipeline runs
-    // unchanged below.
-    val trained =
-      if (ksub.toLong * dim > ArgminLiteralCap) None
-      else kmeansFixedTrain(scaled0, nCells, itersIvf, cId).filter(_.nonEmpty)
-    trained match {
-      case Some(coarse) =>
-        import spark.implicits._
-        val cellCol = argminCellFixed(col("__sv"), coarse)
-        // final coarse centroids at the trained assignment (integral-div
-        // means — one job, nCells×dim driver rows)
-        val ccRows: Seq[(Int, Seq[Long])] = scaled0
-          .select(cellCol.as("cell"), posexplode(col("__sv")).as(Seq("pos", "v")))
-          .groupBy("cell", "pos").agg(expr("sum(v) div count(v)").as("m"))
-          .collect()
-          .groupBy(_.getInt(0)).toSeq
-          .map { case (cell, rows) =>
-            (cell, rows.sortBy(_.getInt(1)).map(_.getLong(2)).toIndexedSeq)
-          }
-          .sortBy(_._1)
-        val ccLit = typedLit(ccRows.toMap)
-        // residuals: exact long subtraction against the row's own cell
-        // centroid — persisted, the PQ trainer makes itersPq passes and
-        // the encoder one more
-        val resid = graft.util.Caches.retain(
-          scaled0.select(col(cId), cellCol.as("cell"), col("__sv"))
+    import spark.implicits._
+    val scaled = corpus.select(col(cId), a.coords(col(cVec)).as("__sv"))
+    // coarse leg: the final coarse centroids (cell, __cc), and each row's
+    // residual — exact long subtraction against its own cell's centroid
+    val (cc, residual) =
+      lloydsTrain(a, scaled, nCells, itersIvf, cId, coarseCap) match {
+        case Some(coarse) =>
+          val cell = argBestCell(a, col("__sv"), coarse)
+          // final centroids at the trained assignment: one job, nCells×dim
+          // driver rows
+          val ccRows = cellMeans(a, scaled, cell)
+          val ccLit = typedLit(ccRows.toMap)
+          (spark.createDataset(ccRows).toDF("cell", "__cc"),
+            scaled.select(col(cId), cell.as("cell"), col("__sv"))
+              .select(col(cId), col("cell"),
+                zip_with(col("__sv"), element_at(ccLit, col("cell")),
+                  (x, y) => x - y).as("__rv")))
+        case None =>
+          val withCell = scaled.join(lloydsJoinLoop(a, scaled, nCells, itersIvf, cId), cId)
+          val cc = materialized(meansFrame(a, withCell, Seq("cell"), "__sv", "__cc"))
+          (cc, withCell.join(broadcast(cc), Seq("cell"))
             .select(col(cId), col("cell"),
-              zip_with(col("__sv"), element_at(ccLit, col("cell")),
-                (a, b) => a - b).as("__rv"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val rsv = subvecs(col("__rv"), dim, m)
-        // seeds = the ksub lowest-id rows' residual subvectors, code = id
-        // rank (the trainPqCodebookFixed protocol verbatim)
-        val seedRows = resid.orderBy(col(cId)).limit(ksub)
-          .select(rsv.as("svs")).collect()
-        var book: DriverBook[Long] = (0 until m).map { j =>
-          j -> seedRows.toSeq.zipWithIndex.map { case (r, i) =>
-            (i, r.getSeq[org.apache.spark.sql.Row](0)(j).getSeq[Long](1).toIndexedSeq)
-          }
-        }.toMap
-        for (_ <- 1 to itersPq)
-          book = pqRefitFixed(resid, rsv, m, book)
-        val finalBook = reindexBook(book)
-        val codesCol = pqCodesExpr(rsv, m, finalBook, d2Fixed)
-        val cells = resid.select(col(cId), col("cell"))
-        val cc = spark.createDataset(ccRows.map(t => (t._1, t._2)))
-          .toDF("cell", "__cc")
-        val cbf = spark.createDataset(bookRows(finalBook))
-          .toDF("subspace", "code", "centroid")
-        val codes = resid.select(col(cId), codesCol.as("codes"))
-        return (cells, cc, cbf, codes)
-      case None => () // past a literal cap — the join pipeline below
-    }
-    val cells = kmeansCellsFixed(corpus, nCells, itersIvf, scale, cId, cVec)
-    val scaled = scaled0.join(cells, cId)
-    // final coarse centroids at the trained assignment — integral-div
-    // means keep everything on the integer lattice
-    val cc0 = scaled
-      .select(col("cell"), posexplode(col("__sv")).as(Seq("pos", "v")))
-      .groupBy("cell", "pos").agg(expr("sum(v) div count(v)").as("m"))
-      .groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), p => p.getField("m")).as("__cc"))
-    val cc = graft.util.Caches.retain(
-      cc0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cc.count()
-    // residuals: exact long subtraction; persisted — the PQ trainer makes
-    // itersPq passes and the encoder one more
-    val resid = graft.util.Caches.retain(
-      scaled.join(broadcast(cc), Seq("cell"))
-        .select(col(cId), col("cell"),
-          zip_with(col("__sv"), col("__cc"), (a, b) => a - b).as("__rv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val rsubs = resid
-      .select(col(cId).as("__id"), explode(subvecs(col("__rv"), dim, m)).as("sv"))
-      .select(col("__id"), col("sv.subspace").as("subspace"), col("sv.sub").as("sub"))
-    // per-subspace integer Lloyd's over residual subvectors — the
-    // trainPqCodebookFixed protocol verbatim: seeds = ksub lowest-id
-    // residuals, itersPq assign+refit rounds, contiguous reindex, then
-    // ONE encode pass against the final codebook
-    var cb = rsubs.join(broadcast(
-        resid.orderBy(col(cId)).limit(ksub).select(col(cId).as("__id"))),
-        Seq("__id"))
-      .withColumn("code", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("__id"))) - 1)
-      .select(col("subspace"), col("code"), col("sub").as("centroid"))
-    def assignTo(book: DataFrame): DataFrame =
-      rsubs.join(broadcast(book), Seq("subspace"))
-        .select(col("__id"), col("subspace"), col("sub"), col("code"),
-          d2Fixed(col("sub"), col("centroid")).as("d2"))
-        .groupBy(col("__id"), col("subspace"))
-        .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"),
-          first(col("sub")).as("sub"))
-    for (_ <- 1 to itersPq) {
-      val next = assignTo(cb)
-        .select(col("subspace"), col("code"),
-          posexplode(col("sub")).as(Seq("pos", "v")))
-        .groupBy("subspace", "code", "pos")
-        .agg(expr("sum(v) div count(v)").as("mv"))
-        .groupBy("subspace", "code")
-        .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
-        .select(col("subspace"), col("code"),
-          transform(col("pm"), p => p.getField("mv")).as("centroid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      if (cb.storageLevel.useMemory) cb.unpersist()
-      cb = next
-    }
-    val cbf = graft.util.Caches.retain(cb
-      .withColumn("code", row_number().over(
-        Window.partitionBy(col("subspace")).orderBy(col("code"))) - 1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    cbf.count()
-    cb.unpersist()
-    val codes = assignTo(cbf)
-      .groupBy(col("__id"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("code")))).as("sc"))
-      .select(col("__id").as(cId),
-        transform(col("sc"), s => s.getField("code")).as("codes"))
-    (cells, cc, cbf, codes)
+              zip_with(col("__sv"), col("__cc"), (x, y) => x - y).as("__rv")))
+      }
+    // persisted: the PQ trainer makes itersPq passes and the encoder one more
+    val resid = graft.util.Caches.retain(residual.persist(StorageLevel.MEMORY_AND_DISK))
+    val rsv = subvecs(col("__rv"), dim, m)
+    // residual-PQ leg: (subspace, code, centroid) and the encoded corpus
+    val (cbf, codes) =
+      if (ksub.toLong * dim > pqCap) {
+        val cb = pqTrainJoinLoop(a, resid, rsv, m, ksub, itersPq, cId, "code")
+        (cb, pqEncodeJoin(a, resid, rsv, cb, cId))
+      } else {
+        val book = pqTrain(a, resid, rsv, m, ksub, itersPq, cId)
+        (spark.createDataset(bookRows(book)).toDF("subspace", "code", "centroid"),
+          resid.select(col(cId), pqCodesExpr(a, rsv, m, book).as("codes")))
+      }
+    (resid.select(col(cId), col("cell")), cc, cbf, codes)
   }
 
   /** Train the IVF-PQ index ONCE and commit its four artifacts — cell
@@ -1766,58 +1453,60 @@ object Similarity {
   /** The query side of [[ivfPqTopKFixed]]: integer probe, per-(query,
     * cell) residual ADC tables, pruned candidate scoring, top-k.
     */
-  private def ivfPqScore(queries: DataFrame, codes: DataFrame,
-                         cells: DataFrame, cc: DataFrame, cb: DataFrame,
-                         dim: Int, k: Int, nprobe: Int, m: Int, scale: Long,
-                         qId: String, qVec: String, cId: String): DataFrame = {
-    val qscaled = queries.select(col(qId),
-      transform(col(qVec), x => floor(x * scale).cast("long")).as("__qv"))
+  private[operators] def ivfPqScore(queries: DataFrame, codes: DataFrame,
+                                    cells: DataFrame, cc: DataFrame, cb: DataFrame,
+                                    dim: Int, k: Int, nprobe: Int, m: Int,
+                                    scale: Long, qId: String, qVec: String,
+                                    cId: String): DataFrame = {
+    val a = FixedArith(scale)
+    val qscaled = queries.select(col(qId), a.coords(col(qVec)).as("__qv"))
     val probeW = Window.partitionBy(col(qId)).orderBy(col("__d2"), col("cell"))
     val probes = qscaled.join(broadcast(cc))
       .select(col(qId), col("__qv"), col("cell"), col("__cc"),
-        d2Fixed(col("__qv"), col("__cc")).as("__d2"))
+        a.d2(col("__qv"), col("__cc")).as("__d2"))
       .withColumn("__r", row_number().over(probeW)).filter(col("__r") <= nprobe)
       .select(col(qId), col("cell"),
-        zip_with(col("__qv"), col("__cc"), (a, b) => a - b).as("__qr"))
-    val tbl = probes
-      .select(col(qId), col("cell"), explode(subvecs(col("__qr"), dim, m)).as("sv"))
-      .select(col(qId), col("cell"), col("sv.subspace").as("subspace"),
-        col("sv.sub").as("qsub"))
-      .join(broadcast(cb), Seq("subspace"))
-      .select(col(qId), col("cell"), col("subspace"), col("code"),
-        d2Fixed(col("qsub"), col("centroid")).as("pd2"))
-      .groupBy(col(qId), col("cell"), col("subspace"))
-      .agg(array_sort(collect_list(struct(col("code"), col("pd2")))).as("cp"))
-      .select(col(qId), col("cell"), col("subspace"),
-        transform(col("cp"), c => c.getField("pd2")).as("row"))
-      .groupBy(col(qId), col("cell"))
-      .agg(array_sort(collect_list(struct(col("subspace"), col("row")))).as("sr"))
-      .select(col(qId), col("cell"),
-        transform(col("sr"), s => s.getField("row")).as("tbl"))
+        zip_with(col("__qv"), col("__cc"), (x, y) => x - y).as("__qr"))
+    val tbl = adcTables(a, probes, subvecs(col("__qr"), dim, m), cb,
+      Seq(qId, "cell"))
     val scored = codes.join(cells, cId).join(broadcast(tbl), Seq("cell"))
-      .select(col(qId), col(cId),
-        aggregate(
-          zip_with(col("codes"), col("tbl"),
-            (c, row) => element_at(row, c.cast("int") + 1)),
-          lit(0L), (acc, v) => acc + v).as("adc_dist"))
-      .withColumn("__part", spark_partition_id())
-    val localW = Window.partitionBy(col(qId), col("__part"))
-      .orderBy(col("adc_dist"), col(cId))
-    val globalW = Window.partitionBy(col(qId)).orderBy(col("adc_dist"), col(cId))
-    scored
-      .withColumn("__lr", row_number().over(localW)).filter(col("__lr") <= k)
-      .withColumn("rank", row_number().over(globalW)).filter(col("rank") <= k)
-      .select(col(qId), col(cId), col("adc_dist"), col("rank"))
+      .select(col(qId), col(cId), adcSum(a).as("adc_dist"))
+    adcTopK(a, scored, k, qId, cId)
   }
 
+  /** k-NN graph over the whole corpus: each vector's `k` nearest
+    * neighbors by cosine among vectors sharing its k-means cell — the
+    * cluster-then-neighbor blocking of the SemDeDup family
+    * ([[graft.operators.Dedup.semanticNearDuplicates]]), here producing
+    * the neighbor LISTS that downstream curation consumes (graph-based
+    * dedup clustering, label propagation, kNN-classifier quality
+    * scoring à la DataComp). Identical vectors land in the same cell by
+    * construction (the assignment is a deterministic argmin over the
+    * same centroids), so an exact copy is ALWAYS its twin's rank-1
+    * neighbor at cos 1.0 — the structural invariant knn_graph_recall
+    * pins under the oracle; cross-cell near neighbors are subject to
+    * the usual blocking recall trade-off (raise `nCells` resolution, or
+    * probe neighbor cells the ivfTopK way, for higher recall). The
+    * clustering is the fixed-point [[kmeans]] (VERDICT r13 #3), its cell
+    * attached as a projection (no vectors⋈assignment self-join): with
+    * integer-trained cells the whole graph — cells, per-cell cosine,
+    * ranks — replays verbatim in the knn_graph oracle, and the cell
+    * quality is the float trainer's up to 2^-20 input quantization.
+    *
+    * Scale shape: ONE cell equi-join (the shuffle keys on the cell id —
+    * never all-pairs, never a cartesian), cells larger than `maxCell`
+    * dropped WHOLE by a count-first pass (the capBuckets stance: a
+    * degenerate clustering degrades to a capped drop, not a quadratic
+    * join), and the per-source top-k window is bounded by the cell size
+    * — at most `maxCell` rows per partition, never the corpus.
+    * Output: `(src, dst, sim, rank)` with rank 1..k per surviving src.
+    */
   def knnGraph(vectors: DataFrame, k: Int, nCells: Int = 16,
                iters: Int = 3, maxCell: Int = 10000,
                cId: String = "vec_id", cVec: String = "embedding"): DataFrame = {
     require(k > 0, s"knnGraph needs a positive k, got $k")
-    // cell attached as a projection — no vectors⋈assignment self-join
-    // (r18; same trained assignment, see kmeansCellsFixedAttach)
-    val assigned = kmeansCellsFixedAttach(vectors, nCells, iters,
-      cId = cId, cVec = cVec)
+    val assigned = kmeans(FixedArith(1L << 20), vectors, nCells, iters,
+      cId, cVec, attach = true)
     val kept = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("__n")).filter(col("__n") <= maxCell)
       .select(col("cell"))
@@ -1857,7 +1546,7 @@ object Similarity {
     require(k >= 1 && k <= nCandidates,
       s"need 1 <= k <= nCandidates, got $k/$nCandidates")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1]: $lambda")
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val mem = StorageLevel.MEMORY_AND_DISK
     // candidates with their vectors: both the pair frame and every greedy
     // step read them — persist once (nQueries × nCandidates rows)
     val cand = graft.util.Caches.retain(

@@ -158,8 +158,12 @@ object AnnStream {
     * suite.
     */
   def writer(vecs: DataFrame, workDir: String, checkpointDir: String,
-             k: Int, iters: Int = 2, refitEvery: Int = 2): DataStreamWriter[Row] =
+             k: Int, iters: Int = 2, refitEvery: Int = 2): DataStreamWriter[Row] = {
+    // k < 1 would publish an empty centroid table on the first refit, and
+    // every later frozen assignment would then write NULL cells
+    require(k >= 1, s"AnnStream needs at least one cell, got k=$k")
     vecs.writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(ingestBatch(workDir, k, iters, refitEvery) _)
+  }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.functions.col
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{HofForms, Similarity}
 
 /** Native DotProduct expression vs the HOF reference formulation, plus the
   * SQL registration through GraftExtensions.
@@ -20,7 +20,7 @@ class DotProductSpec extends SparkSpec {
   test("native dot equals the HOF formulation bit-for-bit on equal-length vectors") {
     val out = equalLen.select(col("id"),
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof")).collect()
+      HofForms.dotHof(col("a"), col("b")).as("hof")).collect()
     out.foreach { r =>
       assert(r.getDouble(1) == r.getDouble(2), s"mismatch for id ${r.getLong(0)}")
     }
@@ -33,7 +33,7 @@ class DotProductSpec extends SparkSpec {
   test("length mismatch: native uses the common prefix (HOF nulls out)") {
     val df = Seq((Seq(1.5), Seq(2.0, 9.0))).toDF("a", "b")
     assert(df.select(Similarity.dot(col("a"), col("b"))).collect()(0).getDouble(0) == 3.0)
-    assert(df.select(Similarity.dotHof(col("a"), col("b"))).collect()(0).isNullAt(0))
+    assert(df.select(HofForms.dotHof(col("a"), col("b"))).collect()(0).isNullAt(0))
   }
 
   test("a null ELEMENT yields null, matching the HOF chain (never a silent 0)") {
@@ -43,7 +43,7 @@ class DotProductSpec extends SparkSpec {
     ).toDF("id", "a", "b")
     val out = df.select(col("id"),
       Similarity.dot(col("a"), col("b")).as("native"),
-      Similarity.dotHof(col("a"), col("b")).as("hof")).collect()
+      HofForms.dotHof(col("a"), col("b")).as("hof")).collect()
       .map(r => r.getLong(0) -> (r.isNullAt(1), r.isNullAt(2))).toMap
     assert(out(1L) == ((true, true)))   // null element → both null
     assert(out(2L) == ((false, false))) // clean row unaffected

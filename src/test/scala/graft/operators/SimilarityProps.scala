@@ -29,7 +29,7 @@ object SimilarityProps extends Properties("Similarity") {
           .toDF("id", "a", "b")
         df.select(
             Similarity.dot(col("a"), col("b")).as("n"),
-            Similarity.dotHof(col("a"), col("b")).as("h"))
+            HofForms.dotHof(col("a"), col("b")).as("h"))
           .collect()
           .forall { r =>
             // == on doubles: bit-identical is the contract (both are NaN-free

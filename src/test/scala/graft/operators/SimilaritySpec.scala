@@ -98,6 +98,27 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("pqCodes reads a user codebook typed bigint/float like an int/double one") {
+    import org.apache.spark.sql.functions.{col, lit}
+    // exactly representable centroids, so the float cast loses nothing
+    val book = Seq((0, 0, Seq(0.0, 0.0)), (0, 1, Seq(10.0, 10.0)),
+      (1, 0, Seq(0.0, 0.0)), (1, 1, Seq(10.0, 10.0)))
+      .toDF("subspace", "cell", "centroid")
+    def codes(cb: org.apache.spark.sql.DataFrame) =
+      Similarity.pqCodes(pqCorpus, cb, dim = 4, m = 2).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val expected = codes(book)
+    assert(expected(1L) == Seq(0, 1) && expected(3L) == Seq(1, 0))
+    val typed = book.select(col("subspace").cast("bigint").as("subspace"),
+      col("cell").cast("bigint").as("cell"),
+      col("centroid").cast("array<float>").as("centroid"))
+    assert(codes(typed) == expected)
+    // `cell` is the code column even when a `code` column precedes it
+    val both = book.select(col("subspace"), (lit(1) - col("cell")).as("code"),
+      col("cell"), col("centroid"))
+    assert(codes(both) == expected)
+  }
+
   test("pqTopK: self is rank 1, opposite-group vectors rank below neighbors") {
     val q = Seq((1L, Seq(0.0, 0.0, 10.0, 10.0))).toDF("q_id", "q_vec")
     val out = Similarity.pqTopK(q, pqCorpus, dim = 4, k = 6, m = 2, ksub = 2)

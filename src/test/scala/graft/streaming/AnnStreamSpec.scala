@@ -101,4 +101,16 @@ class AnnStreamSpec extends SparkSpec {
     assert(top.forall(r => r.getAs[Long]("vec_id") < 10L),
       "nprobe=1 stays inside the query's own cluster cell")
   }
+
+  test("writer rejects k < 1 before any batch runs") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, Seq[Double])]
+    // with no cell, the first refit would publish an empty centroid table
+    // and every frozen assignment after it would write NULL cells
+    intercept[IllegalArgumentException] {
+      AnnStream.writer(in.toDF().toDF("vec_id", "embedding"),
+        tmp("annspec_k0"), tmp("annspec_k0_cp"), k = 0)
+    }
+  }
 }
