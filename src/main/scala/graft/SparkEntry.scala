@@ -257,7 +257,7 @@ object SparkEntry {
     // round 16: the crash-tolerant EXIF pass (per-record malformed flag
     // over a corpus with planted corrupt + fill-byte-padded records) and
     // the stored-index IVF-PQ serving tier (train-once-commit, serve
-    // from SnapshotStore artifacts)
+    // from stored artifacts)
     "mm_exif_tolerant", "ann_ivfpq_served",
     // round 16b: the fixed-point spectrogram (integer Chebyshev twiddles,
     // per-frame scaled-long DFT energy — the ASR-prep spectral signal)

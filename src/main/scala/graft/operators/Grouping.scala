@@ -43,11 +43,17 @@ object Grouping {
     * products). Implemented with the double-anti-join trick: a key fails ∀
     * iff it has at least one value anti-joining `dim`; subtract those keys.
     * Two equi-joins, no cartesian, no per-key loop.
+    *
+    * The dim key is projected under a fresh alias first: when `dim`
+    * derives from `facts` (e.g. `facts.select(v).distinct()`), `dim(dimKey)`
+    * resolves to the same attribute as `facts(valueCol)`, and the join
+    * condition would fold to the trivially true `v = v`.
     */
   def allValuesPresent(facts: DataFrame, keyCol: String, valueCol: String,
                        dim: DataFrame, dimKey: String): DataFrame = {
+    val dimKeys = dim.select(col(dimKey).as("__dim_key"))
     val failing = facts
-      .join(dim, facts(valueCol) === dim(dimKey), "left_anti")
+      .join(dimKeys, facts(valueCol) === dimKeys("__dim_key"), "left_anti")
       .select(col(keyCol)).distinct()
     facts.select(col(keyCol)).distinct()
       .join(failing, Seq(keyCol), "left_anti")

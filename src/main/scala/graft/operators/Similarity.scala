@@ -209,8 +209,19 @@ object Similarity {
       when(element_at(vec, i + 1) > 0, lit(1L << i)).otherwise(lit(0L)))
       .reduce(_ bitwiseOR _)
 
+  /** Commit a stored index's tables as version `batchId` of `root`: one
+    * unpartitioned table each, replaced whole, published by one pointer
+    * rename so a serving tier never observes a half-written index.
+    */
+  private def commitArtifacts(root: String, batchId: Long,
+                              tables: (String, DataFrame)*): Unit =
+    graft.state.ManifestStore.commit(tables.head._2.sparkSession,
+      new org.apache.hadoop.fs.Path(root), batchId,
+      tables.map { case (name, df) => graft.state.ManifestStore.TableCommit(name, df) },
+      graft.state.ManifestStore.ReplacePartitions)
+
   /** Encode the corpus' sign-bit codes ONCE and commit them to a
-    * [[graft.state.SnapshotStore]] root (VERDICT r15 #3 applied to the
+    * [[graft.state.ManifestStore]] root (VERDICT r15 #3 applied to the
     * binary tier, the [[ivfPqCommit]] stance): a serving deployment
     * encodes per corpus refresh and Hamming-scans the stored codes —
     * never re-packing the full float corpus per query batch. One table:
@@ -221,11 +232,7 @@ object Similarity {
                    batchId: Long = 0L): Unit = {
     require(dim >= 1 && dim <= 64, s"sign bits pack into one long: dim=$dim")
     val codes = corpus.select(col(cId), binaryPack(col(cVec), dim).as("__cc"))
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    graft.state.SnapshotStore.commit(fs, rootPath, batchId,
-      Map("codes" -> codes))
+    commitArtifacts(root, batchId, "codes" -> codes)
   }
 
   /** Serve binary-quantized top-k from STORED codes: the Hamming scan
@@ -240,8 +247,8 @@ object Similarity {
                   qId: String = "q_id", qVec: String = "q_vec",
                   cId: String = "vec_id", cVec: String = "embedding",
                   versionAsOf: Option[Long] = None): DataFrame = {
-    val codes = graft.state.SnapshotStore
-      .read(queries.sparkSession, root, "codes", versionAsOf)
+    val codes = graft.state.ManifestStore
+      .readTable(queries.sparkSession, root, "codes", versionAsOf)
     binaryScore(queries, codes, corpus, dim, k, rescore,
       qId, qVec, cId, cVec)
   }
@@ -1062,7 +1069,7 @@ object Similarity {
   }
 
   /** Compute the SQ8 index ONCE — per-dimension extrema plus 8-bit
-    * codes — and commit both to a [[graft.state.SnapshotStore]] root
+    * codes — and commit both to a [[graft.state.ManifestStore]] root
     * (VERDICT r16 #4, the [[ivfPqCommit]]/[[binaryCommit]] stance): a
     * serving deployment quantizes per corpus refresh, and query batches
     * scan the stored byte codes — never re-deriving extrema or
@@ -1077,10 +1084,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val bounds = Seq((mn.toSeq, mx.toSeq)).toDF("mn", "mx")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.state.SnapshotStore.commit(fs, rootPath, batchId,
-      Map("codes" -> codes, "bounds" -> bounds))
+    commitArtifacts(root, batchId, "codes" -> codes, "bounds" -> bounds)
   }
 
   /** Serve SQ8 top-k from the STORED index (the other half of
@@ -1100,8 +1104,8 @@ object Similarity {
                cId: String = "vec_id",
                versionAsOf: Option[Long] = None): DataFrame = {
     val s = queries.sparkSession
-    val codes = graft.state.SnapshotStore.read(s, root, "codes", versionAsOf)
-    val bounds = graft.state.SnapshotStore.read(s, root, "bounds", versionAsOf)
+    val codes = graft.state.ManifestStore.readTable(s, root, "codes", versionAsOf)
+    val bounds = graft.state.ManifestStore.readTable(s, root, "bounds", versionAsOf)
     val deq = codes.join(broadcast(bounds))
       .select(col(cId),
         transform(col("codes"), (q, i) => {
@@ -1403,7 +1407,7 @@ object Similarity {
 
   /** Train the IVF-PQ index ONCE and commit its four artifacts — cell
     * assignments, coarse centroids, residual PQ codebook, PQ codes — to
-    * a [[graft.state.SnapshotStore]] root (VERDICT r15 #3, the
+    * a [[graft.state.ManifestStore]] root (VERDICT r15 #3, the
     * st_quality_score batch-artifact stance): a real deployment trains
     * per corpus refresh and serves MANY query batches from the stored
     * index, instead of paying the two Lloyd's loops inside every query.
@@ -1420,12 +1424,8 @@ object Similarity {
                   batchId: Long = 0L): Unit = {
     val (cells, cc, cbf, codes) =
       ivfPqIndex(corpus, dim, nCells, m, ksub, itersIvf, itersPq, scale, cId, cVec)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(
-      corpus.sparkSession.sparkContext.hadoopConfiguration)
-    graft.state.SnapshotStore.commit(fs, rootPath, batchId, Map(
-      "cells" -> cells, "centroids" -> cc,
-      "codebook" -> cbf, "codes" -> codes))
+    commitArtifacts(root, batchId, "cells" -> cells, "centroids" -> cc,
+      "codebook" -> cbf, "codes" -> codes)
   }
 
   /** Serve top-k from a STORED IVF-PQ index (the other half of
@@ -1445,7 +1445,7 @@ object Similarity {
                  versionAsOf: Option[Long] = None): DataFrame = {
     val s = queries.sparkSession
     def table(name: String): DataFrame =
-      graft.state.SnapshotStore.read(s, root, name, versionAsOf)
+      graft.state.ManifestStore.readTable(s, root, name, versionAsOf)
     ivfPqScore(queries, table("codes"), table("cells"), table("centroids"),
       table("codebook"), dim, k, nprobe, m, scale, qId, qVec, cId)
   }

@@ -210,7 +210,7 @@ private[graft] object AnnQueries {
         dim = 64, k = 10, cVec = "emb_d")
     }),
     // PERSIST-AND-SERVE (VERDICT r15 #3): the SAME index trained ONCE,
-    // committed to a SnapshotStore root (atomic multi-table pointer
+    // committed to a ManifestStore root (atomic multi-table pointer
     // swap), then served — snapshot-isolated reads feeding only the
     // probe/ADC/score DAG. Answers the ann_ivfpq_topk oracle VERBATIM: a
     // stored index must be indistinguishable from a freshly-trained one.

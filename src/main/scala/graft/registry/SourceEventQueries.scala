@@ -17,6 +17,19 @@ import graft.EntryOracles._
   * SparkEntry merges every slice into the driver-contract maps.
   */
 private[graft] object SourceEventQueries {
+  private def partitionedUpsert(s: SparkSession, dir: String): DataFrame = {
+    val t = Tables.orders(s, dir)
+    val tmp = tmpDir("graft_pups")
+    val sink = graft.streaming.StreamingPipeline.upsertBatchSnapshot(
+      tmp, Seq("o_orderkey"), Some("o_orderstatus")) _
+    sink(t, 0L)
+    sink(t.filter(col("o_orderkey") % 7 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") * 2), 1L)
+    graft.streaming.StreamingPipeline.readSnapshot(s, tmp)
+      .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+        "o_orderdate", "o_orderpriority")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
 
@@ -346,40 +359,14 @@ private[graft] object SourceEventQueries {
         "o_totalprice", "o_orderdate", "o_orderpriority")
     }),
     // The partition-aware upsert under the oracle: seed a
-    // status-partitioned table, merge an update batch (every 7th order's
-    // price doubled — only its partitions are read and swapped), read the
-    // table back. Exercises the per-partition staging/rename/backup path
-    // end-to-end (ADVICE r03's crash-window machinery).
-    "s_partitioned_upsert" -> ((s, dir) => {
-      val t = Tables.orders(s, dir)
-      val tmp = tmpDir("graft_pups")
-      graft.streaming.StreamingPipeline.upsertPartitionedBatch(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(t, 0L)
-      val updates = t.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      graft.streaming.StreamingPipeline.upsertPartitionedBatch(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(updates, 1L)
-      s.read.parquet(tmp + "/data").select("o_orderkey", "o_custkey",
-        "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority")
-    }),
-    // the same two-batch upsert through the partition-MANIFEST snapshot
-    // sink (O(touched) writes + MVCC readers, graft.state.ManifestStore):
-    // batch 1 touches only the F/O partitions its updates live in, the
-    // other status partitions are inherited by manifest reference — and
-    // the final read must still equal the rename-swap sink's answer
-    "s_partitioned_upsert_snapshot" -> ((s, dir) => {
-      val t = Tables.orders(s, dir)
-      val tmp = tmpDir("graft_pups_snap")
-      graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(t, 0L)
-      val updates = t.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(updates, 1L)
-      graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-          "o_orderdate", "o_orderpriority")
-    }),
+    // status-partitioned table through the snapshot sink, merge an update
+    // batch (every 7th order's price doubled — batch 1 touches only the
+    // F/O partitions its updates live in, the other status partitions are
+    // inherited by manifest reference; graft.state.ManifestStore), read
+    // the table back through the snapshot reader. Both registered names
+    // run this one query; registered names are kept stable.
+    "s_partitioned_upsert" -> ((s, dir) => partitionedUpsert(s, dir)),
+    "s_partitioned_upsert_snapshot" -> ((s, dir) => partitionedUpsert(s, dir)),
     // SCHEMA EVOLUTION ON WRITE (Upsert.upsertEvolve through the
     // partition-manifest sink — the reference's Delta MERGE autoMerge,
     // transform.py:331-339): batch 1 carries a NEVER-SEEN `note` column
@@ -390,8 +377,8 @@ private[graft] object SourceEventQueries {
     "s_evolve_upsert" -> ((s, dir) => {
       val t = Tables.orders(s, dir)
       val tmp = tmpDir("graft_evolve")
-      val sink = graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderpriority", mergeSchema = true) _
+      val sink = graft.streaming.StreamingPipeline.upsertBatchSnapshot(
+        tmp, Seq("o_orderkey"), Some("o_orderpriority"), mergeSchema = true) _
       sink(t.filter(col("o_orderkey") % 3 === 0)
         .select("o_orderkey", "o_totalprice", "o_orderpriority"), 0L)
       sink(t.filter(col("o_orderkey") % 2 === 0 &&
@@ -401,7 +388,7 @@ private[graft] object SourceEventQueries {
           col("o_orderpriority"),
           concat(lit("c"), (col("o_orderkey") % 5).cast("string")).as("note")),
         1L)
-      graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
+      graft.streaming.StreamingPipeline.readSnapshot(s, tmp)
         .select("o_orderkey", "o_totalprice", "o_orderpriority", "note")
     }),
     // ... and the pinning half of the contract: AFTER the evolving commit,
@@ -410,8 +397,8 @@ private[graft] object SourceEventQueries {
     "s_evolve_timetravel" -> ((s, dir) => {
       val t = Tables.orders(s, dir)
       val tmp = tmpDir("graft_evolve_tt")
-      val sink = graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderpriority", mergeSchema = true) _
+      val sink = graft.streaming.StreamingPipeline.upsertBatchSnapshot(
+        tmp, Seq("o_orderkey"), Some("o_orderpriority"), mergeSchema = true) _
       sink(t.filter(col("o_orderkey") % 3 === 0)
         .select("o_orderkey", "o_totalprice", "o_orderpriority"), 0L)
       sink(t.filter(col("o_orderkey") % 2 === 0 &&
@@ -421,7 +408,7 @@ private[graft] object SourceEventQueries {
           col("o_orderpriority"),
           concat(lit("c"), (col("o_orderkey") % 5).cast("string")).as("note")),
         1L)
-      graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp, Some(0L))
+      graft.streaming.StreamingPipeline.readSnapshot(s, tmp, Some(0L))
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
     }),
 
@@ -435,15 +422,15 @@ private[graft] object SourceEventQueries {
     "s_partitioned_delete" -> ((s, dir) => {
       val t = Tables.orders(s, dir)
       val tmp = tmpDir("graft_pdel")
-      graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus")(t, 0L)
+      graft.streaming.StreamingPipeline.upsertBatchSnapshot(
+        tmp, Seq("o_orderkey"), Some("o_orderstatus"))(t, 0L)
       val doomed = t.filter(col("o_orderkey") % 5 === 0 ||
           col("o_orderstatus") === "P")
         .select("o_orderkey", "o_orderstatus")
       graft.state.ManifestStore.deletePartitioned(s,
         new org.apache.hadoop.fs.Path(tmp), 1L, doomed,
         Seq("o_orderkey"), "o_orderstatus")
-      graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
+      graft.streaming.StreamingPipeline.readSnapshot(s, tmp)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     }),
 
@@ -456,15 +443,15 @@ private[graft] object SourceEventQueries {
     "s_time_travel" -> ((s, dir) => {
       val t = Tables.orders(s, dir)
       val tmp = tmpDir("graft_tt")
-      val sink = graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus") _
+      val sink = graft.streaming.StreamingPipeline.upsertBatchSnapshot(
+        tmp, Seq("o_orderkey"), Some("o_orderstatus")) _
       sink(t, 0L)
       sink(t.filter(col("o_orderkey") % 7 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2), 1L)
       val v0 = graft.streaming.StreamingPipeline
-        .readPartitionedSnapshot(s, tmp, versionAsOf = Some(0L))
+        .readSnapshot(s, tmp, versionAsOf = Some(0L))
         .select(col("o_orderkey"), col("o_totalprice").as("price_v0"))
-      val now = graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
+      val now = graft.streaming.StreamingPipeline.readSnapshot(s, tmp)
         .select(col("o_orderkey"), col("o_totalprice").as("price_now"))
       v0.join(now, Seq("o_orderkey"))
     }),
@@ -476,16 +463,16 @@ private[graft] object SourceEventQueries {
     "s_version_diff" -> ((s, dir) => {
       val t = Tables.orders(s, dir)
       val tmp = tmpDir("graft_vdiff")
-      val sink = graft.streaming.StreamingPipeline.upsertPartitionedBatchSnapshot(
-        tmp, Seq("o_orderkey"), "o_orderstatus") _
+      val sink = graft.streaming.StreamingPipeline.upsertBatchSnapshot(
+        tmp, Seq("o_orderkey"), Some("o_orderstatus")) _
       sink(t, 0L)
       sink(t.filter(col("o_orderkey") % 7 === 0)
         .withColumn("o_totalprice", col("o_totalprice") * 2)
         .unionByName(t.filter(col("o_orderkey") % 13 === 0)
           .withColumn("o_orderkey", col("o_orderkey") + 1000000000L)), 1L)
       val v0 = graft.streaming.StreamingPipeline
-        .readPartitionedSnapshot(s, tmp, versionAsOf = Some(0L))
-      val now = graft.streaming.StreamingPipeline.readPartitionedSnapshot(s, tmp)
+        .readSnapshot(s, tmp, versionAsOf = Some(0L))
+      val now = graft.streaming.StreamingPipeline.readSnapshot(s, tmp)
       graft.operators.Diff.diff(v0, now, Seq("o_orderkey"))
     }),
     // SCD Type-2 history build (operators/Scd.scala): each order's

@@ -6,20 +6,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.util.control.NonFatal
 
-/** Partition-manifest snapshot commits — [[SnapshotStore]]'s reader
-  * isolation at the partitioned sink's O(touched-partitions) write cost
-  * (the Iceberg-style combination both named as the next step).
+/** The engine's versioned-table commit protocol: every snapshot sink and
+  * stored artifact commits through here (the one exception is
+  * [[graft.streaming.StreamingPipeline.upsertBatch]]'s in-place
+  * `data/` rename swap). A commit is keyed by batch id, so a replayable
+  * source plus the callers' replay gate give exactly-once tables.
   *
-  * A committed version `v_<batch>` holds ONLY the partition directories
-  * its batch touched, plus a `_manifest` file mapping every LIVE
-  * partition directory name to the version that owns its current data —
-  * untouched partitions are inherited by reference, not copied. The
-  * commit point stays [[SnapshotStore.pointTo]]'s single atomic pointer
-  * rename, so a reader resolves pointer → manifest → a set of
-  * directories no writer ever mutates:
+  * A committed version `v_<batch>` holds ONLY the data its batch wrote,
+  * plus a `_manifest` file mapping every LIVE data directory name to the
+  * version that owns it — untouched partitions are inherited by
+  * reference, not copied. The commit point is [[SnapshotStore.pointTo]]'s
+  * single atomic pointer rename, so a reader resolves pointer → manifest
+  * → a set of directories no writer ever mutates:
   *
-  *  - per-batch write cost is O(touched partitions) — the rename-swap
-  *    partitioned sink's property, now WITH snapshot isolation;
+  *  - per-batch write cost is O(touched partitions) for a partitioned
+  *    table; an UNPARTITIONED table (no partition column) is one manifest
+  *    entry, `data`, written whole by a plain parquet write per commit;
   *  - a version's data dirs and its manifest commit atomically (the
   *    manifest lives inside the version dir, published by the pointer);
   *  - when the live manifest would reference more than
@@ -33,31 +35,31 @@ import scala.util.control.NonFatal
   *    retention, default 10 minutes) is what actually protects it, the
   *    manifest-reference check just reclaims eagerly past it.
   *
-  * A MULTI-table commit ([[commitPartitionedTables]], VERDICT r06 missing
-  * #3) lays each table under `v_<batch>/<table>/` with its own manifest
-  * and schema, all published by the ONE root pointer: a fact-grain table
-  * pair gets [[graft.streaming.JointKpis]]'s pair-atomicity at
-  * O(touched-partitions) write cost — a crash at any point leaves every
-  * table of the pair on the same committed epoch.
+  * A commit carries one or more [[TableCommit]]s. An unnamed table uses
+  * the single-table layout (manifest at the version root); named tables
+  * lay out under `v_<batch>/<table>/`, each with its own manifest and
+  * schema, all published by the ONE root pointer — a table pair or an
+  * artifact set commits atomically, and a crash at any point leaves every
+  * table on the same committed epoch.
   *
   * Each commit folds its batch in by one [[PartitionMerge]] kind, named
   * by the caller's contract:
   *
-  *  - [[RowMerge]] reads the prior version's touched partitions (or, when
-  *    compacting, the whole table) and merges the batch into them
-  *    row by row — an upsert;
+  *  - [[RowMerge]] reads the prior version's touched partitions (the
+  *    whole table when compacting or unpartitioned) and merges the batch
+  *    into them row by row — an upsert;
   *  - [[ReplacePartitions]] is for a caller whose batch holds EVERY row
   *    of each partition it touches (a stateful operator that emits a
-  *    key's full state, as [[graft.streaming.JointKpis]] does per day).
-  *    A non-compacting commit writes the batch as the new content of the
-  *    touched partitions and inherits the rest by manifest reference: it
-  *    neither reads the prior version nor joins, and the written
-  *    directories ARE the touched set. A compacting commit rewrites the
-  *    prior version's untouched partitions (a null-safe anti-join on the
-  *    partition value) plus the batch. Precondition: the batch is
-  *    complete for every partition it touches, and keys stay in their
-  *    partition — a partition the batch touches loses any prior row the
-  *    batch does not carry.
+  *    key's full state, as [[graft.streaming.JointKpis]] does per day; an
+  *    unpartitioned table is replaced whole). A non-compacting commit
+  *    writes the batch as the new content of the touched partitions and
+  *    inherits the rest by manifest reference: it neither reads the prior
+  *    version nor joins, and the written directories ARE the touched set.
+  *    A compacting commit rewrites the prior version's untouched
+  *    partitions (a null-safe anti-join on the partition value) plus the
+  *    batch. Precondition: the batch is complete for every partition it
+  *    touches, and keys stay in their partition — a partition the batch
+  *    touches loses any prior row the batch does not carry.
   *
   * Partition directory names carry Spark's own value escaping (the
   * writer lists what `partitionBy` wrote instead of reconstructing names
@@ -68,6 +70,9 @@ object ManifestStore {
 
   private val ManifestName = "_manifest"
   private val SchemaName = "_schema"
+  /** The one data directory (and manifest entry) of an unpartitioned table. */
+  private val WholeTable = "data"
+  private val RetentionMs = 10 * 60 * 1000L
 
   /** How a commit folds its batch into the partitions the batch touches. */
   sealed trait PartitionMerge
@@ -86,8 +91,8 @@ object ManifestStore {
   case object ReplacePartitions extends PartitionMerge
 
   /** `sub` is the table's directory inside a version: "" for the
-    * single-table layout (manifest at the version root, the original
-    * layout), a table name for [[commitPartitionedTables]].
+    * single-table layout (manifest at the version root), a table name for
+    * a named [[TableCommit]].
     */
   private def subDir(root: Path, v: Long, sub: String): Path = {
     val vd = SnapshotStore.versionDir(root, v)
@@ -158,12 +163,13 @@ object ManifestStore {
     finally out.close()
   }
 
-  /** Read the table a manifest describes: group the partition dirs by
-    * owning version and read each group with that version's table dir as
+  /** Read the table a manifest describes: group the data dirs by owning
+    * version and read each group with that version's table dir as
     * `basePath` (and the committed schema, when present), so Spark
     * re-derives the partition column identically per group and applies
     * partition pruning; reader fan-in is bounded by the compaction
-    * threshold.
+    * threshold. An unpartitioned table's `data` dir carries no `=`, so it
+    * reads with no partition column.
     */
   private def readManifested(spark: SparkSession, root: Path,
                              manifest: Map[String, Long],
@@ -203,21 +209,21 @@ object ManifestStore {
         val avail = availableVersions(fs, root, sub)
         if (!avail.contains(n)) throw new IllegalStateException(
           s"version $n of $root is not resolvable (available: ${avail.mkString(", ")}) — " +
-            "raise the writer's retentionMs to keep deeper history")
+            "raise the commit's retentionMs to keep deeper history")
         n
     }
   }
 
-  /** Snapshot-isolated read of the committed partitioned table — the
-    * current version by default, or any still-resolvable committed
-    * version via `versionAsOf` (VERDICT r06 missing #1). A reclaimed
-    * version errors loudly, naming what is still available.
+  /** Snapshot-isolated read of a single-table-layout table (partitioned
+    * or not) — the current version by default, or any still-resolvable
+    * committed version via `versionAsOf` (VERDICT r06 missing #1). A
+    * reclaimed version errors loudly, naming what is still available.
     */
   def read(spark: SparkSession, root: String,
            versionAsOf: Option[Long] = None): DataFrame =
     readSub(spark, root, "", versionAsOf)
 
-  /** Snapshot-isolated read of one table of a multi-table commit. */
+  /** Snapshot-isolated read of one named table of a commit. */
   def readTable(spark: SparkSession, root: String, table: String,
                 versionAsOf: Option[Long] = None): DataFrame = {
     require(table.nonEmpty, "table name must be non-empty")
@@ -246,73 +252,99 @@ object ManifestStore {
       readSchemaAt(fs, rootPath, v, sub), sub)
   }
 
+  /** Write `df` under `dir` partitioned by `partitionCol`; returns the
+    * partition dir names written.
+    *
+    * Rows are clustered by the partition column first (r18, guide §6
+    * small files): without it every task writes one file into EVERY
+    * partition dir its rows touch — a 32-task write of a ~2400-date table
+    * emitted tens of thousands of near-empty files (measured: the
+    * manifested joint-KPI drain spent 19-59 s mostly in file creation,
+    * and the read side paid the listing again). With the rows clustered,
+    * each partition dir gets exactly one file; content is byte-identical,
+    * only layout changes. The partition count is EXPLICIT (the session's
+    * shuffle parallelism): a bare repartition(pc) lets AQE coalesce the
+    * tiny shuffle to ONE task, which then creates every partition
+    * directory serially — measured 35 s vs 9 s for the same ~2400-dir
+    * write.
+    */
+  private def writePartitions(df: DataFrame, partitionCol: String,
+                              dir: Path): Seq[String] = {
+    val spark = df.sparkSession
+    df.repartition(spark.sessionState.conf.numShufflePartitions,
+        org.apache.spark.sql.functions.col(partitionCol))
+      .write.mode("overwrite").partitionBy(partitionCol).parquet(dir.toString)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
+      .map(_.getPath.getName).toSeq
+  }
+
   /** Stage one table's merged data + manifest + schema under
-    * `v_<batchId>/<sub>`. Returns the table's new manifest — empty only
-    * for an empty FIRST batch (nothing readable; the caller skips the
-    * pointer when every staged table is empty-first).
+    * `v_<batchId>/<name>`. Returns the table's new manifest — empty only
+    * for an empty FIRST batch of a partitioned table (nothing readable;
+    * the caller skips the pointer when nothing is readable before or
+    * after).
     */
   private def stageTable(spark: SparkSession, root: Path, batchId: Long,
-                         sub: String, batch: DataFrame, keys: Seq[String],
-                         partitionCol: String, merge: PartitionMerge,
+                         t: TableCommit, merge: PartitionMerge,
                          prevManifest: Map[String, Long],
                          prevSchema: Option[StructType],
                          maxManifestVersions: Int): Map[String, Long] = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val compact = prevManifest.values.toSet.size + 1 > maxManifestVersions
-    val pc = org.apache.spark.sql.functions.col(partitionCol)
-    def table = readManifested(spark, root, prevManifest, prevSchema, sub)
-    val merged =
-      if (prevManifest.isEmpty) batch
-      else merge match {
-        case RowMerge(f) if compact => f(table, batch, keys)
-        case RowMerge(f) =>
-          // O(touched): only the batch's partitions are read (partition
-          // pruning applies inside each per-version read) and rewritten.
-          // Same bounded VALUES collect and null arm as the rename-swap
-          // partitioned sink; same key-stays-in-its-partition
-          // precondition.
-          val touched = batch.select(partitionCol).distinct().collect().map(_.get(0))
-          val (nullTouched, nonNull) = touched.partition(_ == null)
-          val touchedPred =
-            if (nullTouched.isEmpty) pc.isin(nonNull.toSeq: _*)
-            else if (nonNull.isEmpty) pc.isNull
-            else pc.isin(nonNull.toSeq: _*) || pc.isNull
-          f(table.filter(touchedPred), batch, keys)
-        case ReplacePartitions if compact =>
-          // keep the prior version's partitions the batch does not touch;
-          // <=> so a touched null partition is replaced, not duplicated
-          val bp = "__touched_" + partitionCol
-          val touched = batch.select(pc.as(bp)).distinct()
-          table.join(touched, pc <=> touched(bp), "left_anti")
-            .unionByName(batch)
-        // the batch IS the touched partitions' content: no read, no join
-        case ReplacePartitions => batch
-      }
-    val dir = subDir(root, batchId, sub)
-    // Cluster rows by the partition column before the dynamic-partition
-    // write (r18, guide §6 small files): without it every task writes one
-    // file into EVERY partition dir its rows touch — a 32-task write of a
-    // ~2400-date table emitted tens of thousands of near-empty files
-    // (measured: the manifested joint-KPI drain spent 19-59 s mostly in
-    // file creation, and the read side paid the listing again). With the
-    // rows clustered, each partition dir gets exactly one file; content
-    // is byte-identical, only layout changes. The partition count is
-    // EXPLICIT (the session's shuffle parallelism): a bare repartition(pc)
-    // lets AQE coalesce the tiny shuffle to ONE task, which then creates
-    // every partition directory serially — measured 35 s vs 9 s for the
-    // same ~2400-dir write.
-    merged.repartition(
-        spark.sessionState.conf.numShufflePartitions, pc)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(dir.toString)
-    val written = fs.listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .map(_.getPath.getName)
+    val dir = subDir(root, batchId, t.name)
+    def table = readManifested(spark, root, prevManifest, prevSchema, t.name)
+    // `inherit`: the new manifest keeps the prior entries the batch did
+    // not rewrite (false when the whole table was written)
+    val (merged, written, inherit) = t.partitionCol match {
+      case None =>
+        // unpartitioned: one manifest entry, the table written whole by a
+        // plain parquet write (no repartition, no shuffle)
+        val merged = merge match {
+          case RowMerge(f) if prevManifest.nonEmpty => f(table, t.batch, t.keys)
+          case _ => t.batch
+        }
+        merged.write.mode("overwrite").parquet(new Path(dir, WholeTable).toString)
+        (merged, Seq(WholeTable), false)
+      case Some(partitionCol) =>
+        val compact = prevManifest.values.toSet.size + 1 > maxManifestVersions
+        val pc = org.apache.spark.sql.functions.col(partitionCol)
+        val merged =
+          if (prevManifest.isEmpty) t.batch
+          else merge match {
+            case RowMerge(f) if compact => f(table, t.batch, t.keys)
+            case RowMerge(f) =>
+              // O(touched): only the batch's partitions are read (partition
+              // pruning applies inside each per-version read) and
+              // rewritten. The driver-side collect is of partition VALUES
+              // only; isin(null) never matches, so a null partition needs
+              // its own isNull arm. Precondition: a key stays in its
+              // partition.
+              val touched = t.batch.select(partitionCol).distinct().collect().map(_.get(0))
+              val (nullTouched, nonNull) = touched.partition(_ == null)
+              val touchedPred =
+                if (nullTouched.isEmpty) pc.isin(nonNull.toSeq: _*)
+                else if (nonNull.isEmpty) pc.isNull
+                else pc.isin(nonNull.toSeq: _*) || pc.isNull
+              f(table.filter(touchedPred), t.batch, t.keys)
+            case ReplacePartitions if compact =>
+              // keep the prior version's partitions the batch does not
+              // touch; <=> so a touched null partition is replaced, not
+              // duplicated
+              val bp = "__touched_" + partitionCol
+              val touched = t.batch.select(pc.as(bp)).distinct()
+              table.join(touched, pc <=> touched(bp), "left_anti")
+                .unionByName(t.batch)
+            // the batch IS the touched partitions' content: no read, no join
+            case ReplacePartitions => t.batch
+          }
+        (merged, writePartitions(merged, partitionCol, dir), !compact)
+    }
     if (prevManifest.isEmpty && written.isEmpty)
       // an empty FIRST batch commits nothing readable
       return Map.empty
     val newManifest =
-      if (compact) written.map(_ -> batchId).toMap
-      else prevManifest ++ written.map(_ -> batchId)
+      if (inherit) prevManifest ++ written.map(_ -> batchId)
+      else written.map(_ -> batchId).toMap
     writeManifest(fs, dir, newManifest)
     writeSchema(fs, dir, merged.schema)
     newManifest
@@ -321,9 +353,7 @@ object ManifestStore {
   private def reclaimVersions(fs: FileSystem, root: Path, keep: Set[Long],
                               retentionMs: Long): Unit = {
     val now = System.currentTimeMillis()
-    fs.listStatus(root).map(_.getPath.getName)
-      .flatMap(n => if (n.startsWith("v_"))
-        scala.util.Try(n.stripPrefix("v_").toLong).toOption else None)
+    fs.listStatus(root).flatMap(s => SnapshotStore.parseVersion(s.getPath.getName))
       .filterNot(keep)
       .filter { v =>
         try now - fs.getFileStatus(SnapshotStore.versionDir(root, v))
@@ -333,30 +363,50 @@ object ManifestStore {
       .foreach(v => fs.delete(SnapshotStore.versionDir(root, v), true))
   }
 
-  /** Fold `batch` into the committed table by `merge` and commit version
-    * `batchId`: write the touched (or, when compacting, all) partitions
-    * under the new version dir, publish the updated manifest, flip the
-    * pointer, reclaim unreferenced versions. Caller holds the writer lock
-    * and has gated on replayed batch ids.
+  /** One table of a commit. `name` "" is the single-table layout (the
+    * commit's only table); `partitionCol` None is an unpartitioned table;
+    * `keys` feed a [[RowMerge]] and are unused by [[ReplacePartitions]].
     */
-  def commitPartitioned(spark: SparkSession, root: Path, batchId: Long,
-                        batch: DataFrame, keys: Seq[String],
-                        partitionCol: String, merge: PartitionMerge,
-                        maxManifestVersions: Int = 16,
-                        retentionMs: Long = 10 * 60 * 1000L): Unit = {
+  final case class TableCommit(name: String, batch: DataFrame,
+                               keys: Seq[String] = Nil,
+                               partitionCol: Option[String] = None)
+
+  /** Fold each table's batch into the committed table by `merge` and
+    * commit them all as version `batchId`: stage every table's written
+    * data + manifest + schema under `v_<batchId>/`, then ONE pointer
+    * rename publishes them all, and versions no live or previous manifest
+    * references and older than `retentionMs` are reclaimed. A crash
+    * before the pointer leaves every table on the previous epoch, and
+    * a replay of the batch id overwrites its own uncommitted dir. Caller
+    * holds the writer lock when writers can race, and gates replayed
+    * batch ids ([[SnapshotStore.currentVersion]] ≥ batchId).
+    */
+  def commit(spark: SparkSession, root: Path, batchId: Long,
+             tables: Seq[TableCommit], merge: PartitionMerge,
+             maxManifestVersions: Int = 16,
+             retentionMs: Long = RetentionMs): Unit = {
+    require(tables.nonEmpty, "a commit needs at least one table")
+    require(tables.map(_.name).distinct.size == tables.size,
+      s"table names must be distinct: ${tables.map(_.name).mkString(", ")}")
+    require(tables.size == 1 || tables.forall(_.name.nonEmpty),
+      "the single-table layout (an unnamed table) holds one table only")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(root)
     val cur = SnapshotStore.currentVersion(fs, root)
-    val prevManifest = cur.map(v => readManifest(fs, root, v)).getOrElse(Map.empty)
-    val newManifest = stageTable(spark, root, batchId, "", batch, keys,
-      partitionCol, merge, prevManifest,
-      cur.flatMap(v => readSchemaAt(fs, root, v, "")), maxManifestVersions)
-    if (newManifest.isEmpty && prevManifest.isEmpty)
-      // the pointer stays unset rather than publishing a schema-less table
+    val prevManifests = tables.map { t =>
+      cur.map(v => readManifestOrEmpty(fs, root, v, t.name)).getOrElse(Map.empty)
+    }
+    val staged = tables.zip(prevManifests).map { case (t, prevM) =>
+      stageTable(spark, root, batchId, t, merge, prevM,
+        cur.flatMap(v => readSchemaAt(fs, root, v, t.name)), maxManifestVersions)
+    }
+    if (staged.forall(_.isEmpty) && prevManifests.forall(_.isEmpty))
+      // the pointer stays where it was rather than publishing a
+      // schema-less table
       return
     SnapshotStore.pointTo(fs, root, batchId)
     reclaimVersions(fs, root,
-      newManifest.values.toSet ++ prevManifest.values.toSet + batchId,
+      (staged ++ prevManifests).flatMap(_.values).toSet + batchId,
       retentionMs)
   }
 
@@ -365,7 +415,7 @@ object ManifestStore {
     * maintenance op a lake owes its compliance team. Only partitions
     * holding a delete key are read (the touched manifest slice) and
     * rewritten minus the keyed rows; untouched partitions inherit by
-    * reference as in [[commitPartitioned]]. A partition the delete
+    * reference as in [[commit]]. A partition the delete
     * EMPTIES leaves the manifest entirely — inheriting its old entry
     * would resurrect the deleted rows — and deleting every row commits
     * an empty manifest WITH the schema file, which [[read]] returns as
@@ -386,7 +436,7 @@ object ManifestStore {
   def deletePartitioned(spark: SparkSession, root: Path, batchId: Long,
                         delKeys: DataFrame, keys: Seq[String],
                         partitionCol: String,
-                        retentionMs: Long = 10 * 60 * 1000L): Unit = {
+                        retentionMs: Long = RetentionMs): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.functions.col
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -408,16 +458,7 @@ object ManifestStore {
     val remaining = readManifested(spark, root, touchedManifest, prevSchema, "")
       .join(delKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
     val dir = subDir(root, batchId, "")
-    // cluster by the partition column first — one file per touched dir
-    // instead of one per (task, dir), explicit partition count so AQE
-    // cannot serialize the dir creation into one task; see stageTable
-    remaining.repartition(
-        spark.sessionState.conf.numShufflePartitions, col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol)
-      .parquet(dir.toString)
-    val written = fs.listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .map(_.getPath.getName)
+    val written = writePartitions(remaining, partitionCol, dir)
     val newManifest = (prevManifest -- touchedManifest.keySet) ++
       written.map(_ -> batchId)
     writeManifest(fs, dir, newManifest)
@@ -425,43 +466,6 @@ object ManifestStore {
     SnapshotStore.pointTo(fs, root, batchId)
     reclaimVersions(fs, root,
       newManifest.values.toSet ++ prevManifest.values.toSet + batchId,
-      retentionMs)
-  }
-
-  /** One table of a multi-table manifest commit. */
-  final case class TableCommit(name: String, batch: DataFrame,
-                               keys: Seq[String], partitionCol: String) {
-    require(name.nonEmpty, "table name must be non-empty")
-  }
-
-  /** Commit SEVERAL partitioned tables as one atomic epoch (VERDICT r06
-    * missing #3): each table stages its touched partitions + manifest +
-    * schema under `v_<batchId>/<name>/`, then ONE pointer rename
-    * publishes them all — [[graft.streaming.JointKpis]]'s pair-atomicity
-    * at [[commitPartitioned]]'s O(touched) cost. A crash before the
-    * pointer leaves every table on the previous epoch; reclamation keeps
-    * any version referenced by any table's live or previous manifest.
-    * Same caller contract: writer lock held, replayed batch ids gated.
-    */
-  def commitPartitionedTables(spark: SparkSession, root: Path, batchId: Long,
-                              tables: Seq[TableCommit], merge: PartitionMerge,
-                              maxManifestVersions: Int = 16,
-                              retentionMs: Long = 10 * 60 * 1000L): Unit = {
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val cur = SnapshotStore.currentVersion(fs, root)
-    val prevManifests = tables.map { t =>
-      cur.map(v => readManifestOrEmpty(fs, root, v, t.name)).getOrElse(Map.empty)
-    }
-    val staged = tables.zip(prevManifests).map { case (t, prevM) =>
-      stageTable(spark, root, batchId, t.name, t.batch, t.keys, t.partitionCol,
-        merge, prevM, cur.flatMap(v => readSchemaAt(fs, root, v, t.name)),
-        maxManifestVersions)
-    }
-    if (staged.forall(_.isEmpty) && cur.isEmpty) return
-    SnapshotStore.pointTo(fs, root, batchId)
-    reclaimVersions(fs, root,
-      (staged ++ prevManifests).flatMap(_.values).toSet + batchId,
       retentionMs)
   }
 }

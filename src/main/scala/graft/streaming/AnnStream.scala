@@ -49,7 +49,6 @@ object AnnStream {
                                     (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    require(refitEvery >= 1, s"refitEvery must be >= 1, got $refitEvery")
     val fresh0 = batch
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .dropDuplicates("vec_id")
@@ -162,6 +161,7 @@ object AnnStream {
     // k < 1 would publish an empty centroid table on the first refit, and
     // every later frozen assignment would then write NULL cells
     require(k >= 1, s"AnnStream needs at least one cell, got k=$k")
+    require(refitEvery >= 1, s"refitEvery must be >= 1, got $refitEvery")
     vecs.writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(ingestBatch(workDir, k, iters, refitEvery) _)

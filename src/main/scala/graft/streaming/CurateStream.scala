@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 import graft.operators.{Dedup, LanguageModel, Pack, Sampling}
-import graft.state.SnapshotStore
+import graft.state.ManifestStore
+import graft.state.ManifestStore.TableCommit
 
 /** Knobs of one curation run — the argument block of
   * [[graft.pipeline.Pipeline.curate]] as a value, so the streaming and
@@ -41,9 +42,10 @@ final case class CurateConfig(langKeep: Seq[String], pplCutoff: Double,
   *    gated corpus itself — mixture quotas, packing) are global
   *    artifacts: [[refit]] recomputes them from the drained cumulative
   *    state each trigger and commits them atomically
-  *    ([[SnapshotStore.commit]]: packed layout + global report publish
+  *    ([[ManifestStore.commit]]: packed layout + global report publish
   *    under ONE pointer rename, versioned by batch id — readers get
-  *    snapshot isolation and one step of time travel for free). This is
+  *    snapshot isolation and time travel within the store's retention
+  *    horizon for free). This is
   *    update-mode semantics for a training-run artifact: after EVERY
   *    trigger the published layout equals what the batch DAG would emit
   *    on the data seen so far (the property CurateStreamSpec pins
@@ -195,10 +197,10 @@ object CurateStream {
           Seq(stageRow("4_ppl", kept, col("bpe_tokens")),
               stageRow("5_mixture", mixed, col("bpe_tokens")))
             .reduce(_ unionByName _)
-        val root = new Path(s"$workDir/artifact")
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        SnapshotStore.commit(fs, root, batchId,
-          Map("packed" -> packed, "report_global" -> globalReport))
+        ManifestStore.commit(spark, new Path(s"$workDir/artifact"), batchId,
+          Seq(TableCommit("packed", packed),
+            TableCommit("report_global", globalReport)),
+          ManifestStore.ReplacePartitions)
       } finally mixed.unpersist()
     } finally kept.unpersist()
   }
@@ -249,12 +251,11 @@ object CurateStream {
   }
 
   /** The currently-published packed training layout (snapshot-isolated;
-    * `versionAsOf` = a retained trigger's batch id for one step of time
-    * travel).
+    * `versionAsOf` = a retained trigger's batch id for time travel).
     */
   def readPacked(spark: SparkSession, workDir: String,
                  versionAsOf: Option[Long] = None): DataFrame =
-    SnapshotStore.read(spark, s"$workDir/artifact", "packed", versionAsOf)
+    ManifestStore.readTable(spark, s"$workDir/artifact", "packed", versionAsOf)
 
   /** The end-to-end funnel report of the drained stream: per-trigger
     * stage counts summed across batches (stages 0-3 are additive
@@ -266,7 +267,7 @@ object CurateStream {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // missing-root guard (readGated's stance): without it a pre-first-
     // trigger read dies on an unhelpful raw path error instead of
-    // SnapshotStore's clear "no committed snapshot" message below
+    // ManifestStore's clear "no committed snapshot" message below
     val perBatch =
       if (!fs.exists(root))
         spark.range(0).select(lit("").as("stage"), lit(0L).as("n_docs"),
@@ -277,7 +278,7 @@ object CurateStream {
         .groupBy("stage")
         .agg(sum(col("n_docs")).cast("long").as("n_docs"),
           sum(col("n_bpe_tokens")).cast("long").as("n_bpe_tokens"))
-    val global = SnapshotStore.read(spark, s"$workDir/artifact", "report_global")
+    val global = ManifestStore.readTable(spark, s"$workDir/artifact", "report_global")
     perBatch.unionByName(global)
   }
 }

@@ -54,17 +54,17 @@ object StreamingPipeline {
     stream.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** Crash recovery for the rename swaps below: if a previous run died
-    * between "rename current away" and "rename staged in", the table only
-    * survives in a `_bak_*` directory — restore the newest one before
-    * reading. Makes the swap windows safe: every crash point leaves either
-    * the old table, the backup, or the new table recoverable.
+  /** Crash recovery for [[upsertBatch]]'s rename swap: if a previous run
+    * died between "rename current away" and "rename staged in", the table
+    * only survives in a `_bak_*` directory — restore the newest one
+    * before reading. Makes the swap window safe: every crash point leaves
+    * either the old table, the backup, or the new table recoverable.
     */
   private def recoverBackup(fs: org.apache.hadoop.fs.FileSystem,
                             root: Path, cur: Path): Unit =
     if (!fs.exists(cur) && fs.exists(root)) {
       val baks = fs.listStatus(root)
-        // full-table backups only: partition-level backups carry the
+        // full-table backups only: a partition-level backup carries the
         // partition dir name (`_bak_<id>_<col>=<value>`) and must never be
         // promoted to be the whole table (ADVICE r03)
         .filter { s =>
@@ -75,37 +75,10 @@ object StreamingPipeline {
       baks.lastOption.foreach(b => fs.rename(b.getPath, cur))
     }
 
-  /** Crash recovery for [[upsertPartitionedBatch]]'s per-partition swaps
-    * (ADVICE r03): a crash between "rename dest away" and "rename staged in"
-    * leaves that partition only in `_bak_<batchId>_<col>=<value>`. On entry,
-    * rename each such backup back under data/ when its destination is
-    * missing (the swap never completed — restore, so the replayed merge
-    * sees the old rows); when the destination exists the swap DID complete
-    * and only the backup cleanup was lost — drop it.
-    */
-  private def recoverPartitionBackups(fs: org.apache.hadoop.fs.FileSystem,
-                                      root: Path, cur: Path,
-                                      partitionCol: String): Unit =
-    if (fs.exists(root)) {
-      val marker = partitionCol + "="
-      fs.listStatus(root)
-        .map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith("_bak_") && n.contains(marker)
-        }
-        .foreach { bak =>
-          val partName = bak.getName.substring(bak.getName.indexOf(marker))
-          val dest = new Path(cur, partName)
-          if (fs.exists(dest)) fs.delete(bak, true)
-          else { fs.mkdirs(cur); fs.rename(bak, dest) }
-        }
-    }
-
-  /** Single-writer fencing for the rename-swap tables (VERDICT r04 #4):
-    * the swap protocol is crash-safe but NOT multi-writer-safe — two
-    * writers interleaving rename(cur, bak)/rename(tmp, cur) can each
-    * promote a merge that never saw the other's rows (the reference's
+  /** Single-writer fencing for every table sink (VERDICT r04 #4): the
+    * commit protocols are crash-safe but NOT multi-writer-safe — two
+    * writers interleaving their read-merge-commit steps can each promote
+    * a merge that never saw the other's rows (the reference's
     * Delta MERGE is ACID under concurrent writers, transform.py:331-339;
     * this is the explicit substitute contract). A `_writer_lock` file
     * created with overwrite=false fences: the second writer fails fast
@@ -289,20 +262,17 @@ object StreamingPipeline {
   /** Default staleness for [[withWriterLock]]: with the heartbeat
     * refreshing the token every staleMs/4, 10 minutes of silence means the
     * holder's JVM is gone (or partitioned long past any healthy pause) —
-    * not merely that its merge is slow. Override per table via the Spark
-    * conf `spark.graft.writerLock.staleMs` or the writers' `staleMs`
-    * parameter (ADVICE r5).
+    * not merely that its merge is slow. Override via the Spark conf
+    * `spark.graft.writerLock.staleMs` (ADVICE r5).
     */
   private[graft] val LockStaleMs = 10 * 60 * 1000L
 
-  /** Resolve the effective lock staleness: explicit argument, else the
-    * session conf `spark.graft.writerLock.staleMs`, else [[LockStaleMs]].
+  /** The effective lock staleness: the session conf
+    * `spark.graft.writerLock.staleMs`, else [[LockStaleMs]].
     */
-  private[graft] def resolveStaleMs(spark: SparkSession,
-                                    explicit: Option[Long]): Long =
-    explicit.orElse(
-      spark.conf.getOption("spark.graft.writerLock.staleMs")
-        .flatMap(v => scala.util.Try(v.toLong).toOption))
+  private[graft] def resolveStaleMs(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.writerLock.staleMs")
+      .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(LockStaleMs)
 
   /** ST5/ST7 per-batch sink: keyed upsert of the micro-batch into a parquet
@@ -313,14 +283,13 @@ object StreamingPipeline {
     * the reference relies on DynamoDB put idempotency the same way,
     * transform.py:379-387).
     */
-  def upsertBatch(targetDir: String, keys: Seq[String],
-                  staleMs: Option[Long] = None)
+  def upsertBatch(targetDir: String, keys: Seq[String])
                  (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = new Path(root, "data")
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
+    withWriterLock(fs, root, resolveStaleMs(spark)) {
       recoverBackup(fs, root, cur)
       val merged =
         if (fs.exists(cur)) Upsert.upsert(spark.read.parquet(cur.toString), batch, keys)
@@ -334,163 +303,55 @@ object StreamingPipeline {
     }
   }
 
-  /** [[upsertBatch]] with READER snapshot isolation (VERDICT r05 #3): the
-    * merge lands in a fresh `v_<batchId>/` dir and the commit point is one
-    * atomic pointer rename ([[graft.state.SnapshotStore]]), so a
-    * concurrent reader resolving [[readSnapshot]] can never observe a
-    * missing or half-swapped table — the MVCC window the in-place
-    * `data/` swap leaves open (recovery there repairs the NEXT writer,
-    * not the in-flight reader). Writers stay fenced by the same lock;
-    * replayed batch ids are skipped against the committed version, which
-    * also keeps the merge idempotent without relying on upsert
+  /** The snapshot-isolated keyed upsert sink (VERDICT r05 #3): each
+    * micro-batch commits version `batchId` through
+    * [[graft.state.ManifestStore]] — the merged table lands in a fresh
+    * `v_<batchId>/` dir and the commit point is one atomic pointer
+    * rename, so a concurrent [[readSnapshot]] never observes a missing or
+    * half-written table. Writers are fenced by [[withWriterLock]];
+    * replayed batch ids (≤ the committed version) are skipped, which
+    * keeps the sink exactly-once without relying on upsert
     * commutativity.
+    *
+    * With `partitionCol`, the table is laid out by that column and a
+    * batch costs O(touched partitions): only its partitions are read,
+    * merged and written, the rest are inherited by manifest reference.
+    * Precondition: a key's partition value is stable across updates (an
+    * update that MOVED a key would leave its stale row in the untouched
+    * old partition). Without it, the table is one unpartitioned manifest
+    * entry, read and rewritten whole per batch — the right trade for
+    * aggregate-grain tables.
+    *
+    * `mergeSchema` = Delta autoMerge semantics (schema evolution on
+    * write): a batch carrying a never-seen column unions it into the
+    * committed schema, type conflicts reject loudly. Each version pins
+    * its own schema file, so time travel reads each version's schema and
+    * partitions inherited from older versions read the new column as
+    * null.
     */
   def upsertBatchSnapshot(targetDir: String, keys: Seq[String],
-                          staleMs: Option[Long] = None,
-                          retainVersions: Int = 2,
+                          partitionCol: Option[String] = None,
                           mergeSchema: Boolean = false)
                          (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
-      val cur = graft.state.SnapshotStore.currentVersion(fs, root)
-      if (!cur.exists(_ >= batchId)) {
-        // mergeSchema = Delta autoMerge semantics (schema evolution on
-        // write): a batch carrying a never-seen column unions it into the
-        // committed schema; committed versions stay pinned (time travel
-        // reads each version's own schema), type conflicts reject loudly
-        val mergeFn: (DataFrame, DataFrame, Seq[String]) => DataFrame =
-          if (mergeSchema) Upsert.upsertEvolve else Upsert.upsert
-        val merged = cur match {
-          case Some(v) => mergeFn(
-            spark.read.parquet(new Path(
-              graft.state.SnapshotStore.versionDir(root, v), "data").toString),
-            batch, keys)
-          case None => batch
-        }
-        graft.state.SnapshotStore.commit(fs, root, batchId,
-          Map("data" -> merged), retainVersions)
-      }
+    withWriterLock(fs, root, resolveStaleMs(spark)) {
+      if (!graft.state.SnapshotStore.currentVersion(fs, root).exists(_ >= batchId))
+        graft.state.ManifestStore.commit(spark, root, batchId,
+          Seq(graft.state.ManifestStore.TableCommit("", batch, keys, partitionCol)),
+          graft.state.ManifestStore.RowMerge(
+            if (mergeSchema) Upsert.upsertEvolve else Upsert.upsert))
     }
   }
 
   /** Snapshot-isolated read of a table maintained by
-    * [[upsertBatchSnapshot]] — current version, or any retained batch id
-    * via `versionAsOf`.
+    * [[upsertBatchSnapshot]] (partitioned or not) — the current version,
+    * or any still-resolvable batch id via `versionAsOf`.
     */
   def readSnapshot(spark: SparkSession, targetDir: String,
                    versionAsOf: Option[Long] = None): DataFrame =
-    graft.state.SnapshotStore.read(spark, targetDir, "data", versionAsOf)
-
-  /** [[upsertPartitionedBatch]] with READER snapshot isolation — the
-    * partition-manifest commit ([[graft.state.ManifestStore]]): per-batch
-    * write cost stays O(touched partitions) (untouched partitions are
-    * inherited by manifest reference, never copied), readers resolve one
-    * atomic pointer, and a manifest referencing more than
-    * `maxManifestVersions` versions triggers a compacting full rewrite so
-    * reader fan-in stays bounded. Same single-writer lock, replay gate,
-    * and partition-stability precondition as the other partitioned sink.
-    */
-  def upsertPartitionedBatchSnapshot(targetDir: String, keys: Seq[String],
-                                     partitionCol: String,
-                                     staleMs: Option[Long] = None,
-                                     maxManifestVersions: Int = 16,
-                                     retentionMs: Long = 10 * 60 * 1000L,
-                                     mergeSchema: Boolean = false)
-                                    (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
-      if (!graft.state.SnapshotStore.currentVersion(fs, root).exists(_ >= batchId))
-        // evolution composes with the manifest layout for free: the new
-        // version's schema file carries the union, and readManifested
-        // reads every inherited (untouched, older-schema) partition group
-        // with that pinned schema — parquet fills the missing column with
-        // nulls; versionAsOf reads stay pinned to their own schema file
-        graft.state.ManifestStore.commitPartitioned(spark, root, batchId,
-          batch, keys, partitionCol, graft.state.ManifestStore.RowMerge(
-            if (mergeSchema) Upsert.upsertEvolve else Upsert.upsert),
-          maxManifestVersions, retentionMs)
-    }
-  }
-
-  /** Snapshot-isolated read of a table maintained by
-    * [[upsertPartitionedBatchSnapshot]] — current version, or any
-    * still-resolvable batch id via `versionAsOf`.
-    */
-  def readPartitionedSnapshot(spark: SparkSession, targetDir: String,
-                              versionAsOf: Option[Long] = None): DataFrame =
     graft.state.ManifestStore.read(spark, targetDir, versionAsOf)
-
-  /** Partition-aware variant of [[upsertBatch]]: only the partitions the
-    * micro-batch touches are read, merged, and rewritten (dynamic
-    * partition overwrite). [[upsertBatch]] rewrites the whole table per
-    * batch — fine for KPI-sized tables, O(table) at 100 TB; this one is
-    * O(touched partitions). The driver-side collect is of partition
-    * VALUES only (a bounded, tiny list — e.g. the days present in one
-    * batch), never data rows.
-    *
-    * Precondition: a key's partition value is stable across updates (the
-    * usual case — the partition column is derived from the key, e.g. the
-    * day of an event date). An update that MOVED a key to a different
-    * partition would insert it there while the old partition (untouched by
-    * the batch) still holds the stale row; use [[upsertBatch]] when keys
-    * can migrate.
-    */
-  def upsertPartitionedBatch(targetDir: String, keys: Seq[String],
-                             partitionCol: String,
-                             staleMs: Option[Long] = None)
-                            (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(targetDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(root, "data")
-    withWriterLock(fs, root, resolveStaleMs(spark, staleMs)) {
-    recoverBackup(fs, root, cur)
-    recoverPartitionBackups(fs, root, cur, partitionCol)
-    val touched = batch.select(partitionCol).distinct().collect().map(_.get(0))
-    // isin(null) never matches — a null partition value must be selected
-    // with an explicit isNull arm or its stored rows would be dropped when
-    // the staged __HIVE_DEFAULT_PARTITION__ dir replaces the destination.
-    val (nullTouched, nonNull) = touched.partition(_ == null)
-    val pc = org.apache.spark.sql.functions.col(partitionCol)
-    val touchedPred =
-      if (nullTouched.isEmpty) pc.isin(nonNull: _*)
-      else if (nonNull.isEmpty) pc.isNull
-      else pc.isin(nonNull: _*) || pc.isNull
-    val merged =
-      if (fs.exists(cur)) {
-        val old = spark.read.parquet(cur.toString).filter(touchedPred)
-        Upsert.upsert(old, batch, keys)
-      } else batch
-    // Stage first, swap after: writing straight into `cur` would overwrite
-    // the path the merged plan is still reading (and a crash mid-commit
-    // would lose the touched partitions; code-review r3). The staged
-    // partition directory names carry Spark's own value escaping, so the
-    // swap lists them instead of reconstructing names from values.
-    val stage = new Path(root, s"_staging_$batchId")
-    // cluster by the partition column first — one file per touched dir
-    // instead of one per (task, dir), explicit partition count so AQE
-    // cannot serialize the dir creation into one task; see
-    // ManifestStore.stageTable (guide §6 small files)
-    merged.repartition(
-        spark.sessionState.conf.numShufflePartitions, pc)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(stage.toString)
-    if (!fs.exists(cur)) fs.mkdirs(cur)
-    fs.listStatus(stage)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .foreach { p =>
-        val dest = new Path(cur, p.getPath.getName)
-        val bak = new Path(root, s"_bak_${batchId}_${p.getPath.getName}")
-        if (fs.exists(dest)) fs.rename(dest, bak)
-        fs.rename(p.getPath, dest)
-        fs.delete(bak, true)
-      }
-    fs.delete(stage, true)
-    }
-  }
 
   /** Streaming daily KPIs in bounded state (ST5, the reference's second
     * table, transform.py:359-365): a cumulative update-mode aggregation of
@@ -498,9 +359,10 @@ object StreamingPipeline {
     * sketches stand in for the streaming-unsafe exact countDistinct, so
     * each day's state is a fixed-size sketch however many orders it sees,
     * and the distinct counts are approximate. Each micro-batch merges and
-    * swaps only the `order_date` partitions it touched
-    * ([[upsertPartitionedBatch]]; the partition is the key itself, so the
-    * partition-stability precondition holds by construction).
+    * commits only the `order_date` partitions it touched
+    * ([[upsertBatchSnapshot]] partitioned by day; the partition is the key
+    * itself, so the partition-stability precondition holds by
+    * construction). Read the table with [[readSnapshot]].
     *
     * The EXACT streaming writer of both reference tables is
     * [[JointKpis.writerManifested]], which carries per-day distinct-id
@@ -512,6 +374,6 @@ object StreamingPipeline {
       .writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch(upsertPartitionedBatch(targetDir,
-        Seq("order_date"), "order_date") _)
+      .foreachBatch(upsertBatchSnapshot(targetDir,
+        Seq("order_date"), Some("order_date")) _)
 }

@@ -44,6 +44,23 @@ class GroupingSpec extends SparkSpec {
     assert(ids(Grouping.allValuesPresent(facts, "k", "p", dim, "pid")) == Set(1L, 3L))
   }
 
+  test("allValuesPresent with a dim derived from the facts drops keys holding a missing value") {
+    // the dim shares the facts' lineage: its key column is the facts'
+    // own `v` attribute, so a join on facts(v) === dim(v) is the
+    // trivially true `v = v`. Only Dataset's self-join auto-resolution (an
+    // internal setting, on by default) rewrites that into a real
+    // comparison; the operator must not depend on it.
+    val facts = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 12L)).toDF("k", "v")
+    val dim = facts.select("v").distinct().filter($"v" =!= 11L)
+    val autoResolve = "spark.sql.selfJoinAutoResolveAmbiguity"
+    Seq("true", "false").foreach { auto =>
+      spark.conf.set(autoResolve, auto)
+      try assert(ids(Grouping.allValuesPresent(facts, "k", "v", dim, "v")) ==
+        Set(2L, 3L), s"$autoResolve=$auto")
+      finally spark.conf.unset(autoResolve)
+    }
+  }
+
   test("containment lists every group whose set contains the wanted id, sorted") {
     val manifest = Grouping.valueSetPerKey(
       Seq((10L, "a"), (20L, "a"), (20L, "b"), (30L, "c")).toDF("g", "id"),

@@ -264,7 +264,7 @@ class SimilaritySpec extends SparkSpec {
     // Similarity.scala call sites), so a serve that re-trained would
     // necessarily launch jobs DURING plan construction. The only jobs
     // allowed are the stored tables' parquet METADATA reads (call site
-    // inside SnapshotStore.read) — zero training jobs.
+    // inside ManifestStore.readTable) — zero training jobs.
     val marker = new java.util.concurrent.atomic.AtomicInteger
     val offending = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
@@ -272,10 +272,10 @@ class SimilaritySpec extends SparkSpec {
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         val grp = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        // stage names carry the call site ("parquet at SnapshotStore…")
+        // stage names carry the call site ("parquet at ManifestStore…")
         val sites = e.stageInfos.map(_.name).mkString("; ")
         if (grp.contains("ivfpq_serve_marker")) marker.incrementAndGet()
-        else if (!sites.contains("SnapshotStore")) offending.add(sites)
+        else if (!sites.contains("ManifestStore")) offending.add(sites)
       }
     }
     spark.sparkContext.addSparkListener(l)
@@ -316,7 +316,7 @@ class SimilaritySpec extends SparkSpec {
     // job audit (the ivfPq serve stance): the extrema aggregation is an
     // eager driver-side collect, so a serve that re-derived bounds would
     // launch a non-metadata job during plan construction; only the stored
-    // tables' parquet metadata reads (SnapshotStore call site) may run
+    // tables' parquet metadata reads (ManifestStore call site) may run
     val marker = new java.util.concurrent.atomic.AtomicInteger
     val offending = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
@@ -326,7 +326,7 @@ class SimilaritySpec extends SparkSpec {
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
         val sites = e.stageInfos.map(_.name).mkString("; ")
         if (grp.contains("sq8_serve_marker")) marker.incrementAndGet()
-        else if (!sites.contains("SnapshotStore")) offending.add(sites)
+        else if (!sites.contains("ManifestStore")) offending.add(sites)
       }
     }
     spark.sparkContext.addSparkListener(l)

@@ -1,13 +1,9 @@
 package graft.pipeline
 
-import java.nio.file.Files
 import graft.SparkSpec
-import graft.state.FileState
 import graft.validate.TableRules
 
-/** §7.1 orchestration: validate → gate → transform, plus the processed-file
-  * state module (ST2 batch form).
-  */
+/** §7.1 orchestration: validate → gate → transform. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -103,38 +99,5 @@ class PipelineSpec extends SparkSpec {
     assert(report("3_lang") == 20L && report("4_ppl") == 0L)
     assert(res.packed.count() == 0L)
     graft.operators.Dedup.clearCaches()
-  }
-
-  test("FileState: pending diff, mark, save/load roundtrip, idempotent re-run") {
-    val dir = Files.createTempDirectory("graft_state").toString + "/state.parquet"
-    val s0 = FileState.load(spark, dir)
-    assert(s0.isEmpty)
-
-    val arrived = Seq("f1", "f2", "f3").toDF("path")
-    val todo1 = FileState.pending(arrived, s0)
-    assert(todo1.collect().map(_.getString(0)).toSet == Set("f1", "f2", "f3"))
-
-    FileState.save(FileState.markProcessed(s0, todo1), dir)
-    val s1 = FileState.load(spark, dir)
-    assert(s1.collect().map(_.getString(0)).toSet == Set("f1", "f2", "f3"))
-
-    // re-run with the same arrivals: nothing pending (exactly-once per file)
-    assert(FileState.pending(arrived, s1).isEmpty)
-
-    // a new arrival is the only pending one
-    val arrived2 = Seq("f1", "f4").toDF("path")
-    assert(FileState.pending(arrived2, s1).collect().map(_.getString(0)).toSeq == Seq("f4"))
-
-    // saving twice is stable
-    FileState.save(FileState.markProcessed(s1, FileState.pending(arrived2, s1)), dir)
-    assert(FileState.load(spark, dir).count() == 4L)
-
-    // crash simulation: state renamed to its backup name (the window
-    // between save()'s two renames) must be restored by load()
-    val p = new java.io.File(dir)
-    val bak = new java.io.File(p.getParent, s".${p.getName}_bak")
-    assert(p.renameTo(bak))
-    assert(FileState.load(spark, dir).count() == 4L)
-    assert(p.exists() && !bak.exists())
   }
 }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.streaming.StreamingPipeline
 
-/** Partition-manifest snapshot commits: O(touched) writes with reader
-  * isolation, manifest inheritance, compaction bounding reader fan-in,
-  * crash safety, replay skip, null partitions, and version reclamation.
+/** Manifest snapshot commits: O(touched) writes with reader isolation,
+  * manifest inheritance, compaction bounding reader fan-in, crash safety
+  * (partitioned and unpartitioned layouts), replay skip, null partitions,
+  * and version reclamation.
   */
 class ManifestStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -17,15 +18,26 @@ class ManifestStoreSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def table(root: String) =
-    StreamingPipeline.readPartitionedSnapshot(spark, root)
+    StreamingPipeline.readSnapshot(spark, root)
       .select("k", "v", "day").collect()
       .map(r => (r.getLong(0), r.getDouble(1),
         Option(r.getString(2)).getOrElse("NULL"))).toSet
 
+  /** A single-table row-merge commit with the store's tuning knobs set
+    * (the snapshot sink leaves them at their defaults).
+    */
+  private def commitRows(root: String, maxManifestVersions: Int = 16,
+                         retentionMs: Long = 10 * 60 * 1000L)
+                        (b: org.apache.spark.sql.DataFrame, i: Long): Unit =
+    ManifestStore.commit(spark, new Path(root), i,
+      Seq(ManifestStore.TableCommit("", b, Seq("k"), Some("day"))),
+      ManifestStore.RowMerge(graft.operators.Upsert.upsert),
+      maxManifestVersions, retentionMs)
+
   test("touched partitions merge; untouched partitions are inherited, not copied") {
     val root = tmp("graft_mfs")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a"), (2L, 1.0, "b")).toDF("k", "v", "day"), 0L)
     // batch 1 touches ONLY day=a: k=1 updated, k=3 inserted
     sink(Seq((1L, 9.0, "a"), (3L, 3.0, "a")).toDF("k", "v", "day"), 1L)
@@ -41,8 +53,8 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("a null partition value rides __HIVE_DEFAULT_PARTITION__ and merges") {
     val root = tmp("graft_mfs_null")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, null: String), (2L, 1.0, "b")).toDF("k", "v", "day"), 0L)
     sink(Seq((1L, 5.0, null: String)).toDF("k", "v", "day"), 1L)
     assert(table(root) == Set((1L, 5.0, "NULL"), (2L, 1.0, "b")))
@@ -69,11 +81,11 @@ class ManifestStoreSpec extends SparkSpec {
       (7L, 71.0, "NULL"), (8L, 80.0, "NULL"))
     val kinds = Seq[(String, (String, org.apache.spark.sql.DataFrame, Long) => Unit)](
       "row merge" -> { (root, b, i) =>
-        StreamingPipeline.upsertPartitionedBatchSnapshot(
-          root, Seq("k"), "day", maxManifestVersions = 3, retentionMs = 0L)(b, i) },
+        commitRows(root, maxManifestVersions = 3, retentionMs = 0L)(b, i) },
       "partition replace" -> { (root, b, i) =>
-        ManifestStore.commitPartitioned(spark, new Path(root), i, b, Seq("k"),
-          "day", ManifestStore.ReplacePartitions, maxManifestVersions = 3,
+        ManifestStore.commit(spark, new Path(root), i,
+          Seq(ManifestStore.TableCommit("", b, Seq("k"), Some("day"))),
+          ManifestStore.ReplacePartitions, maxManifestVersions = 3,
           retentionMs = 0L) })
     kinds.foreach { case (kind, commit) =>
       val root = tmp("graft_mfs_compact")
@@ -86,7 +98,7 @@ class ManifestStoreSpec extends SparkSpec {
           s"$kind: batch $i fans into ${manifest.values.toSet.size} versions: $manifest")
       }
       assert(table(root) == expected.toSet, kind)
-      assert(StreamingPipeline.readPartitionedSnapshot(spark, root).count() ==
+      assert(StreamingPipeline.readSnapshot(spark, root).count() ==
         expected.size, s"$kind: duplicated rows")
       // reclamation: only versions referenced by the live or previous
       // manifest survive on disk
@@ -98,14 +110,14 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("partition-column type stays pinned across version groups") {
     val root = tmp("graft_mfs_ptype")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     // v0's partitions ALL look numeric — standalone inference would type
     // `day` as int for that group; v1's partition is plainly a string.
     // The committed _schema pins StringType for every group (ADVICE r06).
     sink(Seq((1L, 1.0, "1"), (2L, 1.0, "2")).toDF("k", "v", "day"), 0L)
     sink(Seq((3L, 3.0, "x3")).toDF("k", "v", "day"), 1L)
-    val df = StreamingPipeline.readPartitionedSnapshot(spark, root)
+    val df = StreamingPipeline.readSnapshot(spark, root)
     assert(df.schema("day").dataType == org.apache.spark.sql.types.StringType,
       s"partition column type diverged: ${df.schema("day").dataType}")
     assert(table(root) == Set((1L, 1.0, "1"), (2L, 1.0, "2"), (3L, 3.0, "x3")))
@@ -115,8 +127,8 @@ class ManifestStoreSpec extends SparkSpec {
     val root = tmp("graft_mfs_crash")
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a")).toDF("k", "v", "day"), 0L)
     // simulate batch 1 dying after its data write, before manifest+pointer
     Seq((1L, 9.0, "a")).toDF("k", "v", "day")
@@ -131,17 +143,46 @@ class ManifestStoreSpec extends SparkSpec {
     assert(table(root) == Set((1L, 9.0, "a")))
   }
 
+  test("an unpartitioned commit killed before its pointer is invisible; its replay commits") {
+    val root = tmp("graft_mfs_crash_whole")
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sink = StreamingPipeline.upsertBatchSnapshot(root, Seq("k")) _
+    def rows() = StreamingPipeline.readSnapshot(spark, root).select("k", "v")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+    sink(Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v"), 1L)
+    // kill batch 2 after it staged its data, before the pointer: a
+    // directory squatting on the version's `_schema` path fails that write
+    val squat = new Path(SnapshotStore.versionDir(rootPath, 2L), "_schema")
+    fs.mkdirs(squat)
+    val batch2 = Seq((2L, 20.0), (3L, 3.0)).toDF("k", "v")
+    intercept[java.io.IOException](sink(batch2, 2L))
+    assert(fs.exists(new Path(SnapshotStore.versionDir(rootPath, 2L), "data")),
+      "the kill must land after the data was staged")
+    assert(SnapshotStore.currentVersion(fs, rootPath).contains(1L))
+    assert(rows() == Set((1L, 1.0), (2L, 2.0)), "reader saw an uncommitted version")
+    // the restarted query replays batch 2: it overwrites its own staged
+    // dir and commits the merge over version 1
+    fs.delete(squat, true)
+    sink(batch2, 2L)
+    assert(SnapshotStore.currentVersion(fs, rootPath).contains(2L))
+    assert(rows() == Set((1L, 1.0), (2L, 20.0), (3L, 3.0)))
+    // a replay of the committed id is skipped, not re-merged
+    sink(Seq((1L, 77.0)).toDF("k", "v"), 2L)
+    assert(rows() == Set((1L, 1.0), (2L, 20.0), (3L, 3.0)))
+  }
+
   test("a partition-column predicate prunes inside each manifested version group") {
     val root = tmp("graft_mfs_prune")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a"), (2L, 2.0, "b"), (3L, 3.0, "c"))
       .toDF("k", "v", "day"), 0L)
     sink(Seq((1L, 9.0, "a")).toDF("k", "v", "day"), 1L)
     // the manifest spans two version groups; a day predicate must become
     // a PartitionFilter (directory skip) in every group's scan, not a
     // post-scan row filter — the 100 TB read path
-    val q = StreamingPipeline.readPartitionedSnapshot(spark, root)
+    val q = StreamingPipeline.readSnapshot(spark, root)
       .filter(col("day") === "b")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(day#"),
@@ -158,18 +199,18 @@ class ManifestStoreSpec extends SparkSpec {
     // batch 0: A has data, B is empty — the pointer advances for A, and B
     // must neither crash subsequent commits nor surface a raw
     // FileNotFoundException to readers (code-review r7)
-    ManifestStore.commitPartitionedTables(spark, root, 0L,
-      Seq(TableCommit("A", dfA(1.0), Seq("k"), "day"),
-        TableCommit("B", emptyB, Seq("k"), "day")), ManifestStore.RowMerge(Upsert.upsert))
+    ManifestStore.commit(spark, root, 0L,
+      Seq(TableCommit("A", dfA(1.0), Seq("k"), Some("day")),
+        TableCommit("B", emptyB, Seq("k"), Some("day"))), ManifestStore.RowMerge(Upsert.upsert))
     assert(ManifestStore.readTable(spark, root.toString, "A").count() == 1L)
     val e = intercept[IllegalStateException](
       ManifestStore.readTable(spark, root.toString, "B"))
     assert(e.getMessage.contains("no committed data"), e.getMessage)
     // batch 1 commits cleanly (the old code threw reading B's missing
     // manifest and wedged the sink forever) and B becomes readable
-    ManifestStore.commitPartitionedTables(spark, root, 1L,
-      Seq(TableCommit("A", dfA(2.0), Seq("k"), "day"),
-        TableCommit("B", dfA(9.0), Seq("k"), "day")), ManifestStore.RowMerge(Upsert.upsert))
+    ManifestStore.commit(spark, root, 1L,
+      Seq(TableCommit("A", dfA(2.0), Seq("k"), Some("day")),
+        TableCommit("B", dfA(9.0), Seq("k"), Some("day"))), ManifestStore.RowMerge(Upsert.upsert))
     assert(ManifestStore.readTable(spark, root.toString, "B")
       .select("v").as[Double].collect().toSeq == Seq(9.0))
     assert(ManifestStore.readTable(spark, root.toString, "A")
@@ -178,19 +219,18 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("versionAsOf resolves retained manifests; a reclaimed one errors loudly") {
     val root = tmp("graft_mfs_tt")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a")).toDF("k", "v", "day"), 0L)
     sink(Seq((1L, 9.0, "a"), (2L, 2.0, "b")).toDF("k", "v", "day"), 1L)
     def vAt(versionAsOf: Option[Long]) =
-      StreamingPipeline.readPartitionedSnapshot(spark, root, versionAsOf)
+      StreamingPipeline.readSnapshot(spark, root, versionAsOf)
         .select("k", "v").collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     assert(vAt(None) == Set((1L, 9.0), (2L, 2.0)))
     assert(vAt(Some(0L)) == Set((1L, 1.0)), "the pinned read sees the old epoch")
     // eager reclamation (retentionMs = 0) erodes the history: after three
     // same-partition commits v0 is gone and a pinned read must say so
-    val eager = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day", retentionMs = 0L) _
+    val eager = commitRows(root, retentionMs = 0L) _
     eager(Seq((1L, 10.0, "a")).toDF("k", "v", "day"), 2L)
     eager(Seq((1L, 11.0, "a")).toDF("k", "v", "day"), 3L)
     val e = intercept[IllegalStateException](vAt(Some(0L)))
@@ -200,15 +240,14 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("a concurrent reader during a partitioned commit loop never errors") {
     val root = tmp("graft_mfs_reader")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day", maxManifestVersions = 4) _
+    val sink = commitRows(root, maxManifestVersions = 4) _
     sink(Seq((0L, 0.0, "d0")).toDF("k", "v", "day"), 0L)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     @volatile var stop = false
     val reader = new Thread(() => {
       while (!stop) {
         try {
-          if (StreamingPipeline.readPartitionedSnapshot(spark, root).count() < 1L)
+          if (StreamingPipeline.readSnapshot(spark, root).count() < 1L)
             errors.add(new IllegalStateException("empty read"))
         } catch { case t: Throwable => errors.add(t) }
       }
@@ -221,13 +260,13 @@ class ManifestStoreSpec extends SparkSpec {
     } finally { stop = true; reader.join(20000) }
     assert(errors.isEmpty,
       s"reader hit ${errors.size} errors; first: ${Option(errors.peek())}")
-    assert(StreamingPipeline.readPartitionedSnapshot(spark, root).count() == 61L)
+    assert(StreamingPipeline.readSnapshot(spark, root).count() == 61L)
   }
 
   test("deletePartitioned removes keys O(touched); untouched partitions inherit") {
     val root = tmp("graft_mfs_del")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a"), (2L, 2.0, "a"), (3L, 3.0, "b"), (4L, 4.0, "c"))
       .toDF("k", "v", "day"), 0L)
     ManifestStore.deletePartitioned(spark, new Path(root), 1L,
@@ -241,8 +280,8 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("deletePartitioned: an emptied partition leaves the manifest (no resurrection)") {
     val root = tmp("graft_mfs_del_empty")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("k", "v", "day"), 0L)
     ManifestStore.deletePartitioned(spark, new Path(root), 1L,
       Seq((1L, "a")).toDF("k", "day"), Seq("k"), "day")
@@ -254,20 +293,20 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("deletePartitioned: delete-all reads back as an empty TYPED table") {
     val root = tmp("graft_mfs_del_all")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("k", "v", "day"), 0L)
     ManifestStore.deletePartitioned(spark, new Path(root), 1L,
       Seq((1L, "a"), (2L, "b")).toDF("k", "day"), Seq("k"), "day")
-    val empty = StreamingPipeline.readPartitionedSnapshot(spark, root)
+    val empty = StreamingPipeline.readSnapshot(spark, root)
     assert(empty.count() == 0L)
     assert(empty.columns.toSet == Set("k", "v", "day"))
   }
 
   test("deletePartitioned: keys in absent partitions and null partitions behave") {
     val root = tmp("graft_mfs_del_misc")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day") _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day")) _
     sink(Seq((1L, 1.0, null: String), (2L, 2.0, "b")).toDF("k", "v", "day"), 0L)
     // absent partition: no-op, pointer still at v0
     ManifestStore.deletePartitioned(spark, new Path(root), 1L,
@@ -282,14 +321,14 @@ class ManifestStoreSpec extends SparkSpec {
 
   test("schema evolution: new column unions in; inherited partitions read null") {
     val root = tmp("graft_mfs_evolve")
-    val sink = StreamingPipeline.upsertPartitionedBatchSnapshot(
-      root, Seq("k"), "day", mergeSchema = true) _
+    val sink = StreamingPipeline.upsertBatchSnapshot(
+      root, Seq("k"), Some("day"), mergeSchema = true) _
     sink(Seq((1L, 1.0, "a"), (2L, 2.0, "b")).toDF("k", "v", "day"), 0L)
     // batch 1 carries a NEW column and touches ONLY day=a — day=b is
     // inherited by manifest reference with its v0 (pre-evolution) files
     sink(Seq((1L, 9.0, "tag1", "a"), (3L, 3.0, "tag3", "a"))
       .toDF("k", "v", "note", "day"), 1L)
-    val out = StreamingPipeline.readPartitionedSnapshot(spark, root)
+    val out = StreamingPipeline.readSnapshot(spark, root)
     assert(out.columns.toSet == Set("k", "v", "note", "day"))
     val m = out.collect().map(r =>
       (r.getLong(r.fieldIndex("k")),
@@ -301,7 +340,7 @@ class ManifestStoreSpec extends SparkSpec {
     assert(m(2L) == ((2.0, None, "b")),
       "inherited pre-evolution partition reads the new column as null")
     // time travel stays PINNED: version 0 reads with its own schema
-    val v0 = StreamingPipeline.readPartitionedSnapshot(spark, root, Some(0L))
+    val v0 = StreamingPipeline.readSnapshot(spark, root, Some(0L))
     assert(v0.columns.toSet == Set("k", "v", "day"),
       "versionAsOf must not see a column committed later")
     // type conflict rejects loudly, and the pointer stays on v1

@@ -113,4 +113,20 @@ class AnnStreamSpec extends SparkSpec {
         tmp("annspec_k0"), tmp("annspec_k0_cp"), k = 0)
     }
   }
+
+  test("writer rejects refitEvery < 1 before any batch runs") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, Seq[Double])]
+    // the cadence is `batchId % refitEvery`: 0 divides by zero, a negative
+    // cadence never matches — either must fail at construction, not on
+    // the first non-empty micro-batch
+    Seq(0, -1).foreach { r =>
+      val e = intercept[IllegalArgumentException] {
+        AnnStream.writer(in.toDF().toDF("vec_id", "embedding"),
+          tmp("annspec_r0"), tmp("annspec_r0_cp"), k = 2, refitEvery = r)
+      }
+      assert(e.getMessage.contains("refitEvery"), e.getMessage)
+    }
+  }
 }

@@ -139,94 +139,26 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(table == Set((1L, 10.0), (2L, 21.0), (3L, 30.0)))
   }
 
-  test("partitioned upsert restores a partition stranded in a _bak_ dir by a crashed swap") {
-    val out = tmp("graft_precover")
-    val b1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-
-    // simulate a crash between rename(dest, bak) and rename(staged, dest):
-    // the 2024-01-02 partition survives only in _bak_1_day=2024-01-02
-    val part = new java.io.File(out + "/data/day=2024-01-02")
-    assert(part.renameTo(new java.io.File(out, "_bak_1_day=2024-01-02")))
-
-    // replayed batch touches only the OTHER partition — recovery must still
-    // put 2024-01-02 back before the merge reads the table
-    val b2 = Seq(("2024-01-01", 1L, 11.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-
-    val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.get(2).toString)).toSet
-    assert(table == Set((1L, 11.0, "2024-01-01"), (2L, 20.0, "2024-01-02")))
-    assert(!new java.io.File(out, "_bak_1_day=2024-01-02").exists())
-  }
-
-  test("a completed-swap partition backup is dropped, not restored over new data") {
-    val out = tmp("graft_pdone")
-    val b1 = Seq(("2024-01-01", 1L, 10.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-    // simulate a crash AFTER rename(staged, dest) but before delete(bak):
-    // dest holds the merged data, the backup holds the stale pre-merge rows
-    val stale = tmp("graft_stale")
-    Seq(("2024-01-01", 1L, -99.0)).toDF("day", "k", "v")
-      .write.parquet(stale + "/p")
-    val bak = new java.io.File(out, "_bak_0_day=2024-01-01")
-    assert(new java.io.File(stale, "p").renameTo(bak))
-
-    val b2 = Seq(("2024-01-01", 2L, 20.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-    val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-    assert(table == Set((1L, 10.0), (2L, 20.0))) // stale -99 never resurfaces
-    assert(!bak.exists())
-  }
-
   test("a partition backup is never promoted to be the whole table") {
     val out = tmp("graft_pwhole")
-    val b1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-    // worst case: the data dir is gone AND a partition backup lingers —
-    // recoverBackup must not rename the partition backup to be `data`
+    val b1 = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
+    StreamingPipeline.upsertBatch(out, Seq("k"))(b1, 0L)
+    // worst case: the data dir is gone AND a partition-named backup (the
+    // `_bak_<id>_<col>=<value>` form) lingers — recoverBackup must not
+    // rename it to be `data`
     val data = new java.io.File(out, "data")
-    val part = new java.io.File(data, "day=2024-01-02")
-    assert(part.renameTo(new java.io.File(out, "_bak_1_day=2024-01-02")))
-    assert(new java.io.File(data, "day=2024-01-01")
-      .renameTo(new java.io.File(out, "day=2024-01-01_detached")))
-    data.delete()
+    assert(data.renameTo(new java.io.File(out, "data_detached")))
+    Seq((9L, -1.0)).toDF("k", "v").write
+      .parquet(new java.io.File(out, "_bak_1_day=2024-01-02").toString)
 
-    val b2 = Seq(("2024-01-01", 1L, 11.0)).toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-    // the partition backup came back as a PARTITION (under data/), not as
-    // the table root
+    val b2 = Seq((1L, 11.0)).toDF("k", "v")
+    StreamingPipeline.upsertBatch(out, Seq("k"))(b2, 1L)
+    // nothing was promoted: the table is the new batch alone, and the
+    // partition backup is still where it was
     val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.get(2).toString)).toSet
-    assert(table == Set((1L, 11.0, "2024-01-01"), (2L, 20.0, "2024-01-02")))
-  }
-
-  test("partition-aware upsert rewrites only touched partitions") {
-    import org.apache.spark.sql.functions.col
-    val out = tmp("graft_pout")
-    val b1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b1, 0L)
-
-    // note which files back the untouched partition
-    val d2dir = new java.io.File(out + "/data/day=2024-01-02")
-    val d2files = d2dir.listFiles().map(_.getName).toSet
-
-    // batch 2 touches only 2024-01-01: update k=1, insert k=3
-    val b2 = Seq(("2024-01-01", 1L, 11.0), ("2024-01-01", 3L, 30.0))
-      .toDF("day", "k", "v")
-    StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(b2, 1L)
-
-    // partition-type inference reads day= back as DATE → compare as string
-    val table = spark.read.parquet(out + "/data")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.get(2).toString)).toSet
-    assert(table == Set((1L, 11.0, "2024-01-01"), (3L, 30.0, "2024-01-01"),
-      (2L, 20.0, "2024-01-02")))
-    // the 2024-01-02 partition's files were not rewritten
-    assert(d2dir.listFiles().map(_.getName).toSet == d2files)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
+    assert(table == Set((1L, 11.0)))
+    assert(new java.io.File(out, "_bak_1_day=2024-01-02").isDirectory)
   }
 
   // ---- streaming daily KPIs (VERDICT r04 #1: the second KPI table) ----
@@ -263,7 +195,7 @@ class StreamingPipelineSpec extends SparkSpec {
     drainD()
     // HLL++ is exact at these cardinalities (sparse mode), so the streamed
     // sketch columns must EQUAL the batch countDistinct, not just approach it
-    assert(dailyMap(spark.read.parquet(out + "/data")) ==
+    assert(dailyMap(StreamingPipeline.readSnapshot(spark, out)) ==
       dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
 
     // ST5: a late file revises d1 (new order, NEW user) — the cumulative
@@ -271,7 +203,7 @@ class StreamingPipelineSpec extends SparkSpec {
     landFile(enrichedOrderRows(Seq(
       ("o4", 3L, 10L, 20.0, false, d1))), in, "f2")
     drainD()
-    val after = dailyMap(spark.read.parquet(out + "/data"))
+    val after = dailyMap(StreamingPipeline.readSnapshot(spark, out))
     assert(after == dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
     assert(after("2024-01-01") == (3L, 65.0, 4L, 1.0 / 3, 3L))
     assert(after("2024-01-02") == (1L, 7.0, 1L, 0.0, 1L))
@@ -289,9 +221,16 @@ class StreamingPipelineSpec extends SparkSpec {
     val q = StreamingPipeline.dailyKpiWriterPartitioned(stream, out, cp)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    assert(dailyMap(spark.read.parquet(out + "/data")) ==
+    assert(dailyMap(StreamingPipeline.readSnapshot(spark, out)) ==
       dailyMap(Kpis.dailyKpis(spark.read.parquet(in))))
-    assert(new java.io.File(out + "/data/order_date=2024-01-01").isDirectory)
+    // the committed version's manifest names one partition dir per day
+    val root = new org.apache.hadoop.fs.Path(out)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = graft.state.SnapshotStore.currentVersion(fs, root).get
+    val m = graft.state.ManifestStore.readManifest(fs, root, v)
+    assert(m.keySet == Set("order_date=2024-01-01", "order_date=2024-01-02"), s"manifest $m")
+    assert(m.forall { case (d, o) => fs.isDirectory(new org.apache.hadoop.fs.Path(
+      graft.state.SnapshotStore.versionDir(root, o), d)) }, s"manifest $m")
   }
 
   test("EXACT streaming daily KPIs equal the batch computation bit-for-bit, cumulatively") {
@@ -374,13 +313,13 @@ class StreamingPipelineSpec extends SparkSpec {
       == catRows(Kpis.categoryKpis(enr)))
     val dayOut = tmp("graft_snapw_day")
     drain(Kpis.dailyKpisStreaming(_),
-      StreamingPipeline.upsertPartitionedBatchSnapshot(dayOut, Seq("order_date"),
-        "order_date"))
+      StreamingPipeline.upsertBatchSnapshot(dayOut, Seq("order_date"),
+        Some("order_date")))
     // sketch-based daily stream: compare the exact columns
     def dayRows(df: DataFrame) =
       df.select("order_date", "total_revenue", "total_items_sold").collect()
         .map(r => (r.getDate(0).toString, r.getDouble(1), r.getLong(2))).toSet
-    assert(dayRows(StreamingPipeline.readPartitionedSnapshot(spark, dayOut))
+    assert(dayRows(StreamingPipeline.readSnapshot(spark, dayOut))
       == dayRows(Kpis.dailyKpis(enr)))
   }
 
@@ -395,11 +334,12 @@ class StreamingPipelineSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("another writer"))
     assert(!new java.io.File(out, "data").exists()) // loser wrote nothing
-    // same contract on the partitioned path
+    // same contract on the snapshot sink
     val bp = Seq(("2024-01-01", 1L, 10.0)).toDF("day", "k", "v")
     intercept[IllegalStateException] {
-      StreamingPipeline.upsertPartitionedBatch(out, Seq("k"), "day")(bp, 0L)
+      StreamingPipeline.upsertBatchSnapshot(out, Seq("k"), Some("day"))(bp, 0L)
     }
+    assert(!new java.io.File(out, "_current").exists()) // nothing committed
     lock.delete()
     StreamingPipeline.upsertBatch(out, Seq("k"))(b, 0L) // released → proceeds
     assert(spark.read.parquet(out + "/data").count() == 1)
@@ -555,14 +495,11 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(!lock.exists(), "heartbeat holder failed to release its own lock")
   }
 
-  test("lock staleness is configurable via conf and writer parameter (ADVICE r5)") {
-    assert(StreamingPipeline.resolveStaleMs(spark, Some(1234L)) == 1234L)
-    assert(StreamingPipeline.resolveStaleMs(spark, None) ==
-      StreamingPipeline.LockStaleMs)
+  test("lock staleness is configurable via the Spark conf (ADVICE r5)") {
+    assert(StreamingPipeline.resolveStaleMs(spark) == StreamingPipeline.LockStaleMs)
     spark.conf.set("spark.graft.writerLock.staleMs", "5000")
     try {
-      assert(StreamingPipeline.resolveStaleMs(spark, None) == 5000L)
-      assert(StreamingPipeline.resolveStaleMs(spark, Some(7L)) == 7L)
+      assert(StreamingPipeline.resolveStaleMs(spark) == 5000L)
       // end-to-end: a foreign-host lock older than the configured bound is
       // broken where the 10-minute default would have blocked
       val out = tmp("graft_lockcfg")
