@@ -211,7 +211,9 @@ object Similarity {
 
   /** Commit a stored index's tables as version `batchId` of `root`: one
     * unpartitioned table each, replaced whole, published by one pointer
-    * rename so a serving tier never observes a half-written index.
+    * rename so a serving tier never observes a half-written index. A
+    * `batchId` at or below the root's live version throws (the store's
+    * replay gate) and leaves the served index as it was.
     */
   private def commitArtifacts(root: String, batchId: Long,
                               tables: (String, DataFrame)*): Unit =

@@ -6,11 +6,13 @@ import graft.sinks.{KvSink, KvWriter}
 import graft.transform.Kpis
 import graft.validate.{Rules, TableRules}
 
-/** Outcome of one pipeline run: the validation report, the gate verdict, and
-  * (when the gate passed) the two KPI frames. Mirrors the Step Function's
-  * terminal states (reference src/stepfunctions/stepfunction.json:3-200:
-  * ValidateData → CheckValidationStatus → TransformData → Succeed/Fail)
-  * as a typed value instead of SNS notifications.
+/** Outcome of one pipeline run: the validation report (the gate's collected
+  * rows as a local relation — reading it again runs no Spark job), the gate
+  * verdict, and (when the gate passed) the two KPI frames. Mirrors the
+  * Step Function's terminal states (reference
+  * src/stepfunctions/stepfunction.json:3-200: ValidateData →
+  * CheckValidationStatus → TransformData → Succeed/Fail) as a typed value
+  * instead of SNS notifications.
   */
 case class PipelineResult(report: DataFrame, passed: Boolean,
                           categoryKpis: Option[DataFrame],
@@ -18,9 +20,10 @@ case class PipelineResult(report: DataFrame, passed: Boolean,
 
 /** Orchestration-as-code — the reference's Step Function DAG
   * (stepfunction.json:3-200) as sequential driver code over one
-  * SparkSession. Validation and transformation are lazy Catalyst plans in
-  * the same process; the only materializations are the gate (one tiny
-  * report aggregation) and whatever sinks the caller drains into.
+  * SparkSession. Transformation is a lazy Catalyst plan in the same
+  * process; the only materializations are the gate (one collected action:
+  * one scan per validated table, see [[graft.validate.Rules]]) and
+  * whatever sinks the caller drains into.
   *
   * The reference's Choice state only checks that the validation *task ran*
   * (stepfunction.json:81-91; the container always exits 0,

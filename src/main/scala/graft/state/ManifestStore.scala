@@ -363,6 +363,14 @@ object ManifestStore {
       .foreach(v => fs.delete(SnapshotStore.versionDir(root, v), true))
   }
 
+  /** The replay gate every commit path enforces: a batch id at or below
+    * the live version would re-stage `v_<batchId>` under the live pointer
+    * (or roll it back).
+    */
+  private def requireAhead(root: Path, batchId: Long, live: Long): Unit =
+    require(batchId > live, s"batch $batchId is not ahead of the live " +
+      s"version $live of $root — gate replayed batch ids before committing")
+
   /** One table of a commit. `name` "" is the single-table layout (the
     * commit's only table); `partitionCol` None is an unpartitioned table;
     * `keys` feed a [[RowMerge]] and are unused by [[ReplacePartitions]].
@@ -379,7 +387,9 @@ object ManifestStore {
     * before the pointer leaves every table on the previous epoch, and
     * a replay of the batch id overwrites its own uncommitted dir. Caller
     * holds the writer lock when writers can race, and gates replayed
-    * batch ids ([[SnapshotStore.currentVersion]] ≥ batchId).
+    * batch ids ([[SnapshotStore.currentVersion]] ≥ batchId): a `batchId`
+    * at or below the live version throws IllegalArgumentException rather
+    * than re-stage a version under the live pointer.
     */
   def commit(spark: SparkSession, root: Path, batchId: Long,
              tables: Seq[TableCommit], merge: PartitionMerge,
@@ -393,6 +403,7 @@ object ManifestStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(root)
     val cur = SnapshotStore.currentVersion(fs, root)
+    cur.foreach(requireAhead(root, batchId, _))
     val prevManifests = tables.map { t =>
       cur.map(v => readManifestOrEmpty(fs, root, v, t.name)).getOrElse(Map.empty)
     }
@@ -431,7 +442,7 @@ object ManifestStore {
     * written form — true of every store in this repo).
     *
     * Caller holds the writer lock and gates replayed batch ids, same as
-    * every commit path here.
+    * [[commit]] (a replayed id throws the same way).
     */
   def deletePartitioned(spark: SparkSession, root: Path, batchId: Long,
                         delKeys: DataFrame, keys: Seq[String],
@@ -443,6 +454,7 @@ object ManifestStore {
     val cur = SnapshotStore.currentVersion(fs, root).getOrElse(
       throw new IllegalStateException(
         s"deletePartitioned: no committed table under $root"))
+    requireAhead(root, batchId, cur)
     val prevManifest = readManifest(fs, root, cur)
     val prevSchema = readSchemaAt(fs, root, cur, "")
     val touched = delKeys.select(partitionCol).distinct().collect()

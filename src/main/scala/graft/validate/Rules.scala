@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,13 +32,27 @@ case class TableRules(
   * aggregations.
   *
   * Scale design: the reference loads each whole file into driver memory
-  * (validate.py:183,207-210). Here every *content* rule (null counts, set
-  * membership, range, emptiness — P3, P5, P6, P7, A6) folds into ONE
-  * aggregation pass over the table: a single scan, map-side partial
-  * aggregation, one 1-row exchange. Duplicate-key detection (A7) is the one
-  * rule that needs a groupBy shuffle on the key — at 100 TB that is a
-  * hash-partitioned count per key with map-side combine, never a driver set.
-  * Schema rules (P8, P9) read `df.schema` only — no job at all.
+  * and checks it in one pass (validate.py:183,199-247). Here every counted
+  * rule of a table folds into ONE scan of it:
+  *
+  *  - a keyed table is one `groupBy(uniqueKey)` (hash-partitioned with
+  *    map-side combine — never a driver set) carrying the key's row count
+  *    plus a partial count per content rule (null in a required column,
+  *    status outside the whitelist, negative value — P3, P5, P6). Each
+  *    partition of those per-key rows then sums the partials, counts the
+  *    keys seen more than once (A7) and the rows, in place — no second
+  *    exchange — leaving one small row per partition; emptiness (P7) is
+  *    the summed row count being 0;
+  *  - a table without a unique key, or whose key column is missing, is
+  *    one global aggregate and reports no duplicate-key rule.
+  *
+  * Exists-style checks (A6) are the same counts consumed as `> 0`. Schema
+  * rules (P8, P9) read `df.schema` only — no job at all. [[report]]
+  * collects every table's per-partition rows in ONE action (a two-table
+  * gate call is two shuffle jobs plus that one) and sums them on the
+  * driver; it hands the rows back as a local relation, so [[passed]] and
+  * every later read of the report run no Spark job. [[evaluate]] sums the
+  * same rows with a lazy global aggregate instead.
   */
 object Rules {
 
@@ -75,81 +89,118 @@ object Rules {
       RuleResult(cfg.table, NonIntegralType, c, if (ok) 0L else 1L)
     }
 
-  /** All single-pass content rules as aggregate columns over one scan:
-    * null-in-required (P3), invalid status (P5), negative value (P6),
-    * empty relation (P7). Exists-style checks (A6) are the same counts
-    * consumed as `> 0`.
+  /** The content rules as `(rule, column, row predicate)`, in report
+    * order: null in a required column (P3), invalid status (P5), negative
+    * value (P6). The gate counts them per table, [[groupReport]] per group.
     */
-  private def contentAggs(cfg: TableRules, present: String => Boolean)
-      : Seq[(String, String, Column)] = {
-    // coalesce: sum() over an empty relation is NULL, which would make every
-    // content rule on an empty table report violation_count = null and slip
-    // past the `> 0` gate (VERDICT r02 #2). Empty input is EmptyRelation's
-    // job to flag; the counting rules must report an honest 0.
-    def cnt(pred: Column) = coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
-    val nulls = cfg.requiredColumns.filter(present).map { c =>
-      (NullRequired, c, cnt(col(c).isNull))
-    }
-    val status = cfg.statusColumn.filter(present).toSeq.map { c =>
-      (InvalidStatus, c, cnt(col(c).isNotNull && !col(c).isin(cfg.validStatuses: _*)))
-    }
-    val negative = cfg.nonNegativeColumns.filter(present).map { c =>
-      (NegativeValue, c, cnt(col(c) < lit(0)))
-    }
-    val empty = Seq((EmptyRelation, "*",
-      when(count(lit(1)) === 0L, 1L).otherwise(0L)))
-    nulls ++ status ++ negative ++ empty
+  private def contentRules(df: DataFrame, cfg: TableRules): Seq[(String, String, Column)] = {
+    val present = (c: String) => df.columns.contains(c)
+    cfg.requiredColumns.filter(present).map(c => (NullRequired, c, col(c).isNull)) ++
+      cfg.statusColumn.filter(present).toSeq.map(c =>
+        (InvalidStatus, c, col(c).isNotNull && !col(c).isin(cfg.validStatuses: _*))) ++
+      cfg.nonNegativeColumns.filter(present).map(c => (NegativeValue, c, col(c) < lit(0)))
   }
 
-  /** A7: count of key values that occur more than once — one groupBy on the
-    * key (hash-partitioned, map-side combined), then a 1-row count.
+  private def hits(pred: Column): Column = when(pred, 1L).otherwise(0L)
+
+  // coalesce: sum() over an empty relation is NULL, which would make every
+  // content rule on an empty table report violation_count = null and slip
+  // past the `> 0` gate (VERDICT r02 #2). Empty input is EmptyRelation's
+  // job to flag; the counting rules must report an honest 0.
+  private def total(c: Column): Column = coalesce(sum(c), lit(0L))
+
+  /** One table's counted rules: their `(rule, column)` names in report
+    * order — content rules, empty relation, then (keyed tables only)
+    * duplicate key — and `partials`, a frame of `v: array<long>` rows whose
+    * element-wise sum is one count per rule, except that the empty
+    * relation's slot sums to the table's row count (0 ⇒ the flag is 1).
+    */
+  private final case class Counted(rules: Seq[(String, String)], partials: DataFrame)
+
+  private val PartialsEncoder = Encoders.row(StructType(Seq(
+    StructField("v", ArrayType(LongType, containsNull = false), nullable = false))))
+
+  private def counted(df: DataFrame, cfg: TableRules): Counted = {
+    val content = contentRules(df, cfg)
+    val names = content.map { case (rule, c, _) => (rule, c) } :+ (EmptyRelation, "*")
+    if (cfg.uniqueKey.nonEmpty && cfg.uniqueKey.forall(df.columns.contains)) {
+      val k = content.size
+      // the one shuffle: per key, its row count and each rule's partial count
+      val perKey = df.groupBy(cfg.uniqueKey.map(col): _*)
+        .agg(count(lit(1)).as("__n"),
+          content.zipWithIndex.map { case ((_, _, pred), i) => sum(hits(pred)).as(s"__p$i") }: _*)
+        .select(col("__n") +: content.indices.map(i => col(s"__p$i")): _*)
+      // each key lives in one partition, so summing per partition loses
+      // nothing: [content partials..., rows, keys seen twice or more]
+      val partials = perKey.mapPartitions { rows =>
+        val acc = new Array[Long](k + 2)
+        rows.foreach { r =>
+          var i = 0
+          while (i < k) { acc(i) += r.getLong(i + 1); i += 1 }
+          acc(k) += r.getLong(0)
+          if (r.getLong(0) > 1L) acc(k + 1) += 1L
+        }
+        Iterator(Row(acc.toSeq))
+      }(PartialsEncoder)
+      Counted(names :+ ((DuplicateKey, cfg.uniqueKey.mkString(","))), partials)
+    } else
+      Counted(names,
+        df.select(array(content.map(r => total(hits(r._3))) :+ count(lit(1)): _*).as("v")))
+  }
+
+  /** A7 on its own: count of key values that occur more than once — one
+    * groupBy on the key, then a 1-row count. The gate folds the same count
+    * into its per-table aggregation.
     */
   def duplicateKeyCount(df: DataFrame, key: Seq[String]): DataFrame =
     df.groupBy(key.map(col): _*).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > 1)
       .agg(count(lit(1)).as("violation_count"))
 
-  /** Full rule evaluation for one table: schema rules driver-side, content
-    * rules in one aggregation job, duplicate-key in one groupBy job.
-    * Returns a DataFrame of RuleResult rows (distributed union, tiny).
+  /** Full rule evaluation for one table, lazily: the counted rules of the
+    * one-scan plan (see the object doc) summed by one global aggregate,
+    * followed by the driver-side schema rules, as a DataFrame of
+    * RuleResult rows.
     */
   def evaluate(spark: SparkSession, df: DataFrame, cfg: TableRules): DataFrame = {
     import spark.implicits._
-    val present = (c: String) => df.columns.contains(c)
-
-    val aggs = contentAggs(cfg, present)
-    // One scan: every content rule is a column of the same Aggregate node.
-    val contentRow = df.agg(aggs.head._3.as("c0"),
-      aggs.tail.zipWithIndex.map { case ((_, _, a), i) => a.as(s"c${i + 1}") }: _*)
-    // Pivot the 1-row wide result into (rule, column, count) rows with a
-    // stack-style explode — stays distributed, no collect.
-    val contentResults = contentRow.select(
-      explode(array(aggs.zipWithIndex.map { case ((rule, c, _), i) =>
-        struct(lit(cfg.table).as("table_name"), lit(rule).as("rule"),
-          lit(c).as("column_name"), col(s"c$i").cast("long").as("violation_count"))
-      }: _*)).as("r")).select("r.*")
-
-    val keyPresent = cfg.uniqueKey.nonEmpty && cfg.uniqueKey.forall(present)
-    val dupResults =
-      if (keyPresent)
-        duplicateKeyCount(df, cfg.uniqueKey).select(
-          lit(cfg.table).as("table_name"), lit(DuplicateKey).as("rule"),
-          lit(cfg.uniqueKey.mkString(",")).as("column_name"),
-          col("violation_count").cast("long"))
-      else spark.emptyDataset[RuleResult].toDF()
-
+    val Counted(rules, partials) = counted(df, cfg)
+    val counts = rules.zipWithIndex.map { case ((rule, c), i) =>
+      val n = total(col("v")(i))
+      struct(lit(cfg.table).as("table_name"), lit(rule).as("rule"), lit(c).as("column_name"),
+        (if (rule == EmptyRelation) when(n === 0L, 1L).otherwise(0L) else n)
+          .as("violation_count"))
+    }
     val schemaResults = (headerResults(df, cfg) ++ typeResults(df, cfg)).toDS().toDF()
-
-    contentResults.unionByName(dupResults).unionByName(schemaResults)
+    partials.select(array(counts: _*).as("r"))
+      .select(explode(col("r")).as("r")).select("r.*")
+      .unionByName(schemaResults)
   }
 
   /** Evaluate a batch of tables into one report — reference
     * validate.py:249-265 `validate_file` over every file of the trigger
-    * group, assembled like validate.py:344-348.
+    * group, assembled like validate.py:344-348. Every table's partial
+    * counts come back in ONE collected action and are summed on the
+    * driver; the rows are returned as a local relation in [[evaluate]]'s
+    * per-table order, so reading the report again (or gating on it with
+    * [[passed]]) runs no Spark job.
     */
-  def report(spark: SparkSession, tables: Seq[(DataFrame, TableRules)]): DataFrame =
-    tables.map { case (df, cfg) => evaluate(spark, df, cfg) }
+  def report(spark: SparkSession, tables: Seq[(DataFrame, TableRules)]): DataFrame = {
+    import spark.implicits._
+    require(tables.nonEmpty, "a report needs at least one table")
+    val counts = tables.map { case (df, cfg) => counted(df, cfg) }
+    val partials = counts.zipWithIndex
+      .map { case (c, i) => c.partials.select(lit(i).as("t"), col("v")) }
       .reduce(_ unionByName _)
+      .as[(Int, Seq[Long])].collect()
+    tables.zip(counts).zipWithIndex.flatMap { case (((df, cfg), Counted(rules, _)), t) =>
+      val mine = partials.collect { case (`t`, v) => v }
+      rules.zipWithIndex.map { case ((rule, c), i) =>
+        val n = mine.map(_(i)).sum
+        RuleResult(cfg.table, rule, c, if (rule == EmptyRelation) (if (n == 0L) 1L else 0L) else n)
+      } ++ headerResults(df, cfg) ++ typeResults(df, cfg)
+    }.toDF()
+  }
 
   /** Per-group validation report — the reference's actual report shape
     * (validate.py:344-348: one `{order_id, status, issues}` entry per
@@ -158,16 +209,10 @@ object Rules {
     * reference's VALIDATION_PASSED/FAILED status.
     */
   def groupReport(df: DataFrame, cfg: TableRules, groupCol: String): DataFrame = {
-    val present = (c: String) => df.columns.contains(c)
-    def cnt(pred: Column) = coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
-    val nulls = cfg.requiredColumns.filter(present).map(c => cnt(col(c).isNull))
-    val status = cfg.statusColumn.filter(present).toSeq.map(c =>
-      cnt(col(c).isNotNull && !col(c).isin(cfg.validStatuses: _*)))
-    val negative = cfg.nonNegativeColumns.filter(present).map(c => cnt(col(c) < lit(0)))
-    val all = nulls ++ status ++ negative
-    val total = if (all.isEmpty) lit(0L) else all.reduce(_ + _)
+    val all = contentRules(df, cfg).map(r => total(hits(r._3)))
+    val violations = if (all.isEmpty) lit(0L) else all.reduce(_ + _)
     df.groupBy(col(groupCol))
-      .agg(total.as("violation_count"))
+      .agg(violations.as("violation_count"))
       .select(col(groupCol),
         col("violation_count"),
         when(col("violation_count") === 0, "VALIDATION_PASSED")
@@ -176,7 +221,9 @@ object Rules {
 
   /** Gate — reference stepfunction.json CheckValidationStatus semantics done
     * right (the reference's Choice state only checks the task ran,
-    * stepfunction.json:81-91): pass iff no rule has violations.
+    * stepfunction.json:81-91): pass iff no rule has violations. Over a
+    * [[report]] (a local relation) the check folds into the local rows and
+    * runs no Spark job; over a lazy [[evaluate]] frame it runs that plan.
     */
   def passed(reportDf: DataFrame): Boolean =
     reportDf.filter(col("violation_count") > 0).isEmpty

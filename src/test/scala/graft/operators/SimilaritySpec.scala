@@ -265,36 +265,12 @@ class SimilaritySpec extends SparkSpec {
     // necessarily launch jobs DURING plan construction. The only jobs
     // allowed are the stored tables' parquet METADATA reads (call site
     // inside ManifestStore.readTable) — zero training jobs.
-    val marker = new java.util.concurrent.atomic.AtomicInteger
-    val offending = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val grp = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        // stage names carry the call site ("parquet at ManifestStore…")
-        val sites = e.stageInfos.map(_.name).mkString("; ")
-        if (grp.contains("ivfpq_serve_marker")) marker.incrementAndGet()
-        else if (!sites.contains("ManifestStore")) offending.add(sites)
-      }
+    val (served, jobs) = graft.JobAudit.jobsDuring(spark) {
+      Similarity.ivfPqServe(q, root, dim = 8, k = 6, nprobe = 1, m = 2)
     }
-    spark.sparkContext.addSparkListener(l)
-    val served =
-      try {
-        val df = Similarity.ivfPqServe(q, root, dim = 8, k = 6,
-          nprobe = 1, m = 2)
-        // listener delivery is async but ordered: once the marker job's
-        // start event lands, every earlier event has been delivered
-        spark.sparkContext.setJobGroup("ivfpq_serve_marker", "sync")
-        spark.range(1).count()
-        spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-        while (marker.get < 1 && System.nanoTime < deadline) Thread.sleep(10)
-        assert(marker.get >= 1, "listener sync marker never arrived")
-        assert(offending.isEmpty,
-          s"serve plan construction ran non-metadata jobs: $offending")
-        df
-      } finally spark.sparkContext.removeSparkListener(l)
+    val offending = jobs.filterNot(_.contains("ManifestStore"))
+    assert(offending.isEmpty,
+      s"serve plan construction ran non-metadata jobs: $offending")
     assert(served.collect().map(key).toSet == fresh,
       "a stored index must be indistinguishable from a fresh train")
     graft.operators.Dedup.clearCaches()
@@ -317,32 +293,12 @@ class SimilaritySpec extends SparkSpec {
     // eager driver-side collect, so a serve that re-derived bounds would
     // launch a non-metadata job during plan construction; only the stored
     // tables' parquet metadata reads (ManifestStore call site) may run
-    val marker = new java.util.concurrent.atomic.AtomicInteger
-    val offending = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val grp = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        val sites = e.stageInfos.map(_.name).mkString("; ")
-        if (grp.contains("sq8_serve_marker")) marker.incrementAndGet()
-        else if (!sites.contains("ManifestStore")) offending.add(sites)
-      }
+    val (served, jobs) = graft.JobAudit.jobsDuring(spark) {
+      Similarity.sq8Serve(q, root, dim = 8, k = 5)
     }
-    spark.sparkContext.addSparkListener(l)
-    val served =
-      try {
-        val df = Similarity.sq8Serve(q, root, dim = 8, k = 5)
-        spark.sparkContext.setJobGroup("sq8_serve_marker", "sync")
-        spark.range(1).count()
-        spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-        while (marker.get < 1 && System.nanoTime < deadline) Thread.sleep(10)
-        assert(marker.get >= 1, "listener sync marker never arrived")
-        assert(offending.isEmpty,
-          s"serve plan construction ran non-metadata jobs: $offending")
-        df
-      } finally spark.sparkContext.removeSparkListener(l)
+    val offending = jobs.filterNot(_.contains("ManifestStore"))
+    assert(offending.isEmpty,
+      s"serve plan construction ran non-metadata jobs: $offending")
     assert(rows(served) == fresh,
       "a stored SQ8 index must be indistinguishable from a fresh quantization")
     graft.operators.Dedup.clearCaches()
@@ -370,6 +326,29 @@ class SimilaritySpec extends SparkSpec {
     // the in-memory corpus relation, never a packed re-scan)
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.contains("parquet"), s"serve must scan the stored codes:\n$plan")
+    graft.operators.Dedup.clearCaches()
+  }
+
+  test("a replayed artifact commit throws; the served index stays the first commit's") {
+    import org.apache.spark.sql.functions.{col, transform}
+    val vecs = (0 until 8).map { i =>
+      (i.toLong, Seq.tabulate(4)(j => if ((i + j) % 3 == 0) 1.0 else -1.0))
+    }.toDF("vec_id", "embedding")
+    val q = Seq((1L, Seq(1.0, -1.0, -1.0, 1.0))).toDF("q_id", "q_vec")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val root = graft.util.Scratch.dir("graft_binary_replay")
+    Similarity.binaryCommit(vecs, root, dim = 4)
+    val first = rows(Similarity.binaryServe(q, vecs, root, dim = 4, k = 3))
+    // a different corpus under the same batch id: were it re-staged under
+    // the live pointer, the serve below would answer from it
+    val flipped = vecs.select(col("vec_id"),
+      transform(col("embedding"), x => -x).as("embedding"))
+    val e = intercept[IllegalArgumentException](
+      Similarity.binaryCommit(flipped, root, dim = 4, batchId = 0L))
+    assert(e.getMessage.contains("batch 0") && e.getMessage.contains("live version 0"),
+      e.getMessage)
+    assert(rows(Similarity.binaryServe(q, vecs, root, dim = 4, k = 3)) == first)
     graft.operators.Dedup.clearCaches()
   }
 

@@ -43,6 +43,17 @@ class PipelineSpec extends SparkSpec {
     assert(res.report.filter($"violation_count" > 0).count() == 1L)
   }
 
+  test("the result's report holds the collected rows: re-reading it runs no job") {
+    val res = Pipeline.run(spark, orders("BOGUS"), items, products,
+      Seq((orders("BOGUS"), cfg)), persistJoin = false)
+    val first = res.report.collect().toSeq
+    val (again, jobs) = graft.JobAudit.jobsDuring(spark) {
+      (res.report.collect().toSeq, res.report.filter($"violation_count" > 0).collect())
+    }
+    assert(again._1 == first && again._2.length == 1)
+    assert(jobs.isEmpty, s"re-reading the report ran jobs: $jobs")
+  }
+
   test("the onResult notify hook fires on the pass branch and on the gate-fail branch") {
     var seen = List.empty[Boolean]
     val ok = Pipeline.run(spark, orders("pending"), items, products,

@@ -4,11 +4,13 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The streaming curation DAG: after EVERY trigger the published
   * artifacts equal the batch [[graft.pipeline.Pipeline.curate]] on the
   * data seen so far (the update-mode contract), the cross-batch digest
-  * registry enforces first-seen-wins, and a redelivered trigger
-  * republishes byte-equal state.
+  * registry enforces first-seen-wins, and a redelivered trigger leaves
+  * byte-equal state (its committed artifacts are not re-staged).
   */
 class CurateStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -203,5 +205,24 @@ class CurateStreamSpec extends SparkSpec {
     assert(reportSet(work) == r1)
     assert(CurateStream.readGated(spark, work)
       .select("doc_id").as[Long].collect().toSet == gated1)
+  }
+
+  test("replaying a committed batch leaves the artifact root unchanged") {
+    val work = graft.util.Scratch.dir("graft_stcur_spec")
+    CurateStream.curateBatch(work, cfg)(df(day0), 0L)
+    CurateStream.curateBatch(work, cfg)(df(day1), 1L)
+    // every file under the artifact root, with its size and mtime
+    def listing(): Set[(String, Long, Long)] = {
+      val root = java.nio.file.Paths.get(work, "artifact")
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => (root.relativize(f).toString, java.nio.file.Files.size(f),
+          java.nio.file.Files.getLastModifiedTime(f).toMillis)).toSet
+      finally files.close()
+    }
+    val before = listing()
+    CurateStream.curateBatch(work, cfg)(df(day1), 1L)
+    CurateStream.curateBatch(work, cfg, refitEvery = 2)(df(day1), 1L)
+    assert(listing() == before)
   }
 }
