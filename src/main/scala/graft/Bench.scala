@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import Verify.q
 
 /** Benchmark main — one JSON line on stdout (driver contract), duplicated
   * to bench_out.json so the record stays machine-readable even when stdout
@@ -295,13 +296,74 @@ object Bench {
     (now, superlinear(base, now, factor, floorSec))
   }
 
+  /** Timed runs per query: `SPARK_GRAFT_BENCH_RUNS`, default 2, at least 1. */
+  private[graft] def timedRuns: Int =
+    math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
+
+  /** A failure's record text: the message (else the class), cut to 200 chars. */
+  private def errText(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+
+  /** One timed run: wall seconds to build `query` and `.count()` it, or
+    * the failure's text. */
+  private[graft] def timeOnce(query: => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { query.count(); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(errText(e)) }
+  }
+
+  /** The per-query protocol: one untimed warm-up (it also surfaces errors
+    * deterministically), then the MIN of `runs` timed runs, the first error
+    * winning. The catalog cache is cleared BEFORE each timed run, not just
+    * between queries: cache-bearing operators (near-dup band signatures,
+    * kmeans centroids) would otherwise serve every timed run from the
+    * warm-up's cache and the MIN would exclude the operator's own
+    * materialization cost (ADVICE r03). Session memos registered in
+    * [[graft.util.Caches]] survive the clear (see [[freshCost]]).
+    */
+  private[graft] def timeMin(spark: SparkSession, runs: Int)
+                            (query: => DataFrame): Either[String, Double] = {
+    timeOnce(query)
+    val times = (1 to runs).map { _ =>
+      spark.catalog.clearCache()
+      timeOnce(query)
+    }
+    times.collectFirst { case Left(e) => Left(e) }
+      .getOrElse(Right(times.collect { case Right(t) => t }.min))
+  }
+
+  /** [[timeMin]] over each named registry query in turn, the catalog
+    * cleared and the JVM given a collection point after each: the r8
+    * record showed timings inflate up to 4.6× late in the 66-query session
+    * without any code change (VERDICT r08 #1c), so each query is timed
+    * against a settled heap.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+                                 names: Seq[String], runs: Int)
+      : Seq[(String, Either[String, Double])] =
+    names.map { name =>
+      val r = timeMin(spark, runs)(SparkEntry.queries(name)(spark, sfDir))
+      spark.catalog.clearCache()
+      System.gc()
+      (name, r)
+    }
+
+  /** Fresh cost of a memoized query (VERDICT r10 #6): its timed MIN reads
+    * a memo that survives `spark.catalog.clearCache`, so the operator's
+    * real cost is one run after [[graft.util.Caches.clear]] as well. */
+  private[graft] def freshCost(spark: SparkSession, sfDir: String,
+                               name: String): Either[String, Double] = {
+    graft.util.Caches.clear()
+    spark.catalog.clearCache()
+    System.gc()
+    timeOnce(SparkEntry.queries(name)(spark, sfDir))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // local[32] per the target environment (single JVM, 32 executor
     // threads); shuffle partitions = cores, not the 200 default.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val timedRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
+    val cpus = Session.defaultCpus
     // Load guard (VERDICT r04 #2): this box runs co-tenant work and
     // same-code timings vary ±30-50% under load — wait (bounded) for the
     // 1-minute loadavg to drop below cpus/4 before timing anything, so the
@@ -337,72 +399,37 @@ object Bench {
       }
     }
     waitForLoad()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet timestamp precision varies by testdata generation
-      // (nanos through r6, micros-NTZ since r7); Tables.events normalizes
-      // either form, and this legacy conf keeps a nanos regeneration
-      // readable (as long, converted back) instead of failing the scan.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table queries saveAsTable into the warehouse — keep it in
-      // a temp dir, not ./spark-warehouse inside the repo
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     // Global session warm-up: one tiny end-to-end job (scan+agg) so the
     // first benched query doesn't pay SparkSession/codegen init.
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case _: Throwable => () }
 
-    var failed = false
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run (local iteration /
     // cross-SF scaling tooling — the Verify filter's twin); unset = full
     // headline, the driver's mode
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val results = SparkEntry.headline
-      .filter(name => only.forall(_.contains(name)))
-      .map { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Either[String, Double] = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+    val benched = SparkEntry.headline.filter(name => only.forall(_.contains(name)))
+    val results = timeQueries(spark, sfDir, benched, timedRuns)
+    val failed = results.exists(_._2.isLeft)
+    // a re-run of one query on `dir` after a load-guard wait (once per
+    // rerunner), for the gate's and the sf1 pass's adjudication
+    def rerunner(tag: String, dir: String, first: Map[String, Double])
+        : String => String => Option[Double] = {
+      var waited = false
+      why => name => {
+        if (!waited) {
+          System.err.println(s"$tag: $why — re-running after load guard")
+          waitForLoad(); waited = true
+        }
+        spark.catalog.clearCache()
+        System.gc()
+        timeOnce(SparkEntry.queries(name)(spark, dir)).toOption.map { again =>
+          System.err.println(f"$tag: $name re-run $again%.2fs (first ${first(name)}%.2fs)")
+          again
         }
       }
-      once() // warm-up pass (untimed); also surfaces errors deterministically
-      // clear BEFORE each timed run, not just between queries: cache-bearing
-      // operators (near-dup band signatures, kmeans centroids) would
-      // otherwise serve every timed run from the warm-up's cache and the
-      // reported MIN would exclude the operator's own materialization cost
-      // (ADVICE r03)
-      val runs = (1 to timedRuns).map { _ =>
-        spark.catalog.clearCache()
-        once()
-      }
-      val r = runs.collectFirst { case Left(e) => Left(e) }
-        .getOrElse(Right(runs.collect { case Right(s) => s }.min))
-      if (r.isLeft) failed = true
-      spark.catalog.clearCache()
-      // release cross-query session pressure (VERDICT r08 #1c): the r8
-      // record showed timings inflate up to 4.6× late in the 66-query
-      // session without any code change — give the JVM a collection point
-      // between entries so each query is timed against a settled heap
-      System.gc()
-      (name, r)
-    }
-    // escape ALL control chars (<0x20), like Verify.q — a stray \b in an
-    // exception message must not corrupt the bench JSON record
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
     }
     // streaming throughputs (VERDICT r03 #4): each surface is drained with
     // AvailableNow and reported as <prefix>_<count/sec/rate> keys; a
@@ -411,15 +438,13 @@ object Bench {
     // supplementary)
     def streamMetric(prefix: String, countKey: String, rateKey: String)
                     (thunk: => (Long, Double)): String =
-      (try Right(thunk)
-       catch { case e: Throwable =>
-         Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-       }) match {
+      (try Right(thunk) catch { case e: Throwable => Left(errText(e)) }) match {
         case Right((n, secs)) =>
           s""""${prefix}_$countKey":$n,"${prefix}_sec":$secs,""" +
             s""""${prefix}_$rateKey":${(n / secs).round}"""
-        case Left(e) => s""""${prefix}_err":"${esc(e)}""""
+        case Left(e) => s""""${prefix}_err":${q(e)}"""
       }
+    def errJson(e: String): String = s"""{"err":${q(e)}}"""
     // ---- per-query regression gate (VERDICT r05 #6, r06 #2): baseline is
     // the per-query MIN across ALL committed BENCH_r*.json (a single
     // load-corrupted round must not set the yardstick); a breach
@@ -440,22 +465,7 @@ object Bench {
         (try parseQueries(Files.readString(Paths.get(gateEnv)))
          catch { case _: Throwable => Map.empty[String, Double] })
       else minBaseline(env = benchEnv)
-    var waitedForRerun = false
-    def requalify(why: String)(name: String): Option[Double] = {
-      if (!waitedForRerun) {
-        System.err.println(s"bench gate: $why — re-running after load guard")
-        waitForLoad(); waitedForRerun = true
-      }
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir).count()
-        val again = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"bench gate: $name re-run $again%.2fs (first ${firstTimes(name)}%.2fs)")
-        Some(again)
-      } catch { case _: Throwable => None }
-    }
+    val requalify = rerunner("bench gate", sfDir, firstTimes)
     // debut-baseline qualification first (VERDICT r08 #1b): queries absent
     // from every committed record get a settled re-run before their number
     // enters the record as the future gate's floor. Skipped when there is
@@ -471,22 +481,18 @@ object Bench {
       System.err.println(f"bench gate BREACH: $name ${t}%.2fs > 2x all-rounds-min ${prev}%.2fs")
     }
     val regJson = regs.map { case (n, p, t) =>
-      s""""${esc(n)}":{"prior":$p,"now":$t}"""
+      s"""${q(n)}:{"prior":$p,"now":$t}"""
     }.mkString("{", ",", "}")
     // transparency: the drift factor the gate normalized by this session
     val driftJson = s""""drift_factor":${driftFactor(baseline, nowTimes)}"""
     val qs = results.map {
-      case (k, Right(_)) => s""""${esc(k)}":${nowTimes(k)}"""
-      case (k, Left(e))  => s""""${esc(k)}":{"err":"${esc(e)}"}"""
+      case (k, Right(_)) => s"""${q(k)}:${nowTimes(k)}"""
+      case (k, Left(e))  => s"""${q(k)}:${errJson(e)}"""
     }.mkString("{", ",", "}")
     val total = results.collect { case (n, Right(_)) => nowTimes(n) }.sum
     val flagship = results.collect {
       case (n, Right(_)) if n == "a1_category_kpis" || n == "a2_daily_kpis" => nowTimes(n)
     }.sum
-    // MemoryStream → stateful completeness join → keyed upsert sink
-    val streamJson = streamMetric("streaming", "events", "events_per_sec")(
-      graft.streaming.StreamBench.completenessThroughput(
-        spark, nOrders = 20000, itemsPer = 3))
     // the corpus-prep chain: content dedup → annotate → gate → rollup
     val corpusJson = streamMetric("corpus_stream", "docs", "docs_per_sec")(
       graft.streaming.StreamBench.corpusPrepThroughput(spark, nDocs = 50000))
@@ -494,34 +500,20 @@ object Bench {
     // atomic artifact commit across 4 triggers)
     val curateJson = streamMetric("curate_stream", "docs", "docs_per_sec")(
       graft.streaming.StreamBench.curateThroughput(spark, nDocs = 10000))
-    // fresh-cost honesty for memoized queries (VERDICT r10 #6): the tail
-    // number for a SparkEntry.memoizedHeadline query measures a memo read
-    // (the memo survives spark.catalog.clearCache); the operator's real
-    // cost is measured ONCE here after a full Caches.clear and reported
-    // as fresh_cost_s — supplementary like the stream metrics, never part
-    // of the gated queries tail (a memo-read debut would otherwise set a
-    // centisecond MIN floor no honest re-measurement could ever meet).
-    val freshJson = {
-      val entries = SparkEntry.memoizedHeadline
-        .filter(n => only.forall(_.contains(n)))
-        .map { name =>
-          graft.util.Caches.clear()
-          spark.catalog.clearCache()
-          System.gc()
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(name)(spark, sfDir).count()
-            s""""${esc(name)}":${(System.nanoTime() - t0) / 1e9}"""
-          } catch { case e: Throwable =>
-            s""""${esc(name)}":{"err":"${esc(Option(e.getMessage)
-              .getOrElse(e.getClass.getName).take(200))}"}"""
-          }
+    // fresh-cost honesty for memoized queries: reported as fresh_cost_s —
+    // supplementary like the stream metrics, never part of the gated
+    // queries tail (a memo-read debut would otherwise set a centisecond MIN
+    // floor no honest re-measurement could ever meet).
+    val freshJson = SparkEntry.memoizedHeadline
+      .filter(n => only.forall(_.contains(n)))
+      .map { name =>
+        freshCost(spark, sfDir, name) match {
+          case Right(t) => s"${q(name)}:$t"
+          case Left(e) => s"${q(name)}:${errJson(e)}"
         }
-      s""""fresh_cost_s":${entries.mkString("{", ",", "}")}"""
-    }
-    val debutJson = debuts.map(n => s""""${esc(n)}"""").mkString("[", ",", "]")
-    val debutFailJson =
-      debutRerunFailed.map(n => s""""${esc(n)}"""").mkString("[", ",", "]")
+      }.mkString(""""fresh_cost_s":{""", ",", "}")
+    val debutJson = debuts.map(q).mkString("[", ",", "]")
+    val debutFailJson = debutRerunFailed.map(q).mkString("[", ",", "]")
     // ---- standing whole-suite sf1 scale pass (VERDICT r12 #8): inflate
     // the benched SF 10× (tools.ScaleUp key-shifted copies — measurement
     // only, never a correctness input), run EVERY timed query once on it,
@@ -546,59 +538,37 @@ object Bench {
           spark.catalog.clearCache()
           System.gc()
           waitForLoad()
-          val scaledResults = SparkEntry.headline
-            .filter(name => only.forall(_.contains(name)))
-            .map { name =>
-              spark.catalog.clearCache()
-              val t0 = System.nanoTime()
-              val r =
-                try { SparkEntry.queries(name)(spark, dest).count()
-                  Right((System.nanoTime() - t0) / 1e9) }
-                catch { case e: Throwable =>
-                  Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-              System.gc()
-              (name, r)
-            }
+          val scaledResults = benched.map { name =>
+            spark.catalog.clearCache()
+            val r = timeOnce(SparkEntry.queries(name)(spark, dest))
+            System.gc()
+            (name, r)
+          }
           val scaledTimes = scaledResults.collect { case (n, Right(v)) => n -> v }.toMap
           // flagged queries get the base gate's load-guard re-adjudication
-          // (VERDICT r13 #1b) before anything lands in the record
-          var sf1Waited = false
-          def rerunScaled(name: String): Option[Double] = {
-            if (!sf1Waited) {
-              System.err.println("bench sf1: apparent superlinearity — re-running after load guard")
-              waitForLoad(); sf1Waited = true
-            }
-            spark.catalog.clearCache()
-            System.gc()
-            val t0 = System.nanoTime()
-            try {
-              SparkEntry.queries(name)(spark, dest).count()
-              val again = (System.nanoTime() - t0) / 1e9
-              System.err.println(f"bench sf1: $name re-run $again%.2fs (first ${scaledTimes(name)}%.2fs)")
-              Some(again)
-            } catch { case _: Throwable => None }
-          }
-          // memoized queries' base numbers measure a memo READ (centiseconds)
+          // (VERDICT r13 #1b) before anything lands in the record.
+          // Memoized queries' base numbers measure a memo READ (centiseconds)
           // while the fresh sf1 dir pays the full drain — comparing the two
           // flags a false superlinearity (r13: st_curate 0.09s memo read vs a
           // 14s sf1 drain whose honest fresh-vs-fresh ratio was 1.16×); their
           // scale story lives in fresh_cost_s, so they are excluded here
           val (scaledAdj, flags) = adjudicateSf1(
-            nowTimes -- SparkEntry.memoizedHeadline, scaledTimes, rerunScaled)
+            nowTimes -- SparkEntry.memoizedHeadline, scaledTimes,
+            rerunner("bench sf1", dest, scaledTimes)("apparent superlinearity"))
           flags.foreach { case (name, b, t) =>
             System.err.println(f"bench sf1 SUPERLINEAR: $name ${t}%.2fs > 10x base ${b}%.2fs")
           }
           val sq = scaledResults.map {
-            case (k, Right(_)) => s""""${esc(k)}":${scaledAdj(k)}"""
-            case (k, Left(e))  => s""""${esc(k)}":{"err":"${esc(e)}"}"""
+            case (k, Right(_)) => s"""${q(k)}:${scaledAdj(k)}"""
+            case (k, Left(e))  => s"""${q(k)}:${errJson(e)}"""
           }.mkString("{", ",", "}")
           val fj = flags.map { case (n, b, t) =>
-            s""""${esc(n)}":{"base":$b,"sf1":$t}"""
+            s"""${q(n)}:{"base":$b,"sf1":$t}"""
           }.mkString("{", ",", "}")
           s""""sf1":{"queries":$sq,"superlinear":$fj,""" +
             s""""total":${scaledAdj.values.sum},"copies":10}"""
         } catch { case e: Throwable =>
-          s""""sf1":{"err":"${esc(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))}"}"""
+          s""""sf1":${errJson(errText(e))}"""
         } finally {
           // the 10×-scale copy is measurement scratch — leaking it exhausts
           // the bench host's temp filesystem across repeated runs (ADVICE r13)
@@ -612,11 +582,11 @@ object Bench {
     }
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""flagship_total":$flagship,$streamJson,$corpusJson,$curateJson,""" +
+        s""""flagship_total":$flagship,$corpusJson,$curateJson,""" +
         s"""$freshJson,$sf1Json,""" +
         s""""regressions":$regJson,$driftJson,"debut_qualified":$debutJson,""" +
         s""""debut_rerun_failed":$debutFailJson,""" +
-        s""""cpus":$cpus,"timed_runs":$timedRuns,"bench_env":"${esc(benchEnv)}",""" +
+        s""""cpus":$cpus,"timed_runs":$timedRuns,"bench_env":${q(benchEnv)},""" +
         s""""sf":"$sfDir"}"""
     println(line)
     try Files.writeString(Paths.get("bench_out.json"), line + "\n")

@@ -149,7 +149,7 @@ private[graft] object EntryFixtures {
 
   /** documents ∪ a near-duplicate copy (suffix-mutated, shifted ids) — the
     * planted-duplicates corpus for the near-dup queries (package-visible:
-    * graft.Profile profiles the same corpus the queries run).
+    * the registry's dedup, pipeline and streaming queries share it).
     */
   private[graft] def docsWithPlantedDups(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")

@@ -1,35 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev harness: time named registry queries on a given sf dir (two runs
-  * each, caches cleared between) — the quick local loop between full
-  * Bench runs. `runMain graft.QTime <sfDir> <query>...`
+/** Dev timer: Bench's per-query protocol ([[Bench.timeQueries]]: one
+  * untimed warm-up, then the MIN of `SPARK_GRAFT_BENCH_RUNS` timed runs,
+  * catalog cleared before each) on named registry queries, plus Bench's
+  * fresh cost for memoized ones — the quick local loop between full Bench
+  * runs, without the gate or the supplementary legs.
+  *
+  * Usage: runMain graft.QTime <sfDir> <query> [query ...]
+  *        (query "ALL" = the full SparkEntry.headline set)
   */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1)
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_QTIME_BENCH=1 mirrors Bench's timed-run hygiene: clear only the
-    // catalog cache between runs (session memos — collapse, centroids,
-    // fixtures — survive, as they do across Bench's timed runs); default
-    // clears graft.util.Caches too for a fully-cold per-run floor.
-    val benchProto = sys.env.get("SPARK_GRAFT_QTIME_BENCH").contains("1")
+    val names =
+      if (args.drop(1).sameElements(Array("ALL"))) SparkEntry.headline
+      else args.drop(1).toSeq
+    val spark = Session.local()
+    def show(r: Either[String, Double]): String =
+      r.fold(e => s"failed: $e", t => f"$t%8.3f s")
     names.foreach { n =>
-      (1 to 2).foreach { i =>
-        spark.catalog.clearCache()
-        if (!benchProto) graft.util.Caches.clear()
-        val t0 = System.nanoTime()
-        val c = SparkEntry.queries(n)(spark, sfDir).count()
-        println(f"[qtime] $n run$i ${(System.nanoTime() - t0) / 1e9}%8.3f s rows=$c")
+      Bench.timeQueries(spark, sfDir, Seq(n), Bench.timedRuns).foreach { case (_, r) =>
+        println(f"[qtime] $n%-32s ${show(r)}")
       }
+      if (SparkEntry.memoizedHeadline.contains(n))
+        println(f"[qtime] $n%-32s ${show(Bench.freshCost(spark, sfDir, n))} fresh")
     }
     spark.stop()
   }

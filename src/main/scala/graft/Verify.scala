@@ -1,33 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in registered oracle SQL would otherwise make
+    * the oracle's json.load fail and silently zero the correctness check.
+    * Also the escaper of Bench's record (exception text in err entries).
+    */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration tooling — the driver always passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet timestamp precision varies by testdata generation
-      // (nanos through r6, micros-NTZ since r7); Tables.events normalizes
-      // either form, and this legacy conf keeps a nanos regeneration
-      // readable (as long, converted back) instead of failing the scan.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table queries saveAsTable into the warehouse — keep it in
-      // a temp dir, not ./spark-warehouse inside the repo
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -43,18 +41,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

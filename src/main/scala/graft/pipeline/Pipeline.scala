@@ -35,7 +35,9 @@ object Pipeline {
   /** Validate → gate → transform. `persistJoin` caches the enrichment join
     * before the two-KPI fan-out (the reference re-scans and re-joins per
     * consumer, transform.py:329-365 — SURVEY.md §4 "Caching / reuse");
-    * leave it off for single-consumer callers.
+    * leave it off for single-consumer callers. The persist backs the
+    * returned lazy KPI frames, so it is registered in [[graft.util.Caches]]:
+    * `Caches.clear()` releases it once they are consumed.
     *
     * `onResult` is the notification terminal: it fires with the final
     * result on BOTH branches — the analogue of the Step Function's SNS
@@ -53,7 +55,9 @@ object Pipeline {
       else {
         val joined0 = Kpis.enrich(orders, items, products)
         val joined =
-          if (persistJoin) joined0.persist(StorageLevel.MEMORY_AND_DISK) else joined0
+          if (persistJoin)
+            graft.util.Caches.retain(joined0.persist(StorageLevel.MEMORY_AND_DISK))
+          else joined0
         PipelineResult(report, passed = true,
           Some(Kpis.categoryKpis(joined)), Some(Kpis.dailyKpis(joined)))
       }

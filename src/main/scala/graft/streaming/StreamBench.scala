@@ -3,12 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming micro-benchmark (VERDICT r03 #4): ST1–ST7 had correctness
-  * coverage but no recorded throughput. Drives the stateful completeness
-  * join end-to-end — file-arrival source → flatMapGroupsWithState →
-  * foreachBatch keyed upsert sink — and reports events/second, so the
-  * per-round bench JSON carries a streaming number alongside the batch
-  * queries.
+/** Streaming micro-benchmark legs for Bench's supplementary record: drain
+  * a synthetic corpus through a streaming DAG with an AvailableNow trigger
+  * and report docs/second.
   *
   * The synthetic input is staged as parquet and streamed through the FILE
   * source (ST1, the production surface), not a MemoryStream: MemoryStream
@@ -16,7 +13,8 @@ import org.apache.spark.sql.streaming.Trigger
   * 13.7 MiB task-broadcast warnings for the 50k-doc corpus — a harness
   * artifact that throttled the reported docs/s; VERDICT r04 #6). Staging
   * happens before the clock starts; the timed window covers exactly the
-  * streaming query.
+  * streaming query. The completeness join and the joint KPI sink are
+  * measured warm by perfbench's `backfill` workload instead.
   */
 object StreamBench {
 
@@ -30,38 +28,23 @@ object StreamBench {
     dir
   }
 
-  /** Drain `nOrders` synthetic order groups (1 header + `itemsPer` item +
-    * `itemsPer` product arrivals each) with an AvailableNow trigger into a
-    * temp-dir upsert table. Returns (events drained, wall seconds for the
-    * streaming query). Deterministic input; every group completes, so the
-    * sink sees all `nOrders` rows.
+  /** `nDocs` deterministic `(id, text)` documents, every third a content
+    * duplicate of its predecessor. Doc lengths vary so the tokenizer/regex
+    * work is realistic rather than constant-folded.
     */
-  def completenessThroughput(spark: SparkSession, nOrders: Int,
-                             itemsPer: Int): (Long, Double) = {
+  private def synthDocs(spark: SparkSession, nDocs: Int): Dataset[(Long, String)] = {
     import spark.implicits._
-    val events = spark.range(nOrders).flatMap { o =>
-      val id = s"o$o"
-      PartEvent(id, Completeness.KindOrder, None) +:
-        (0 until itemsPer).flatMap(i => Seq(
-          PartEvent(id, Completeness.KindItem, Some(s"p$i")),
-          PartEvent(id, Completeness.KindProduct, Some(s"p$i"))))
+    val words = Array("the", "quick", "brown", "fox", "jumps", "over",
+      "lazy", "dog", "and", "it", "was", "a", "good", "day", "for", "this",
+      "stream", "of", "documents", "to", "be", "scored", "in", "order")
+    spark.range(nDocs).map { id =>
+      val i: Long = id
+      val base: Long = if (i % 3 == 2) i - 1 else i
+      val n = (20 + (base * 7) % 60).toInt
+      val text = (0 until n).map(j => words(((base + j * 13) % words.length).toInt))
+        .mkString(" ")
+      (i, text)
     }
-    val nEvents = nOrders.toLong * (1 + 2 * itemsPer)
-    val inDir = stage(events, "graft_sbench_in", 32)
-    val input = spark.readStream.schema(events.schema).parquet(inDir).as[PartEvent]
-    val target = graft.util.Scratch.dir("graft_sbench_tgt")
-    val checkpoint = graft.util.Scratch.dir("graft_sbench_cp")
-    val t0 = System.nanoTime()
-    val q = Completeness.stream(input).toDF()
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(StreamingPipeline.upsertBatch(target, Seq("orderId")) _)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val secs = (System.nanoTime() - t0) / 1e9
-    (nEvents, secs)
   }
 
   /** Drain `nDocs` synthetic documents through the FULL streaming
@@ -69,21 +52,13 @@ object StreamBench {
     * whole-corpus refit + atomic artifact commit) across several
     * file-source triggers. Returns (docs drained, wall seconds for the
     * streaming query) — the round-10 headline surface's throughput
-    * number, beside the corpus-prep and completeness legs.
+    * number, beside the corpus-prep leg.
     */
   def curateThroughput(spark: SparkSession, nDocs: Int): (Long, Double) = {
     import spark.implicits._
-    val words = Array("the", "quick", "brown", "fox", "jumps", "over",
-      "lazy", "dog", "and", "it", "was", "a", "good", "day", "for", "this",
-      "stream", "of", "documents", "to", "be", "scored", "in", "order")
-    val docs = spark.range(nDocs).map { id =>
-      val i: Long = id
-      val base: Long = if (i % 3 == 2) i - 1 else i // every 3rd duplicates
-      val n = (20 + (base * 7) % 60).toInt
-      val text = (0 until n).map(j => words(((base + j * 13) % words.length).toInt))
-        .mkString(" ")
-      (i, s"d${i % 4}", text)
-    }.toDF("doc_id", "domain", "text")
+    val docs = synthDocs(spark, nDocs)
+      .map { case (i, text) => (i, s"d${i % 4}", text) }
+      .toDF("doc_id", "domain", "text")
     val inDir = stage(docs, "graft_curbench_in", 32)
     val cfg = CurateConfig(langKeep = Seq("en"), pplCutoff = 1e6,
       budget = 1000000L, weights = Seq("d0" -> 0.25, "d1" -> 0.25,
@@ -103,24 +78,14 @@ object StreamBench {
     (nDocs.toLong, secs)
   }
 
-  /** Drain `nDocs` synthetic documents (every third a content duplicate)
-    * through the full streaming corpus-prep chain — content dedup →
-    * annotation → quality gate → update-mode language rollup — into a
-    * memory sink. Returns (docs drained, wall seconds). The deterministic
-    * generator mixes doc lengths so the tokenizer/regex work is realistic
-    * rather than constant-folded.
+  /** Drain `nDocs` synthetic documents through the full streaming
+    * corpus-prep chain — content dedup → annotation → quality gate →
+    * update-mode language rollup — into a memory sink. Returns (docs
+    * drained, wall seconds).
     */
   def corpusPrepThroughput(spark: SparkSession, nDocs: Int): (Long, Double) = {
     import spark.implicits._
-    val words = Array("the", "quick", "brown", "fox", "jumps", "over",
-      "lazy", "dog", "and", "it", "was", "a", "good", "day", "for", "this",
-      "stream", "of", "documents", "to", "be", "scored", "in", "order")
-    val docs = spark.range(nDocs).map { id =>
-      val i: Long = id
-      val base: Long = if (i % 3 == 2) i - 1 else i // every 3rd duplicates its predecessor
-      val n = (20 + (base * 7) % 60).toInt
-      val text = (0 until n).map(j => words(((base + j * 13) % words.length).toInt))
-        .mkString(" ")
+    val docs = synthDocs(spark, nDocs).map { case (i, text) =>
       DocEvent(i, text, new java.sql.Timestamp(1700000000000L + i * 1000L))
     }
     val inDir = stage(docs, "graft_cbench_in", 32)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Tooling (driver-style, like graft.Profile): inflate a driver testdata
+/** Tooling (a standalone main, like graft.QTime): inflate a testdata
   * SF directory N× for scale confirmation runs (VERDICT r05 #5 — one
   * order-of-magnitude datapoint grounding the 100×-design claims). Each
   * copy i shifts every surrogate key by i·10⁹, so referential integrity
@@ -57,14 +57,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(src, dest, copiesStr) = args
-    val cpus = Runtime.getRuntime.availableProcessors().toString
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     build(spark, src, dest, copiesStr.toInt)
     spark.stop()
   }

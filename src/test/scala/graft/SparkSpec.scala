@@ -11,14 +11,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(cpus = 4)
 }

@@ -66,6 +66,26 @@ class PipelineSpec extends SparkSpec {
     assert(seen.reverse == List(true, false)) // hook saw both terminal states
   }
 
+  test("the persisted enrichment join is registered with Caches: clear releases every run's") {
+    graft.util.Caches.clear(blocking = true)
+    // track the SPECIFIC RDD ids the runs add (global sizes race the async
+    // ContextCleaner, see DedupSpec)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    (1 to 3).foreach { i =>
+      val o = Seq(("o1", s"u$i", "pending", ts), ("o2", "u2", "shipped", ts))
+        .toDF("order_id", "user_id", "status", "created_at")
+      val res = Pipeline.run(spark, o, items, products, Seq((o, cfg)))
+      res.categoryKpis.get.collect()
+      res.dailyKpis.get.collect()
+    }
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size >= 3, s"each run's join should be materialized: $added")
+    graft.util.Caches.clear(blocking = true)
+    val remaining = spark.sparkContext.getPersistentRDDs.keySet
+    assert(added.forall(id => !remaining.contains(id)),
+      s"run caches survived Caches.clear: ${added.intersect(remaining)}")
+  }
+
   test("curate: every stage of the funnel cuts what it should") {
     import org.apache.spark.sql.functions._
     val en = "the and is in it of to for on this table row data value key"
