@@ -3,6 +3,7 @@ package graft.state
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import scala.util.control.NonFatal
 
@@ -55,11 +56,23 @@ import scala.util.control.NonFatal
   *    writes the batch as the new content of the touched partitions and
   *    inherits the rest by manifest reference: it neither reads the prior
   *    version nor joins, and the written directories ARE the touched set.
-  *    A compacting commit rewrites the prior version's untouched
-  *    partitions (a null-safe anti-join on the partition value) plus the
-  *    batch. Precondition: the batch is complete for every partition it
-  *    touches, and keys stay in their partition — a partition the batch
-  *    touches loses any prior row the batch does not carry.
+  *    A compacting commit also rewrites the prior version's partitions the
+  *    batch did not write into the new version, reading them from their
+  *    committed files, never from the batch. Precondition: the batch is
+  *    complete for every partition it touches, and keys stay in their
+  *    partition — a partition the batch touches loses any prior row the
+  *    batch does not carry.
+  *
+  * [[commitTagged]] commits several partitioned tables drawn from ONE
+  * tagged frame (a stateful operator emitting the rows of a table pair)
+  * with ONE partitioned write: the frame is written once, partitioned by
+  * `(tag, partition column)`, into `v_<batch>/_staging`, and each
+  * `_staging/<tag>=<name>` directory is renamed to `v_<batch>/<name>`. So
+  * the frame's plan, a foreachBatch frame's stateful stage included, runs
+  * once per commit and needs no persist. The layout, manifests and
+  * schemas are those of a [[commit]] of the same tables; a data file may
+  * also carry the sibling tables' columns, all null, which readers never
+  * see because they read through the table's committed `_schema`.
   *
   * Partition directory names carry Spark's own value escaping (the
   * writer lists what `partitionBy` wrote instead of reconstructing names
@@ -70,9 +83,14 @@ object ManifestStore {
 
   private val ManifestName = "_manifest"
   private val SchemaName = "_schema"
+  /** Inside a version dir: where partitioned writes land before their
+    * directories are renamed into the tables' dirs.
+    */
+  private val StagingName = "_staging"
   /** The one data directory (and manifest entry) of an unpartitioned table. */
   private val WholeTable = "data"
   private val RetentionMs = 10 * 60 * 1000L
+  private val MaxManifestVersions = 16
 
   /** How a commit folds its batch into the partitions the batch touches. */
   sealed trait PartitionMerge
@@ -252,10 +270,9 @@ object ManifestStore {
       readSchemaAt(fs, rootPath, v, sub), sub)
   }
 
-  /** Write `df` under `dir` partitioned by `partitionCol`; returns the
-    * partition dir names written.
+  /** Write `df` under `dir` partitioned by `partitionCols`.
     *
-    * Rows are clustered by the partition column first (r18, guide §6
+    * Rows are clustered by the partition columns first (r18, guide §6
     * small files): without it every task writes one file into EVERY
     * partition dir its rows touch — a 32-task write of a ~2400-date table
     * emitted tens of thousands of near-empty files (measured: the
@@ -268,34 +285,71 @@ object ManifestStore {
     * directory serially — measured 35 s vs 9 s for the same ~2400-dir
     * write.
     */
-  private def writePartitions(df: DataFrame, partitionCol: String,
-                              dir: Path): Seq[String] = {
+  private def writePartitions(df: DataFrame, partitionCols: Seq[String],
+                              dir: Path): Unit = {
     val spark = df.sparkSession
     df.repartition(spark.sessionState.conf.numShufflePartitions,
-        org.apache.spark.sql.functions.col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(dir.toString)
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-      .map(_.getPath.getName).toSeq
+        partitionCols.map(org.apache.spark.sql.functions.col): _*)
+      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir.toString)
   }
 
-  /** Stage one table's merged data + manifest + schema under
-    * `v_<batchId>/<name>`. Returns the table's new manifest — empty only
-    * for an empty FIRST batch of a partitioned table (nothing readable;
-    * the caller skips the pointer when nothing is readable before or
-    * after).
+  /** The `partitionCol=…` dir names under `dir` (none when it is absent). */
+  private def partitionDirs(fs: FileSystem, dir: Path,
+                            partitionCol: String): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
+      .map(_.getPath.getName).toSeq
+
+  /** What one table staged in the new version: the data dirs it wrote,
+    * whether its manifest inherits the prior entries it did not write
+    * (false when the whole table was written), and its schema.
     */
+  private final case class Staged(written: Seq[String], inherit: Boolean,
+                                  schema: StructType)
+
+  private def compacts(prevManifest: Map[String, Long],
+                       maxManifestVersions: Int): Boolean =
+    prevManifest.values.toSet.size + 1 > maxManifestVersions
+
+  /** A [[ReplacePartitions]] table once the batch's partition dirs are in
+    * its dir: the manifest inherits every prior partition the batch did
+    * not write — or, when compacting, those partitions are rewritten into
+    * this version from their committed files (not from the batch, so its
+    * plan runs once) and the manifest references this version only.
+    */
+  private def replaced(spark: SparkSession, root: Path, batchId: Long,
+                       sub: String, partitionCol: String, written: Seq[String],
+                       schema: StructType, compact: Boolean,
+                       prevManifest: Map[String, Long],
+                       prevSchema: Option[StructType]): Staged = {
+    val untouched = prevManifest -- written
+    if (!compact) Staged(written, inherit = true, schema)
+    else if (untouched.isEmpty) Staged(written, inherit = false, schema)
+    else {
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val staging = new Path(SnapshotStore.versionDir(root, batchId), StagingName)
+      writePartitions(readManifested(spark, root, untouched, prevSchema, sub),
+        Seq(partitionCol), staging)
+      val dir = subDir(root, batchId, sub)
+      val copied = partitionDirs(fs, staging, partitionCol)
+      fs.mkdirs(dir)
+      copied.foreach(d => fs.rename(new Path(staging, d), new Path(dir, d)))
+      fs.delete(staging, true)
+      Staged(written ++ copied, inherit = false, schema)
+    }
+  }
+
+  /** Stage one table's merged data under `v_<batchId>/<name>`. */
   private def stageTable(spark: SparkSession, root: Path, batchId: Long,
                          t: TableCommit, merge: PartitionMerge,
                          prevManifest: Map[String, Long],
                          prevSchema: Option[StructType],
-                         maxManifestVersions: Int): Map[String, Long] = {
+                         maxManifestVersions: Int): Staged = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = subDir(root, batchId, t.name)
     def table = readManifested(spark, root, prevManifest, prevSchema, t.name)
-    // `inherit`: the new manifest keeps the prior entries the batch did
-    // not rewrite (false when the whole table was written)
-    val (merged, written, inherit) = t.partitionCol match {
+    t.partitionCol match {
       case None =>
         // unpartitioned: one manifest entry, the table written whole by a
         // plain parquet write (no repartition, no shuffle)
@@ -304,50 +358,44 @@ object ManifestStore {
           case _ => t.batch
         }
         merged.write.mode("overwrite").parquet(new Path(dir, WholeTable).toString)
-        (merged, Seq(WholeTable), false)
+        Staged(Seq(WholeTable), inherit = false, merged.schema)
       case Some(partitionCol) =>
-        val compact = prevManifest.values.toSet.size + 1 > maxManifestVersions
-        val pc = org.apache.spark.sql.functions.col(partitionCol)
-        val merged =
-          if (prevManifest.isEmpty) t.batch
-          else merge match {
-            case RowMerge(f) if compact => f(table, t.batch, t.keys)
-            case RowMerge(f) =>
-              // O(touched): only the batch's partitions are read (partition
-              // pruning applies inside each per-version read) and
-              // rewritten. The driver-side collect is of partition VALUES
-              // only; isin(null) never matches, so a null partition needs
-              // its own isNull arm. Precondition: a key stays in its
-              // partition.
+        def write(df: DataFrame, inherit: Boolean): Staged = {
+          writePartitions(df, Seq(partitionCol), dir)
+          Staged(partitionDirs(fs, dir, partitionCol), inherit, df.schema)
+        }
+        val compact = compacts(prevManifest, maxManifestVersions)
+        merge match {
+          case ReplacePartitions =>
+            // the batch IS the touched partitions' content: no read, no join
+            val s = write(t.batch, inherit = true)
+            replaced(spark, root, batchId, t.name, partitionCol, s.written,
+              s.schema, compact, prevManifest, prevSchema)
+          case RowMerge(_) if prevManifest.isEmpty => write(t.batch, inherit = false)
+          case RowMerge(f) if compact => write(f(table, t.batch, t.keys), inherit = false)
+          case RowMerge(f) =>
+            // O(touched): only the batch's partitions are read (partition
+            // pruning applies inside each per-version read) and
+            // rewritten. The driver-side collect is of partition VALUES
+            // only; isin(null) never matches, so a null partition needs
+            // its own isNull arm. Precondition: a key stays in its
+            // partition. The collect and the merge write are two actions
+            // over the batch: persisting it (unless the caller did) runs a
+            // foreachBatch frame's stateful stage once, not twice.
+            val own = t.batch.storageLevel == StorageLevel.NONE
+            if (own) t.batch.persist()
+            try {
+              val pc = org.apache.spark.sql.functions.col(partitionCol)
               val touched = t.batch.select(partitionCol).distinct().collect().map(_.get(0))
               val (nullTouched, nonNull) = touched.partition(_ == null)
               val touchedPred =
                 if (nullTouched.isEmpty) pc.isin(nonNull.toSeq: _*)
                 else if (nonNull.isEmpty) pc.isNull
                 else pc.isin(nonNull.toSeq: _*) || pc.isNull
-              f(table.filter(touchedPred), t.batch, t.keys)
-            case ReplacePartitions if compact =>
-              // keep the prior version's partitions the batch does not
-              // touch; <=> so a touched null partition is replaced, not
-              // duplicated
-              val bp = "__touched_" + partitionCol
-              val touched = t.batch.select(pc.as(bp)).distinct()
-              table.join(touched, pc <=> touched(bp), "left_anti")
-                .unionByName(t.batch)
-            // the batch IS the touched partitions' content: no read, no join
-            case ReplacePartitions => t.batch
-          }
-        (merged, writePartitions(merged, partitionCol, dir), !compact)
+              write(f(table.filter(touchedPred), t.batch, t.keys), inherit = true)
+            } finally if (own) t.batch.unpersist()
+        }
     }
-    if (prevManifest.isEmpty && written.isEmpty)
-      // an empty FIRST batch commits nothing readable
-      return Map.empty
-    val newManifest =
-      if (inherit) prevManifest ++ written.map(_ -> batchId)
-      else written.map(_ -> batchId).toMap
-    writeManifest(fs, dir, newManifest)
-    writeSchema(fs, dir, merged.schema)
-    newManifest
   }
 
   private def reclaimVersions(fs: FileSystem, root: Path, keep: Set[Long],
@@ -371,6 +419,49 @@ object ManifestStore {
     require(batchId > live, s"batch $batchId is not ahead of the live " +
       s"version $live of $root — gate replayed batch ids before committing")
 
+  /** Open a commit of `batchId`: the live version, after the replay gate. */
+  private def begin(fs: FileSystem, root: Path, batchId: Long): Option[Long] = {
+    fs.mkdirs(root)
+    val cur = SnapshotStore.currentVersion(fs, root)
+    cur.foreach(requireAhead(root, batchId, _))
+    cur
+  }
+
+  /** The live version's manifest and schema of table `sub`. */
+  private def prior(fs: FileSystem, root: Path, cur: Option[Long],
+                    sub: String): (Map[String, Long], Option[StructType]) =
+    cur.fold((Map.empty[String, Long], Option.empty[StructType]))(v =>
+      (readManifestOrEmpty(fs, root, v, sub), readSchemaAt(fs, root, v, sub)))
+
+  /** Write each staged table's manifest and schema, then publish them all
+    * with ONE pointer rename and reclaim versions no live or previous
+    * manifest references and older than `retentionMs`. A table with
+    * nothing readable before or after (an empty FIRST batch) writes no
+    * manifest; when no table is readable the pointer stays where it was
+    * rather than publishing a schema-less table.
+    */
+  private def publish(fs: FileSystem, root: Path, batchId: Long,
+                      staged: Seq[(String, Staged)],
+                      prevManifests: Seq[Map[String, Long]],
+                      retentionMs: Long): Unit = {
+    val manifests = staged.zip(prevManifests).map { case ((sub, s), prevM) =>
+      if (prevM.isEmpty && s.written.isEmpty) Map.empty[String, Long]
+      else {
+        val m = (if (s.inherit) prevM else Map.empty[String, Long]) ++
+          s.written.map(_ -> batchId)
+        val dir = subDir(root, batchId, sub)
+        writeManifest(fs, dir, m)
+        writeSchema(fs, dir, s.schema)
+        m
+      }
+    }
+    if (manifests.forall(_.isEmpty) && prevManifests.forall(_.isEmpty)) return
+    SnapshotStore.pointTo(fs, root, batchId)
+    reclaimVersions(fs, root,
+      (manifests ++ prevManifests).flatMap(_.values).toSet + batchId,
+      retentionMs)
+  }
+
   /** One table of a commit. `name` "" is the single-table layout (the
     * commit's only table); `partitionCol` None is an unpartitioned table;
     * `keys` feed a [[RowMerge]] and are unused by [[ReplacePartitions]].
@@ -393,7 +484,7 @@ object ManifestStore {
     */
   def commit(spark: SparkSession, root: Path, batchId: Long,
              tables: Seq[TableCommit], merge: PartitionMerge,
-             maxManifestVersions: Int = 16,
+             maxManifestVersions: Int = MaxManifestVersions,
              retentionMs: Long = RetentionMs): Unit = {
     require(tables.nonEmpty, "a commit needs at least one table")
     require(tables.map(_.name).distinct.size == tables.size,
@@ -401,24 +492,58 @@ object ManifestStore {
     require(tables.size == 1 || tables.forall(_.name.nonEmpty),
       "the single-table layout (an unnamed table) holds one table only")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(root)
-    val cur = SnapshotStore.currentVersion(fs, root)
-    cur.foreach(requireAhead(root, batchId, _))
-    val prevManifests = tables.map { t =>
-      cur.map(v => readManifestOrEmpty(fs, root, v, t.name)).getOrElse(Map.empty)
+    val cur = begin(fs, root, batchId)
+    val prev = tables.map(t => prior(fs, root, cur, t.name))
+    val staged = tables.zip(prev).map { case (t, (prevM, prevS)) =>
+      t.name -> stageTable(spark, root, batchId, t, merge, prevM, prevS,
+        maxManifestVersions)
     }
-    val staged = tables.zip(prevManifests).map { case (t, prevM) =>
-      stageTable(spark, root, batchId, t, merge, prevM,
-        cur.flatMap(v => readSchemaAt(fs, root, v, t.name)), maxManifestVersions)
+    publish(fs, root, batchId, staged, prev.map(_._1), retentionMs)
+  }
+
+  /** [[commit]] by [[ReplacePartitions]] of named tables partitioned by
+    * `partitionCol`, all drawn from ONE frame: table `name` is the rows of
+    * `tagged` whose `tagCol` equals `name`, projected onto its columns
+    * (`partitionCol` among them; their order is the table's). The frame
+    * is written once, partitioned by `(tagCol, partitionCol)`, into
+    * `v_<batchId>/_staging`, and each table's staged dir is renamed into
+    * place, so `tagged`'s plan runs once per commit; rows of any other
+    * tag are dropped. Each table's schema is that of its projection of
+    * `tagged`. Same caller contract as [[commit]].
+    */
+  def commitTagged(spark: SparkSession, root: Path, batchId: Long,
+                   tagged: DataFrame, tagCol: String, partitionCol: String,
+                   tables: Seq[(String, Seq[String])]): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.functions.col
+    val names = tables.map(_._1)
+    require(names.nonEmpty && names.forall(_.nonEmpty) &&
+      names.distinct.size == names.size,
+      s"tagged tables need distinct non-empty names: ${names.mkString(", ")}")
+    require(tables.forall(_._2.contains(partitionCol)),
+      s"every tagged table carries the partition column $partitionCol")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cur = begin(fs, root, batchId)
+    val prev = names.map(prior(fs, root, cur, _))
+    val staging = new Path(SnapshotStore.versionDir(root, batchId), StagingName)
+    writePartitions(tagged.select((tagCol +: tables.flatMap(_._2).distinct).map(col): _*),
+      Seq(tagCol, partitionCol), staging)
+    val written = names.map { name =>
+      val from = new Path(staging, ExternalCatalogUtils.getPartitionPathString(tagCol, name))
+      val dir = subDir(root, batchId, name)
+      // a replay replaces what an uncommitted attempt renamed into place
+      fs.delete(dir, true)
+      if (fs.exists(from)) fs.rename(from, dir)
+      partitionDirs(fs, dir, partitionCol)
     }
-    if (staged.forall(_.isEmpty) && prevManifests.forall(_.isEmpty))
-      // the pointer stays where it was rather than publishing a
-      // schema-less table
-      return
-    SnapshotStore.pointTo(fs, root, batchId)
-    reclaimVersions(fs, root,
-      (staged ++ prevManifests).flatMap(_.values).toSet + batchId,
-      retentionMs)
+    fs.delete(staging, true)
+    val staged = tables.zip(written).zip(prev).map {
+      case (((name, cols), w), (prevM, prevS)) =>
+        name -> replaced(spark, root, batchId, name, partitionCol, w,
+          tagged.select(cols.map(col): _*).schema,
+          compacts(prevM, MaxManifestVersions), prevM, prevS)
+    }
+    publish(fs, root, batchId, staged, prev.map(_._1), RetentionMs)
   }
 
   /** Keyed DELETE committed at O(touched-partitions) cost — the DELETE
@@ -470,7 +595,8 @@ object ManifestStore {
     val remaining = readManifested(spark, root, touchedManifest, prevSchema, "")
       .join(delKeys.select(keys.map(col): _*).distinct(), keys, "left_anti")
     val dir = subDir(root, batchId, "")
-    val written = writePartitions(remaining, partitionCol, dir)
+    writePartitions(remaining, Seq(partitionCol), dir)
+    val written = partitionDirs(fs, dir, partitionCol)
     val newManifest = (prevManifest -- touchedManifest.keySet) ++
       written.map(_ -> batchId)
     writeManifest(fs, dir, newManifest)

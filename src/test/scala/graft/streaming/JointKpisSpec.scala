@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobAudit, SparkSpec}
 import graft.sources.TestdataAdapter
 import graft.state.{ManifestStore, SnapshotStore}
 import graft.transform.Kpis
@@ -215,16 +215,18 @@ class JointKpisSpec extends SparkSpec {
     try {
       JointKpis.jointSinkManifested(root)(batch, 0L)
       spark.listenerManager.register(listener)
-      JointKpis.jointSinkManifested(root)(batch, 1L)
-      // listener delivery is asynchronous: wait for both table writes of
-      // batch 1 (every earlier query of the commit is delivered before them)
+      // one partitioned write stages both tables of batch 1; the audit's
+      // marker job flushes the listener bus behind it
+      JobAudit.jobsDuring(spark)(JointKpis.jointSinkManifested(root)(batch, 1L))
       val v1 = SnapshotStore.versionDir(new Path(root), 1L).toString
-      def written = planned.flatMap(_.collect {
-        case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString
-      }).filter(_.contains(v1)).toSet
+      def writes = planned.flatMap(_.collect {
+        case w: InsertIntoHadoopFsRelationCommand if w.outputPath.toString.contains(v1) => w
+      })
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (written.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(written.size == 2, s"saw writes ${written.mkString(", ")}")
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(writes.size == 1, s"saw writes ${writes.map(_.outputPath).mkString(", ")}")
+      assert(writes.head.partitionColumns.map(_.name) == Seq("table", "order_date"),
+        s"the write is partitioned by ${writes.head.partitionColumns.map(_.name)}")
       val reads = planned.flatMap(_.collect { case l: LogicalRelation => l.relation })
         .flatMap {
           case r: HadoopFsRelation => r.location.rootPaths.map(_.toString)
@@ -273,6 +275,88 @@ class JointKpisSpec extends SparkSpec {
       // untouched days still resolve (inherited by manifest reference)
       assert(dayRows(JointKpis.dailyTableManifested(spark, root)) == dayBefore)
     } finally batch.unpersist()
+  }
+
+  test("a manifested joint trigger is one job and runs its state stage once, compaction included") {
+    implicit val ctx = spark.sqlContext
+    val (root, cp) = (tmp("graft_jointm_jobs"), tmp("graft_jointm_jobs_cp"))
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cols = Seq("order_id", "user_id", "product_id", "category", "sale_price",
+      "is_returned", "order_date")
+    val input = MemoryStream[(Long, Long, Long, String, Double, Boolean, java.sql.Date)]
+    val q = JointKpis.writerManifested(input.toDF().toDF(cols: _*), root, cp).start()
+    def day(i: Int) = java.sql.Date.valueOf(java.time.LocalDate.of(2026, 1, 1).plusDays(i))
+    var compacting = 0
+    try {
+      // each trigger touches a new day, so the live manifest references one
+      // more version per commit until a commit compacts
+      (0 to 17).foreach { i =>
+        input.addData((i.toLong, 10L, 100L, "a", 1.5, i % 2 == 0, day(i)))
+        val (_, jobs, stateStages) = JobAudit.stateStagesDuring(spark)(q.processAllAvailable())
+        val v = SnapshotStore.currentVersion(fs, rootPath).get
+        val daily = ManifestStore.readManifest(fs, rootPath, v, "daily")
+        if (i > 0 && daily.values.forall(_ == v)) compacting += 1
+        else assert(jobs.size == 1, s"trigger $i ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+        assert(stateStages == 1, s"trigger $i ran its state stage $stateStages times")
+      }
+    } finally q.stop()
+    assert(compacting == 1, s"$compacting compacting commits in 18")
+    // a replayed batch id runs no Spark work at all
+    val replay = Seq(JointKpiRow("daily", day(0), None, None, None, None,
+      Some(9L), Some(9.0), Some(9L), Some(0.0), Some(9L))).toDS().toDF()
+    val (_, jobs) = JobAudit.jobsDuring(spark)(JointKpis.jointSinkManifested(root)(replay, 17L))
+    assert(jobs.isEmpty, s"a replayed batch ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    assert(dayRows(JointKpis.dailyTableManifested(spark, root)).size == 18)
+  }
+
+  test("one-write staging: a crash after staging replays to the batch KPIs with one file per day") {
+    val root = tmp("graft_jointm_stage_crash")
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val enriched = enrichedTestdata.persist()
+    val batch = JointKpis.stream(enriched).toDF().persist()
+    def check(live: Long): Unit = {
+      assert(catRows(JointKpis.categoryTableManifested(spark, root))
+        == catRows(Kpis.categoryKpis(enriched)))
+      assert(dayRows(JointKpis.dailyTableManifested(spark, root))
+        == dayRows(Kpis.dailyKpis(enriched)))
+      Seq("category", "daily").foreach { t =>
+        val m = ManifestStore.readManifest(fs, rootPath, live, t)
+        m.foreach { case (d, o) =>
+          val files = fs.listStatus(new Path(SnapshotStore.versionDir(rootPath, o), s"$t/$d"))
+            .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+          assert(files.length == 1, s"$t/$d of v_$o holds ${files.mkString(", ")}")
+        }
+      }
+    }
+    try {
+      JointKpis.jointSinkManifested(root)(batch, 0L)
+      // batch 1 crashes after its one write and the first table's rename,
+      // before the pointer moves
+      val v1 = SnapshotStore.versionDir(rootPath, 1L)
+      batch.write.partitionBy("table", "order_date")
+        .parquet(new Path(v1, "_staging").toString)
+      assert(fs.rename(new Path(v1, "_staging/table=category"), new Path(v1, "category")))
+      assert(SnapshotStore.currentVersion(fs, rootPath).contains(0L))
+      JointKpis.jointSinkManifested(root)(batch, 1L)
+      assert(SnapshotStore.currentVersion(fs, rootPath).contains(1L))
+      Seq("category/category", "category/table=category", "_staging").foreach { d =>
+        assert(!fs.exists(new Path(v1, d)), s"the replay left v_1/$d")
+      }
+      check(1L)
+      // 17 one-day commits: the 17th finds 16 versions referenced and compacts
+      val days = batch.select("order_date").distinct().orderBy("order_date")
+        .as[java.sql.Date].collect().take(17)
+      assert(days.length == 17)
+      days.zipWithIndex.foreach { case (d, i) =>
+        JointKpis.jointSinkManifested(root)(batch.filter(col("order_date") === lit(d)), 2L + i)
+      }
+      assert(Seq("category", "daily").forall(t =>
+        ManifestStore.readManifest(fs, rootPath, 17L, t).values.toSet == Set(17L)),
+        "commit 17 did not compact")
+      check(18L)
+    } finally { batch.unpersist(); enriched.unpersist() }
   }
 
   test("a concurrent reader during a commit loop never errors (VERDICT r05 #3)") {

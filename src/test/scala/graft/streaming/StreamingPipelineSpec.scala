@@ -233,6 +233,30 @@ class StreamingPipelineSpec extends SparkSpec {
       graft.state.SnapshotStore.versionDir(root, o), d)) }, s"manifest $m")
   }
 
+  test("a partitioned daily KPI trigger runs its state stage once") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val ctx = spark.sqlContext
+    val (out, cp) = (tmp("graft_dponce"), tmp("graft_dponce_cp"))
+    val d1 = java.sql.Date.valueOf("2024-01-01")
+    val d2 = java.sql.Date.valueOf("2024-01-02")
+    val input = MemoryStream[(String, Long, Long, String, Double, Boolean, java.sql.Date)]
+    val q = StreamingPipeline.dailyKpiWriterPartitioned(input.toDF().toDF("order_id",
+      "user_id", "product_id", "category", "sale_price", "is_returned", "order_date"),
+      out, cp).start()
+    // the second trigger merges into d1's committed partition
+    val batches = Seq(
+      Seq(("o1", 1L, 10L, "c", 10.0, false, d1), ("o2", 2L, 11L, "c", 5.0, true, d2)),
+      Seq(("o3", 3L, 10L, "c", 7.0, false, d1)))
+    try batches.zipWithIndex.foreach { case (rows, i) =>
+      input.addData(rows: _*)
+      val (_, _, stateStages) = graft.JobAudit.stateStagesDuring(spark)(q.processAllAvailable())
+      assert(stateStages == 1, s"trigger $i ran its state stage $stateStages times")
+    } finally q.stop()
+    assert(dailyMap(StreamingPipeline.readSnapshot(spark, out)) == dailyMap(Kpis.dailyKpis(
+      batches.flatten.toDF("order_id", "user_id", "product_id", "category",
+        "sale_price", "is_returned", "order_date"))))
+  }
+
   test("EXACT streaming daily KPIs equal the batch computation bit-for-bit, cumulatively") {
     val (in, out, cp) = (tmp("graft_ein"), tmp("graft_eout"), tmp("graft_ecp"))
     val d1 = java.sql.Date.valueOf("2024-01-01")
