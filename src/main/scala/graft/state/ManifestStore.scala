@@ -69,7 +69,9 @@ import scala.util.control.NonFatal
   * `(tag, partition column)`, into `v_<batch>/_staging`, and each
   * `_staging/<tag>=<name>` directory is renamed to `v_<batch>/<name>`. So
   * the frame's plan, a foreachBatch frame's stateful stage included, runs
-  * once per commit and needs no persist. The layout, manifests and
+  * once per commit and needs no persist; a frame clustered by the
+  * partition column (a stateful operator keyed by it) is written with no
+  * exchange, inside the tasks that produce it. The layout, manifests and
   * schemas are those of a [[commit]] of the same tables; a data file may
   * also carry the sibling tables' columns, all null, which readers never
   * see because they read through the table's committed `_schema`.
@@ -126,39 +128,28 @@ object ManifestStore {
     * merged schema). Versions committed before this file existed read
     * with inference, as before.
     */
-  private def writeSchema(fs: FileSystem, dir: Path, schema: StructType): Unit = {
-    val out = fs.create(new Path(dir, SchemaName), true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeSchema(fs: FileSystem, dir: Path, schema: StructType): Unit =
+    SnapshotStore.writeText(fs, new Path(dir, SchemaName), schema.json)
 
   private def readSchemaAt(fs: FileSystem, root: Path, version: Long,
                            sub: String): Option[StructType] = {
     val p = new Path(subDir(root, version, sub), SchemaName)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(DataType.fromJson(scala.io.Source.fromInputStream(in).mkString)
-        .asInstanceOf[StructType])
-      finally in.close()
-    }
+    else Some(DataType.fromJson(SnapshotStore.readText(fs, p)).asInstanceOf[StructType])
   }
 
   /** The live manifest of a committed version: partition dir name → the
     * version id owning that partition's data.
     */
   def readManifest(fs: FileSystem, root: Path, version: Long,
-                   sub: String = ""): Map[String, Long] = {
-    val p = new Path(subDir(root, version, sub), ManifestName)
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in).getLines()
+                   sub: String = ""): Map[String, Long] =
+    SnapshotStore.readText(fs, new Path(subDir(root, version, sub), ManifestName))
+      .split('\n').iterator
       .filter(_.nonEmpty)
       .map { line =>
         val i = line.lastIndexOf('\t')
         line.substring(0, i) -> line.substring(i + 1).toLong
       }.toMap
-    finally in.close()
-  }
 
   /** [[readManifest]], with a MISSING manifest file read as "no partitions
     * yet" instead of a raw FileNotFoundException. A multi-table commit
@@ -173,13 +164,10 @@ object ManifestStore {
     if (!fs.exists(new Path(subDir(root, version, sub), ManifestName))) Map.empty
     else readManifest(fs, root, version, sub)
 
-  private def writeManifest(fs: FileSystem, dir: Path,
-                            manifest: Map[String, Long]): Unit = {
-    val out = fs.create(new Path(dir, ManifestName), true)
-    try out.writeBytes(manifest.toSeq.sortBy(_._1)
+  private[state] def writeManifest(fs: FileSystem, dir: Path,
+                                   manifest: Map[String, Long]): Unit =
+    SnapshotStore.writeText(fs, new Path(dir, ManifestName), manifest.toSeq.sortBy(_._1)
       .map { case (d, v) => s"$d\t$v" }.mkString("", "\n", "\n"))
-    finally out.close()
-  }
 
   /** Read the table a manifest describes: group the data dirs by owning
     * version and read each group with that version's table dir as
@@ -270,7 +258,9 @@ object ManifestStore {
       readSchemaAt(fs, rootPath, v, sub), sub)
   }
 
-  /** Write `df` under `dir` partitioned by `partitionCols`.
+  /** Write `df` under `dir` partitioned by `partitionCols`, for a frame
+    * that is NOT already clustered by them ([[commit]]'s tables, the
+    * compaction copy in [[replaced]], [[deletePartitioned]]'s remainder).
     *
     * Rows are clustered by the partition columns first (r18, guide §6
     * small files): without it every task writes one file into EVERY
@@ -283,7 +273,8 @@ object ManifestStore {
     * shuffle parallelism): a bare repartition(pc) lets AQE coalesce the
     * tiny shuffle to ONE task, which then creates every partition
     * directory serially — measured 35 s vs 9 s for the same ~2400-dir
-    * write.
+    * write. A frame that is already clustered skips the exchange
+    * ([[commitTagged]]).
     */
   private def writePartitions(df: DataFrame, partitionCols: Seq[String],
                               dir: Path): Unit = {
@@ -334,7 +325,7 @@ object ManifestStore {
       val dir = subDir(root, batchId, sub)
       val copied = partitionDirs(fs, staging, partitionCol)
       fs.mkdirs(dir)
-      copied.foreach(d => fs.rename(new Path(staging, d), new Path(dir, d)))
+      copied.foreach(d => SnapshotStore.renameOrFail(fs, new Path(staging, d), new Path(dir, d)))
       fs.delete(staging, true)
       Staged(written ++ copied, inherit = false, schema)
     }
@@ -510,6 +501,14 @@ object ManifestStore {
     * place, so `tagged`'s plan runs once per commit; rows of any other
     * tag are dropped. Each table's schema is that of its projection of
     * `tagged`. Same caller contract as [[commit]].
+    *
+    * Precondition: `tagged` is CLUSTERED by `partitionCol` — every row of
+    * one partition value sits in one Spark partition, as the output of a
+    * stateful operator keyed by that column is. The write then adds no
+    * exchange: it runs in the tasks that produce `tagged` (a foreachBatch
+    * frame's state tasks), and each `(tag, partition)` directory gets one
+    * file. A frame that is not clustered still commits correctly, with one
+    * file per task per directory instead.
     */
   def commitTagged(spark: SparkSession, root: Path, batchId: Long,
                    tagged: DataFrame, tagCol: String, partitionCol: String,
@@ -526,14 +525,17 @@ object ManifestStore {
     val cur = begin(fs, root, batchId)
     val prev = names.map(prior(fs, root, cur, _))
     val staging = new Path(SnapshotStore.versionDir(root, batchId), StagingName)
-    writePartitions(tagged.select((tagCol +: tables.flatMap(_._2).distinct).map(col): _*),
-      Seq(tagCol, partitionCol), staging)
+    // no _SUCCESS marker: _staging is deleted as soon as its dirs move
+    tagged.select((tagCol +: tables.flatMap(_._2).distinct).map(col): _*)
+      .write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy(tagCol, partitionCol).parquet(staging.toString)
     val written = names.map { name =>
       val from = new Path(staging, ExternalCatalogUtils.getPartitionPathString(tagCol, name))
       val dir = subDir(root, batchId, name)
       // a replay replaces what an uncommitted attempt renamed into place
       fs.delete(dir, true)
-      if (fs.exists(from)) fs.rename(from, dir)
+      if (fs.exists(from)) SnapshotStore.renameOrFail(fs, from, dir)
       partitionDirs(fs, dir, partitionCol)
     }
     fs.delete(staging, true)

@@ -1,6 +1,10 @@
 package graft.state
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path,
+  RawLocalFileSystem}
 
 /** The version pointer under every [[ManifestStore]] table root: version
   * directories `v_<batchId>/` and one `_current` pointer file naming the
@@ -31,12 +35,8 @@ object SnapshotStore {
 
   /** The committed version id, if any commit ever succeeded. */
   def currentVersion(fs: FileSystem, root: Path): Option[Long] = {
-    val p = new Path(root, PointerName)
-    try {
-      val in = fs.open(p)
-      try parseVersion(scala.io.Source.fromInputStream(in).mkString.trim)
-      finally in.close()
-    } catch { case _: java.io.IOException => None }
+    try parseVersion(readText(fs, new Path(root, PointerName)).trim)
+    catch { case _: java.io.IOException => None }
   }
 
   /** Every committed version still on disk (≤ the pointer — a NEWER dir
@@ -58,24 +58,82 @@ object SnapshotStore {
     * DFS roots it is FileContext's atomic OVERWRITE rename.
     */
   private[graft] def pointTo(fs: FileSystem, root: Path, batchId: Long): Unit = {
-    val content = versionDir(root, batchId).getName + "\n"
+    val tmpName = s"_current_tmp_${java.util.UUID.randomUUID()}"
+    writeText(fs, new Path(root, tmpName), versionDir(root, batchId).getName + "\n")
     // branch on the FILESYSTEM's scheme, not the raw path's: a scheme-less
     // root on a cluster whose default FS is HDFS must take the DFS path —
     // the data dirs went through `fs`, so the pointer must too
     // (code-review r6)
     if (fs.getUri.getScheme == "file") {
-      val dir = java.nio.file.Paths.get(fs.makeQualified(root).toUri.getPath)
-      val tmp = dir.resolve(s"_current_tmp_${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.writeString(tmp, content)
-      java.nio.file.Files.move(tmp, dir.resolve(PointerName),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      val dir = localPath(fs, root)
+      Files.move(dir.resolve(tmpName), dir.resolve(PointerName),
+        StandardCopyOption.ATOMIC_MOVE)
     } else {
-      val tmp = new Path(root, s"_current_tmp_${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      out.writeBytes(content)
-      out.close()
       val fc = FileContext.getFileContext(root.toUri, fs.getConf)
-      fc.rename(tmp, new Path(root, PointerName), Options.Rename.OVERWRITE)
+      fc.rename(new Path(root, tmpName), new Path(root, PointerName),
+        Options.Rename.OVERWRITE)
     }
   }
+
+  /** `fs.rename`, failing loudly: Hadoop reports a failed rename by
+    * returning false, and a writer that goes on to publish a version or
+    * delete a backup after one would lose data.
+    */
+  private[graft] def renameOrFail(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"rename failed: $from -> $to")
+
+  /** Every store text file (pointer, manifest, schema, lock token) is
+    * UTF-8 on disk, whatever the JVM's default charset: a partition value
+    * or column name outside ASCII must read back as it was written.
+    * Writes replace the file whole, through [[createSmall]].
+    */
+  private[graft] def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = createSmall(fs, p, overwrite = true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  private[graft] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  private def localPath(fs: FileSystem, p: Path): java.nio.file.Path =
+    java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
+
+  /** Hadoop's own local FileSystem classes, by exact name: the checksummed
+    * and the raw local FS, and the `LocalFileSystem` subclass Spark's
+    * bundled Hive registers for `file:` (it overrides only `rename`).
+    */
+  private val LocalFsClasses = Set(classOf[LocalFileSystem].getName,
+    classOf[RawLocalFileSystem].getName,
+    "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem")
+
+  /** Open one of a store's small files (pointer, manifest, schema, writer
+    * lock) for writing, its text to be written as UTF-8. With
+    * `overwrite` false an existing file is an IOException, as
+    * `fs.create(p, false)`.
+    *
+    * On Hadoop's own local FileSystems (matched by exact CLASS, not by
+    * the `file` scheme, so a wrapping or subclassed FileSystem keeps its
+    * own `create`) the file is written with java.nio: without Hadoop's
+    * native library, local `create` forks a `chmod` process for the file
+    * and another for its `.crc`, which costs several times the write
+    * itself. Such a file has no `.crc`, which `LocalFileSystem` reads
+    * unchecked; a `.crc` sibling left by an earlier `fs.create` of the same
+    * name is deleted first, since it would not match the new content.
+    * Missing parent directories are created, as `create` does. Any other
+    * FileSystem goes through `fs.create`.
+    */
+  private[graft] def createSmall(fs: FileSystem, p: Path,
+                                 overwrite: Boolean): java.io.OutputStream =
+    if (!LocalFsClasses(fs.getClass.getName)) fs.create(p, overwrite)
+    else {
+      val f = localPath(fs, p)
+      Files.createDirectories(f.getParent)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+      if (overwrite) Files.newOutputStream(f)
+      else Files.newOutputStream(f, StandardOpenOption.CREATE_NEW,
+        StandardOpenOption.WRITE)
+    }
 }

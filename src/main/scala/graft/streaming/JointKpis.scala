@@ -196,8 +196,12 @@ object JointKpis {
     *
     * Both tables are staged by ONE partitioned write of the tagged batch,
     * so a trigger is one Spark job and the flatMapGroupsWithState
-    * micro-batch runs once, with no persist; a compacting commit rewrites
-    * untouched days from their committed files, not from the batch. [[update]] emits every touched day whole (its
+    * micro-batch runs once, with no persist. The state is keyed by
+    * order_date, so each day's rows sit in one state task: the write needs
+    * no exchange of its own and runs inside the state tasks (a trigger is
+    * two stages, the source's exchange and the state), one file per
+    * `(table, day)`. A compacting commit rewrites untouched days from
+    * their committed files, not from the batch. [[update]] emits every touched day whole (its
     * daily row and a row per category in the day's state), so the commit
     * replaces the touched `order_date` partitions with no read of the
     * prior version and no merge join. Replay stays exactly-once — a

@@ -137,7 +137,8 @@ object PassageStream {
     val tmp = new Path(s"$workDir/registry_compact_tmp")
     fs.delete(tmp, true)
     merged.write.mode("overwrite").parquet(tmp.toString)
-    fs.rename(tmp, new Path(s"$regRoot/batch=$newId"))
+    // a failed rename must abort before the absorbed partitions go
+    graft.state.SnapshotStore.renameOrFail(fs, tmp, new Path(s"$regRoot/batch=$newId"))
     absorbed.foreach(id => fs.delete(new Path(s"$regRoot/batch=$id"), true))
   }
 }

@@ -1,11 +1,14 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 import graft.operators.Upsert
+import graft.state.SnapshotStore
 import graft.transform.Kpis
 
 /** ST1/ST4/ST5/ST7 — the event-driven pipeline as Structured Streaming.
@@ -72,7 +75,7 @@ object StreamingPipeline {
           n.startsWith("_bak_") && !n.contains("=")
         }
         .sortBy(_.getModificationTime)
-      baks.lastOption.foreach(b => fs.rename(b.getPath, cur))
+      baks.lastOption.foreach(b => SnapshotStore.renameOrFail(fs, b.getPath, cur))
     }
 
   /** Single-writer fencing for every table sink (VERDICT r04 #4): the
@@ -141,11 +144,11 @@ object StreamingPipeline {
     // fault instead: the file is deleted (an empty or partial lock would
     // fence every writer for staleMs) and the fault propagates.
     def tryAcquire(): Boolean =
-      (try Some(fs.create(lock, false))
+      (try Some(SnapshotStore.createSmall(fs, lock, overwrite = false))
        catch { case _: java.io.IOException => None }) match {
         case None => false
         case Some(out) =>
-          try { try out.writeBytes(token + "\n") finally out.close() }
+          try { try out.write((token + "\n").getBytes(UTF_8)) finally out.close() }
           catch { case e: java.io.IOException =>
             try fs.delete(lock, false) catch { case _: java.io.IOException => () }
             throw e
@@ -153,11 +156,8 @@ object StreamingPipeline {
           true
       }
     def readLock(p: Path): Option[String] =
-      try {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in).mkString.trim)
-        finally in.close()
-      } catch { case _: Throwable => None }
+      try Some(SnapshotStore.readText(fs, p).trim)
+      catch { case _: Throwable => None }
     def holderDead(content: String): Boolean = {
       val kv = content.split("\\s+").flatMap(_.split("=", 2) match {
         case Array(k, v) => Some(k -> v); case _ => None
@@ -237,8 +237,7 @@ object StreamingPipeline {
         while (!Thread.interrupted()) {
           Thread.sleep(hbPeriod)
           if (!released && owned(readLock(lock))) {
-            val out = fs.create(lock, true)
-            try out.writeBytes(tokenNow() + "\n") finally out.close()
+            SnapshotStore.writeText(fs, lock, tokenNow() + "\n")
             if (released && owned(readLock(lock))) fs.delete(lock, false)
           }
         }
@@ -297,8 +296,13 @@ object StreamingPipeline {
       val tmp = new Path(root, s"_staging_$batchId")
       merged.write.mode("overwrite").parquet(tmp.toString)
       val bak = new Path(root, s"_bak_$batchId")
-      if (fs.exists(cur)) fs.rename(cur, bak)
-      fs.rename(tmp, cur)
+      if (fs.exists(cur)) SnapshotStore.renameOrFail(fs, cur, bak)
+      // the backup is deleted only once the new table is in place; a
+      // failed swap puts the backup back (or leaves it to recoverBackup)
+      if (!fs.rename(tmp, cur)) {
+        if (fs.exists(bak)) fs.rename(bak, cur)
+        throw new java.io.IOException(s"rename failed: $tmp -> $cur")
+      }
       fs.delete(bak, true)
     }
   }
@@ -337,7 +341,7 @@ object StreamingPipeline {
     val root = new Path(targetDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withWriterLock(fs, root, resolveStaleMs(spark)) {
-      if (!graft.state.SnapshotStore.currentVersion(fs, root).exists(_ >= batchId))
+      if (!SnapshotStore.currentVersion(fs, root).exists(_ >= batchId))
         graft.state.ManifestStore.commit(spark, root, batchId,
           Seq(graft.state.ManifestStore.TableCommit("", batch, keys, partitionCol)),
           graft.state.ManifestStore.RowMerge(

@@ -23,17 +23,18 @@ object JobAudit {
     */
   def jobsDuring[T](spark: SparkSession)(body: => T): (T, Seq[String]) = {
     val (out, jobs, _) = audit(spark)(body)
-    (out, jobs)
+    (out, jobs.map(_.mkString("; ")))
   }
 
-  /** [[jobsDuring]], plus the number of stages completed meanwhile that
-    * ran a stateful streaming operator: a stage whose RDDs include a
-    * `StateStoreRDD` and whose tasks reported a state-store metric. A
-    * stage that only reads the operator's output from a persisted frame
-    * lists the `StateStoreRDD` among its ancestors but runs no state
-    * store, so it is not counted.
+  /** [[jobsDuring]] with each job as the list of its stages' names (one
+    * per stage the job planned), plus the number of stages completed
+    * meanwhile that ran a stateful streaming operator: a stage whose RDDs
+    * include a `StateStoreRDD` and whose tasks reported a state-store
+    * metric. A stage that only reads the operator's output from a
+    * persisted frame lists the `StateStoreRDD` among its ancestors but
+    * runs no state store, so it is not counted.
     */
-  def stateStagesDuring[T](spark: SparkSession)(body: => T): (T, Seq[String], Int) = {
+  def stateStagesDuring[T](spark: SparkSession)(body: => T): (T, Seq[Seq[String]], Int) = {
     val (out, jobs, stages) = audit(spark)(body)
     (out, jobs, stages.count { s =>
       s.rddInfos.exists(_.name == "StateStoreRDD") &&
@@ -42,17 +43,17 @@ object JobAudit {
   }
 
   private def audit[T](spark: SparkSession)(body: => T)
-      : (T, Seq[String], Seq[org.apache.spark.scheduler.StageInfo]) = {
+      : (T, Seq[Seq[String]], Seq[org.apache.spark.scheduler.StageInfo]) = {
     val sc = spark.sparkContext
     val group = s"job_audit_marker_${java.util.UUID.randomUUID()}"
     val markerSeen = new AtomicBoolean(false)
-    val jobs = new ConcurrentLinkedQueue[String]
+    val jobs = new ConcurrentLinkedQueue[Seq[String]]
     val stages = new ConcurrentLinkedQueue[org.apache.spark.scheduler.StageInfo]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
             .contains(group)) markerSeen.set(true)
-        else jobs.add(e.stageInfos.map(_.name).mkString("; "))
+        else jobs.add(e.stageInfos.map(_.name))
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (!markerSeen.get) stages.add(e.stageInfo)
     }

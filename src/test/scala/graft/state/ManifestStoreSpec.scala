@@ -352,6 +352,30 @@ class ManifestStoreSpec extends SparkSpec {
     assert(SnapshotStore.currentVersion(fs, new Path(root)).contains(1L))
   }
 
+  test("a non-ASCII column name round-trips through the committed schema") {
+    val root = tmp("graft_mfs_utf8_col")
+    val (colName, value) = ("cat\u00e9gorie", "\u00c9lectronique") // catégorie, Électronique
+    StreamingPipeline.upsertBatchSnapshot(root, Seq("id"))(
+      Seq((1L, value)).toDF("id", colName), 0L)
+    val out = StreamingPipeline.readSnapshot(spark, root)
+    assert(out.columns.toSeq == Seq("id", colName))
+    assert(out.select(colName).as[String].collect().toSeq == Seq(value))
+  }
+
+  test("manifest entries outside ASCII round-trip as UTF-8") {
+    val root = new Path(tmp("graft_mfs_utf8_manifest"))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // cat=Électronique, cat=日本: entries only, no such directory is created
+    val m = Map("cat=\u00c9lectronique" -> 3L, "cat=\u65e5\u672c" -> 4L, "cat=x" -> 1L)
+    val dir = SnapshotStore.versionDir(root, 4L)
+    ManifestStore.writeManifest(fs, dir, m)
+    assert(ManifestStore.readManifest(fs, root, 4L) == m)
+    val onDisk = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir.toString, "_manifest"))
+    assert(new String(onDisk, java.nio.charset.StandardCharsets.UTF_8)
+      .contains("cat=\u65e5\u672c\t4"))
+  }
+
   test("schema evolution in the whole-table snapshot sink") {
     val root = tmp("graft_snap_evolve")
     val sink = StreamingPipeline.upsertBatchSnapshot(

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.{JobAudit, SparkSpec}
 import graft.sources.TestdataAdapter
 import graft.state.{ManifestStore, SnapshotStore}
@@ -40,17 +42,31 @@ class JointKpisSpec extends SparkSpec {
       .collect().map(r => (r.getDate(0).toString, r.getLong(1),
         r.getDouble(2), r.getLong(3), r.getDouble(4), r.getLong(5))).toSet
 
+  /** Every live `(table, day)` dir of the committed pair holds one file. */
+  private def assertOneFilePerDay(root: String): Unit = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = SnapshotStore.currentVersion(fs, rootPath).get
+    Seq("category", "daily").foreach { t =>
+      ManifestStore.readManifest(fs, rootPath, live, t).foreach { case (d, o) =>
+        val files = fs.listStatus(new Path(SnapshotStore.versionDir(rootPath, o), s"$t/$d"))
+          .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"$t/$d of v_$o holds ${files.mkString(", ")}")
+      }
+    }
+  }
+
+  private def pairRows(rev: Double) = Seq(
+    JointKpiRow("category", java.sql.Date.valueOf("2026-01-01"), Some("cat"),
+      Some(rev), Some(rev), Some(0.0), None, None, None, None, None),
+    JointKpiRow("daily", java.sql.Date.valueOf("2026-01-01"), None, None, None,
+      None, Some(1L), Some(rev), Some(1L), Some(0.0), Some(1L)))
+    .toDS().toDF()
+
   test("a pair pinned to an old epoch stays a consistent pair (versionAsOf)") {
     val root = tmp("graft_joint_tt")
-    val day0 = java.sql.Date.valueOf("2026-01-01")
-    def batchRows(rev: Double) = Seq(
-      JointKpiRow("category", day0, Some("cat"), Some(rev), Some(rev),
-        Some(0.0), None, None, None, None, None),
-      JointKpiRow("daily", day0, None, None, None, None,
-        Some(1L), Some(rev), Some(1L), Some(0.0), Some(1L)))
-      .toDS().toDF()
-    JointKpis.jointSinkManifested(root)(batchRows(10.0), 0L)
-    JointKpis.jointSinkManifested(root)(batchRows(99.0), 1L)
+    JointKpis.jointSinkManifested(root)(pairRows(10.0), 0L)
+    JointKpis.jointSinkManifested(root)(pairRows(99.0), 1L)
     // current pair sees the replaced epoch; the pinned pair sees epoch 0
     // on BOTH tables — never a mix
     assert(JointKpis.dailyTableManifested(spark, root)
@@ -150,6 +166,9 @@ class JointKpisSpec extends SparkSpec {
       == catRows(Kpis.categoryKpis(joined)))
     assert(dayRows(JointKpis.dailyTableManifested(spark, root))
       == dayRows(Kpis.dailyKpis(joined)))
+    // the state tasks write the staged tables: each day sits in one state
+    // partition, so each committed day dir holds one file
+    assertOneFilePerDay(root)
     joined.unpersist()
   }
 
@@ -297,7 +316,12 @@ class JointKpisSpec extends SparkSpec {
         val v = SnapshotStore.currentVersion(fs, rootPath).get
         val daily = ManifestStore.readManifest(fs, rootPath, v, "daily")
         if (i > 0 && daily.values.forall(_ == v)) compacting += 1
-        else assert(jobs.size == 1, s"trigger $i ran ${jobs.size} jobs: ${jobs.mkString(" | ")}")
+        else {
+          // one job of two stages: the source's exchange, then the state
+          // tasks, which also write the staged tables (no exchange of their own)
+          assert(jobs.map(_.size) == Seq(2),
+            s"trigger $i ran ${jobs.size} job(s): ${jobs.map(_.mkString("; ")).mkString(" | ")}")
+        }
         assert(stateStages == 1, s"trigger $i ran its state stage $stateStages times")
       }
     } finally q.stop()
@@ -321,14 +345,8 @@ class JointKpisSpec extends SparkSpec {
         == catRows(Kpis.categoryKpis(enriched)))
       assert(dayRows(JointKpis.dailyTableManifested(spark, root))
         == dayRows(Kpis.dailyKpis(enriched)))
-      Seq("category", "daily").foreach { t =>
-        val m = ManifestStore.readManifest(fs, rootPath, live, t)
-        m.foreach { case (d, o) =>
-          val files = fs.listStatus(new Path(SnapshotStore.versionDir(rootPath, o), s"$t/$d"))
-            .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-          assert(files.length == 1, s"$t/$d of v_$o holds ${files.mkString(", ")}")
-        }
-      }
+      assert(SnapshotStore.currentVersion(fs, rootPath).contains(live))
+      assertOneFilePerDay(root)
     }
     try {
       JointKpis.jointSinkManifested(root)(batch, 0L)
@@ -357,6 +375,52 @@ class JointKpisSpec extends SparkSpec {
         "commit 17 did not compact")
       check(18L)
     } finally { batch.unpersist(); enriched.unpersist() }
+  }
+
+  test("a staged dir that fails to rename aborts the joint commit before its pointer") {
+    import graft.RenameFailingFileSystem
+    val root = tmp("graft_jointm_renamefail")
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    JointKpis.jointSinkManifested(root)(pairRows(10.0), 0L)
+    // the same files through a file system whose rename of a staged table
+    // dir (`_staging/table=<name>`) returns false
+    val e = RenameFailingFileSystem.failing(spark.sparkContext.hadoopConfiguration,
+      _.getParent.getName == "_staging") {
+      intercept[java.io.IOException](
+        JointKpis.jointSinkManifested(RenameFailingFileSystem.root(root))(pairRows(99.0), 1L))
+    }
+    assert(e.getMessage.contains("rename"), e.getMessage)
+    assert(SnapshotStore.currentVersion(fs, new Path(root)).contains(0L))
+    assert(JointKpis.dailyTableManifested(spark, root)
+      .select("total_revenue").as[Double].collect().toSeq == Seq(10.0))
+    // the lock was released and the replay commits the batch
+    JointKpis.jointSinkManifested(root)(pairRows(99.0), 1L)
+    assert(JointKpis.categoryTableManifested(spark, root)
+      .select("daily_revenue").as[Double].collect().toSeq == Seq(99.0))
+  }
+
+  test("a joint commit on a local root writes its metadata files without .crc siblings") {
+    import java.nio.file.{Files, Paths}
+    val root = tmp("graft_jointm_nocrc")
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+    // the lock the commit takes, seen while it is held
+    val lockCrc = StreamingPipeline.withWriterLock(fs, rootPath,
+        StreamingPipeline.LockStaleMs) {
+      assert(Files.exists(Paths.get(root, "_writer_lock")))
+      Files.exists(Paths.get(root, "._writer_lock.crc"))
+    }
+    assert(!lockCrc, "the writer lock was written with a .crc")
+    JointKpis.jointSinkManifested(root)(pairRows(10.0), 0L)
+    JointKpis.jointSinkManifested(root)(pairRows(99.0), 1L)
+    val names = Files.walk(Paths.get(root)).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    assert(names.count(_ == "_manifest") == 4 && names.count(_ == "_schema") == 4)
+    val crcs = names.filter(n => n.endsWith(".crc") &&
+      Seq("_manifest", "_schema", "_writer_lock", "_current").exists(n.contains))
+    assert(crcs.isEmpty, s"metadata .crc files: ${crcs.mkString(", ")}")
+    assert(dayRows(JointKpis.dailyTableManifested(spark, root)).map(_._3) == Set(99.0))
   }
 
   test("a concurrent reader during a commit loop never errors (VERDICT r05 #3)") {
